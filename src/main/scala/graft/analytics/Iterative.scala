@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.graph.PropertyGraph
+import graft.plans.Supersteps.escape
 import graft.model.{GraphColumns => GC}
 
 /** DataFrame-native iterative whole-graph analytics — the Tungsten twin
@@ -51,10 +52,42 @@ object Iterative {
     * [[mergeComponentsBatch]]. Every driver twin replays the operator's
     * declared arithmetic verbatim (same integer ops, same tie-breaks),
     * pinned by IterativeSpec laws against the distributed form. */
-  val DefaultSmallGraphRows: Long = 200000L // == DefaultSmallBatchEdges (a literal: that val initializes later in this object)
+  val DefaultSmallGraphRows: Long = 200000L
 
-  private def boundedRows(df: DataFrame, cap: Long) =
-    graft.plans.Supersteps.boundedRows(df, cap)
+  private def pairs(rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Union-find over `edges` under the MIN-REP rule — the smaller root
+    * wins every union, exactly the min-label fixpoint's representative
+    * choice. Returns `find`: a vertex's representative (itself when no
+    * edge touches it). */
+  private[graft] def minRepUnion(edges: Iterator[(Long, Long)]): Long => Long = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    find
+  }
+
+  /** Every endpoint of the `(a, b)` edge rows with its min-rep
+    * component representative, sorted by vertex. */
+  private[graft] def minRepComponents(
+      rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] = {
+    val edges = pairs(rows)
+    val find = minRepUnion(edges.iterator)
+    edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct.sorted
+      .map(v => (v, find(v)))
+  }
 
   /** Driver twin of [[minLabelLoop]]: exact min-label fixpoint by
     * worklist relaxation over the collected (bounded) edge and init
@@ -354,25 +387,8 @@ object Iterative {
   // per-step shuffle stages, not the job-launch floor, so halving the
   // action count while doubling per-action shuffles loses to the
   // coarser convergence granularity. One observed step per cut stands.)
-  private[analytics] def minLabelLoop(edges: DataFrame, init: DataFrame,
-      maxIter: Int,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    // SIZE-ADAPTIVE escape (see DefaultSmallGraphRows): a bounded graph
-    // resolves its fixpoint on the driver in exact arithmetic — the
-    // distributed superstep path below is the 100-TB shape, unchanged.
-    val small =
-      boundedRows(edges.select(col("_s"), col("_d")), smallGraphRows)
-        .flatMap { eRows =>
-          boundedRows(init.select(col("_v"), col("_lbl")), smallGraphRows)
-            .map { iRows =>
-              localPairs(edges.sparkSession,
-                minLabelDriver(
-                  eRows.map(r => (r.getLong(0), r.getLong(1))),
-                  iRows.map(r => (r.getLong(0), r.getLong(1)))),
-                "_v", "_lbl")
-            }
-        }
-    if (small.isDefined) return small.get
+  private[graft] def minLabelLoop(edges: DataFrame, init: DataFrame,
+      maxIter: Int): DataFrame = {
     var labels = init
     var iter = 0
     var done = false
@@ -414,17 +430,23 @@ object Iterative {
     labels
   }
 
+  /** [[minLabelLoop]] behind the size-adaptive escape (see
+    * DefaultSmallGraphRows): a bounded graph resolves its fixpoint with
+    * [[minLabelDriver]] in exact arithmetic. */
+  private def minLabels(edges: DataFrame, init: DataFrame, maxIter: Int,
+      smallGraphRows: Long): DataFrame =
+    escape(Seq(edges.select(col("_s"), col("_d")),
+        init.select(col("_v"), col("_lbl"))), smallGraphRows) {
+      case Seq(e, i) => localPairs(edges.sparkSession,
+        minLabelDriver(pairs(e), pairs(i)), "_v", "_lbl")
+    } { case (Seq(e, i), _) => minLabelLoop(e, i, maxIter) }
+
   def connectedComponents(g: PropertyGraph,
       edgeLabels: Set[String] = Set.empty, maxIter: Int = 30,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    // the escape collects the raw frames; only the distributed loop
-    // needs them checkpointed, and minLabelLoop's probe is a bounded
-    // LIMIT collect either way
-    val edges = packedEdges(g, edgeLabels, undirected = true).localCheckpoint()
     val touched = incidentLabels(g, edgeLabels)
-    var labels = minLabelLoop(edges,
-      packedVertices(g, touched)
-        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint(),
+    var labels = minLabels(packedEdges(g, edgeLabels, undirected = true),
+      packedVertices(g, touched).select(col("_v"), col("_v").as("_lbl")),
       maxIter, smallGraphRows)
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
@@ -450,7 +472,7 @@ object Iterative {
     * (endpoint -> its representative; unseen endpoints stand for
     * themselves), the representatives of the contracted graph are
     * resolved — SIZE-ADAPTIVELY: a driver union-find over one bounded
-    * collect under [[DefaultSmallBatchEdges]] contracted edges (the
+    * collect under [[DefaultSmallGraphRows]] contracted edges (the
     * min-rep rule, exactly the fixpoint's representative choice, in
     * milliseconds), the distributed min-label loop above it — and the
     * new representatives relabel the full state with one join. At
@@ -461,16 +483,9 @@ object Iterative {
     * by the threshold, never corpus-sized. Min of mins is the global
     * min, so merged components keep the invariant exactly; StreamsSpec
     * pins both paths to the same fixpoint. */
-  /** Contracted-batch size (edges) below which [[mergeComponentsBatch]]
-    * resolves representatives with a driver union-find over one bounded
-    * collect instead of the distributed min-label fixpoint: 200k edges
-    * ≈ 3 MB collected, resolved in milliseconds — vs ~5 serial
-    * distributed rounds at the per-action job floor. */
-  val DefaultSmallBatchEdges: Long = 200000L
-
   def mergeComponentsBatch(state: DataFrame, batch: DataFrame,
       maxIter: Int = 30,
-      smallBatchEdges: Long = DefaultSmallBatchEdges): DataFrame = {
+      smallBatchEdges: Long = DefaultSmallGraphRows): DataFrame = {
     val mappedPlan = batch
       .join(state.select(col("_v").as("_s"), col("_lbl").as("_sl")),
         Seq("_s"), "left")
@@ -481,56 +496,28 @@ object Iterative {
     // SIZE-ADAPTIVE merge of the contracted graph. Per-batch work is
     // batch-sized BY CONSTRUCTION (contracted nodes <= 2|batch|), so a
     // bounded batch — every streaming micro-batch, most incremental
-    // folds — resolves its representatives with a driver union-find
-    // over ONE bounded collect (min-rep semantics, exactly the
-    // minLabelLoop fixpoint) instead of ~5 serial distributed rounds
-    // at the per-action job floor; the bounded probe collects the
-    // contracted rows DIRECTLY (no intermediate checkpoint — r17: the
-    // per-batch checkpoint+collect pair was two serial actions where
-    // one suffices). Above the bound the distributed fixpoint runs as
-    // before — the 100-TB path is unchanged, and the collect is bounded
-    // by `smallBatchEdges`, never corpus-sized.
-    val (mapped, reps) =
-      graft.plans.Supersteps.boundedRows(mappedPlan, smallBatchEdges) match {
-        case Some(rows) =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) {
-              val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-            }
-            r
-          }
-          def union(a: Long, b: Long): Unit = {
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) {
-              // min-rep rule: the SMALLER label roots the tree, exactly
-              // the min-label fixpoint's representative choice
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          rows.foreach(r => union(r.getLong(0), r.getLong(1)))
-          val nodes = rows.iterator
-            .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-            .toArray.distinct.sorted
-          (None, localPairs(batch.sparkSession,
-            nodes.map(v => (v, find(v))), "_v", "_lbl"))
-        case None =>
-          val mappedCk = mappedPlan.localCheckpoint()
-          // nodes/doubled stay LAZY over the checkpointed rows: each
-          // re-evaluation is one narrow map over persisted blocks,
-          // cheaper than the eager checkpoint actions they'd otherwise
-          // cost (the per-action job floor dominates this fold locally)
-          val nodes = mappedCk.select(col("_s").as("_v"))
-            .unionByName(mappedCk.select(col("_d").as("_v")))
-            .dropDuplicates("_v")
-          val doubled = mappedCk.unionByName(
-            mappedCk.select(col("_d").as("_s"), col("_s").as("_d")))
-          (Some(mappedCk), minLabelLoop(doubled,
-            nodes.select(col("_v"), col("_v").as("_lbl")), maxIter))
-      }
+    // folds — resolves its representatives with the min-rep union-find
+    // (exactly the minLabelLoop fixpoint) instead of ~5 serial
+    // distributed rounds at the per-action job floor. Above the bound
+    // the distributed fixpoint runs over the contracted batch's
+    // checkpoint.
+    val (mapped, reps) = escape(Seq(mappedPlan), smallBatchEdges) {
+      case Seq(rows) => (Option.empty[DataFrame],
+        localPairs(batch.sparkSession, minRepComponents(rows),
+          "_v", "_lbl"))
+    } { case (Seq(mappedCk), _) =>
+      // nodes/doubled stay LAZY over the checkpointed rows: each
+      // re-evaluation is one narrow map over persisted blocks,
+      // cheaper than the eager checkpoint actions they'd otherwise
+      // cost (the per-action job floor dominates this fold locally)
+      val nodes = mappedCk.select(col("_s").as("_v"))
+        .unionByName(mappedCk.select(col("_d").as("_v")))
+        .dropDuplicates("_v")
+      val doubled = mappedCk.unionByName(
+        mappedCk.select(col("_d").as("_s"), col("_s").as("_d")))
+      (Some(mappedCk), minLabelLoop(doubled,
+        nodes.select(col("_v"), col("_v").as("_lbl")), maxIter))
+    }
     // grow the state by the batch's brand-new vertices (they entered
     // the contracted graph as themselves), then relabel every vertex
     // whose representative was re-assigned
@@ -567,77 +554,48 @@ object Iterative {
       maxIter: Int = 30,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): when the seed set
-    // and EVERY batch are bounded, the same per-batch fold — contract
-    // endpoints through the current state, resolve representatives by
-    // the min-rep rule, grow by brand-new vertices, relabel — runs on
-    // driver maps, batch by batch in arrival order, preserving the
-    // min-representative invariant exactly as [[mergeComponentsBatch]]
-    // does (StreamsSpec pins the streaming twin to the same fixpoint).
-    // Above the cap the distributed fold below is unchanged.
-    val smallAll = for {
-      v <- boundedRows(vertices
-        .select(col(vertices.columns.head).cast("bigint").as("_v")),
-        smallGraphRows)
-      bs <- batches.foldLeft(
-        Option(Seq.empty[Array[org.apache.spark.sql.Row]])) { (acc, b) =>
-        acc.flatMap { seqs =>
-          val cols = b.columns
-          boundedRows(b.select(col(cols(0)).cast("bigint").as("_s"),
-            col(cols(1)).cast("bigint").as("_d")), smallGraphRows)
-            .map(seqs :+ _)
-        }
+    // and all batches TOGETHER are bounded, the same per-batch fold —
+    // contract endpoints through the current state, resolve
+    // representatives by the min-rep rule, grow by brand-new vertices,
+    // relabel — runs on driver maps, batch by batch in arrival order,
+    // preserving the min-representative invariant exactly as
+    // [[mergeComponentsBatch]] does (StreamsSpec pins the streaming twin
+    // to the same fixpoint). Above the cap the distributed fold runs.
+    val inputs =
+      vertices.select(col(vertices.columns.head).cast("bigint").as("_v")) +:
+      batches.map { b =>
+        val cols = b.columns
+        b.select(col(cols(0)).cast("bigint").as("_s"),
+          col(cols(1)).cast("bigint").as("_d"))
       }
-    } yield {
+    escape(inputs, smallGraphRows) { rows =>
       val state = scala.collection.mutable.LongMap.empty[Long]
-      v.foreach(r => state(r.getLong(0)) = r.getLong(0))
-      bs.foreach { batch =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        batch.foreach { r =>
-          val (s, d) = (r.getLong(0), r.getLong(1))
-          // contract through the current state (unseen endpoints stand
-          // for themselves), then union under the min-rep rule
-          val (cs, cd) = (state.getOrElse(s, s), state.getOrElse(d, d))
-          val (ra, rb) = (find(cs), find(cd))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
+      rows.head.foreach(r => state(r.getLong(0)) = r.getLong(0))
+      rows.tail.map(pairs).foreach { batch =>
+        // contract through the current state (unseen endpoints stand
+        // for themselves), then union under the min-rep rule
+        val find = minRepUnion(batch.iterator.map { case (s, d) =>
+          (state.getOrElse(s, s), state.getOrElse(d, d)) })
         // grow by the batch's brand-new vertices, then relabel through
         // the resolved representatives (identity for untouched labels)
-        batch.foreach { r =>
-          Seq(r.getLong(0), r.getLong(1)).foreach { x =>
-            if (!state.contains(x)) state(x) = x
-          }
+        batch.foreach { case (s, d) =>
+          Seq(s, d).foreach(x => if (!state.contains(x)) state(x) = x)
         }
         val relabeled = state.toArray.map { case (vv, l) => (vv, find(l)) }
         relabeled.foreach { case (vv, l) => state(vv) = l }
       }
       localPairs(vertices.sparkSession,
         state.toArray.sortBy(_._1), "id", "component")
+    } { case (v +: bs, _) =>
+      val state0 = v.dropDuplicates("_v")
+        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
+      bs.foldLeft(state0) { (st, b) =>
+        val merged = mergeComponentsBatch(st, b)
+        // st is superseded the moment the merge's cut materializes
+        graft.plans.Supersteps.release(st)
+        merged
+      }.select(col("_v").as("id"), col("_lbl").as("component"))
     }
-    smallAll match {
-      case Some(res) => return res
-      case None =>
-    }
-    val state0 = vertices.select(col(vertices.columns.head).cast("bigint").as("_v"))
-      .dropDuplicates("_v")
-      .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
-    batches.foldLeft(state0) { (st, b) =>
-      val cols = b.columns
-      val merged = mergeComponentsBatch(st,
-        b.select(col(cols(0)).cast("bigint").as("_s"),
-          col(cols(1)).cast("bigint").as("_d")))
-      // st is superseded the moment the merge's cut materializes
-      graft.plans.Supersteps.release(st)
-      merged
-    }.select(col("_v").as("id"), col("_lbl").as("component"))
   }
 
   /** k-core decomposition (bounded peel): iteratively drop vertices
@@ -657,66 +615,51 @@ object Iterative {
       edgeLabels: Set[String] = Set.empty, maxRounds: Int = 20,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
-    val edgesRaw = packedEdges(g, edgeLabels, undirected = true)
-    val vertsRaw = packedVertices(g, incidentLabels(g, edgeLabels))
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): the bounded peel
     // replays on the driver — same survival rule, budget, early exit.
-    val small = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield localPairs(vertsRaw.sparkSession,
-      kCoreDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), k, maxRounds), "_v", "_deg")
-    small match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_deg").as("degree"))
-      case None =>
-    }
-    val edges = edgesRaw.localCheckpoint()
-    val obs0 = new org.apache.spark.sql.Observation(
-      s"kcore_init_${obsTag.incrementAndGet()}")
-    var surv = vertsRaw
-      .observe(obs0, count(lit(1)).as("n"))
-      .localCheckpoint()
-    // one action per round: the observed checkpoint (the e29 lesson) —
-    // the previous round's size rides in a driver var, never re-counted
-    // (the seed count rides the seed checkpoint the same way)
-    var size = obs0.get("n").asInstanceOf[Long]
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
+    escape(Seq(packedEdges(g, edgeLabels, undirected = true),
+        packedVertices(g, incidentLabels(g, edgeLabels))), smallGraphRows) {
+      case Seq(e, v) => localPairs(g.spark,
+        kCoreDriver(pairs(e), v.map(_.getLong(0)), k, maxRounds), "_v", "_deg")
+    } { case (Seq(edges, seed), Seq(_, seedSize)) =>
+      var surv = seed
+      // one action per round: the observed checkpoint (the e29 lesson) —
+      // the previous round's size rides in a driver var, never re-counted
+      // (the seed count rides the seed checkpoint the same way)
+      var size = seedSize
+      var round = 0
+      var done = false
+      while (!done && round < maxRounds) {
+        val live = edges
+          .join(surv.select(col("_v").as("_sv")), col("_s") === col("_sv"), "left_semi")
+          .join(surv.select(col("_v").as("_dv")), col("_d") === col("_dv"), "left_semi")
+        val deg = live.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
+        val obs = new org.apache.spark.sql.Observation(s"kcore_r$round")
+        // loop-carried: surv is referenced 3x per round — cut stats;
+        // the superseded round's blocks are released once the new cut is
+        // live — but never the seed, which may be the caller's checkpoint
+        val next = graft.plans.Supersteps.cut(
+          surv.join(deg, surv("_v") === deg("_s"), "left")
+            .where(coalesce(col("_deg"), lit(0L)) >= k)
+            .select(col("_v"))
+            .observe(obs, count(lit(1)).as("n")),
+          superseded = if (surv eq seed) Nil else Seq(surv))
+        val after = obs.get("n").asInstanceOf[Long]
+        done = after == size
+        size = after
+        surv = next
+        round += 1
+      }
       val live = edges
         .join(surv.select(col("_v").as("_sv")), col("_s") === col("_sv"), "left_semi")
         .join(surv.select(col("_v").as("_dv")), col("_d") === col("_dv"), "left_semi")
-      val deg = live.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      val obs = new org.apache.spark.sql.Observation(s"kcore_r$round")
-      // loop-carried: surv is referenced 3x per round — cut stats;
-      // the superseded round's blocks (loop-owned since the seed is our
-      // own checkpoint) are released once the new cut is live
-      val next = graft.plans.Supersteps.cut(
-        surv.join(deg, surv("_v") === deg("_s"), "left")
-          .where(coalesce(col("_deg"), lit(0L)) >= k)
-          .select(col("_v"))
-          .observe(obs, count(lit(1)).as("n")),
-        superseded = Seq(surv))
-      val after = obs.get("n").asInstanceOf[Long]
-      done = after == size
-      size = after
-      surv = next
-      round += 1
-    }
-    val live = edges
-      .join(surv.select(col("_v").as("_sv")), col("_s") === col("_sv"), "left_semi")
-      .join(surv.select(col("_v").as("_dv")), col("_d") === col("_dv"), "left_semi")
-    val deg = live.groupBy(col("_s").as("_v")).agg(count(lit(1)).as("_deg"))
-    surv.join(deg, Seq("_v"), "left")
-      .select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        coalesce(col("_deg"), lit(0L)).as("degree"))
+      val deg = live.groupBy(col("_s").as("_v")).agg(count(lit(1)).as("_deg"))
+      surv.join(deg, Seq("_v"), "left")
+        .select(col("_v"), coalesce(col("_deg"), lit(0L)).as("_deg"))
+    }.select(
+      unpackLabelStr(g, col("_v")).as("label"),
+      unpackKey(col("_v")).as(GC.Id),
+      col("_deg").as("degree"))
   }
 
   /** Synchronous label propagation (TinkerPop `peerPressure()`, the
@@ -733,47 +676,30 @@ object Iterative {
       edgeLabels: Set[String] = Set.empty,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     require(iters >= 1, s"labelPropagation needs iters >= 1, got $iters")
-    val edgesRaw = packedEdges(g, edgeLabels, undirected = true)
     val touched = incidentLabels(g, edgeLabels)
-    val vertsRaw = packedVertices(g, touched)
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): the synchronous
     // rounds replay on the driver — same frequency rule and tie order.
-    val small = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield localPairs(vertsRaw.sparkSession,
-      lpaDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters), "_v", "_lbl")
-    small match {
-      case Some(res) =>
-        var out = res
-        val untouchedS = g.vertexLabels.toSet -- touched
-        if (untouchedS.nonEmpty)
-          out = out.unionByName(packedVertices(g, untouchedS)
-            .select(col("_v"), col("_v").as("_lbl")))
-        return out.select(
-          unpackLabelStr(g, col("_v")).as("label"),
-          unpackKey(col("_v")).as(GC.Id),
-          unpackLabelStr(g, col("_lbl")).as("community_label"),
-          unpackKey(col("_lbl")).as("community_id"))
-      case None =>
-    }
-    val edges = edgesRaw.localCheckpoint()
-    var labels = vertsRaw
-      .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val freq = edges.join(labels, edges("_d") === labels("_v"))
-        .groupBy(col("_s"), col("_lbl")).agg(count(lit(1)).as("_n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_s")).orderBy(desc("_n"), asc("_lbl"))
-      val best = freq.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .select(col("_s").as("_bv"), col("_lbl").as("_nl"))
-      labels = graft.plans.Supersteps.cut( // loop-carried: cut stats
-        labels.join(best, labels("_v") === col("_bv"), "left")
-          .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl")),
-        superseded = Seq(labels)) // seed is loop-owned — releasable
+    var labels = escape(Seq(packedEdges(g, edgeLabels, undirected = true),
+        packedVertices(g, touched).select(col("_v"), col("_v").as("_lbl"))),
+        smallGraphRows) {
+      case Seq(e, v) => localPairs(g.spark,
+        lpaDriver(pairs(e), v.map(_.getLong(0)), iters), "_v", "_lbl")
+    } { case (Seq(edges, seed), _) =>
+      var labels = seed
+      for (_ <- 1 to iters) {
+        val freq = edges.join(labels, edges("_d") === labels("_v"))
+          .groupBy(col("_s"), col("_lbl")).agg(count(lit(1)).as("_n"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("_s")).orderBy(desc("_n"), asc("_lbl"))
+        val best = freq.withColumn("_rn", row_number().over(w))
+          .where(col("_rn") === 1)
+          .select(col("_s").as("_bv"), col("_lbl").as("_nl"))
+        labels = graft.plans.Supersteps.cut( // loop-carried: cut stats
+          labels.join(best, labels("_v") === col("_bv"), "left")
+            .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl")),
+          superseded = if (labels eq seed) Nil else Seq(labels))
+      }
+      labels
     }
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
@@ -918,10 +844,7 @@ object Iterative {
       scale: Long = 1000000000000L,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     require(iters >= 1, s"pageRankFixedPoint needs iters >= 1, got $iters")
-    val edges = packedEdges(g, edgeLabels, undirected = false)
     val touched = incidentLabels(g, edgeLabels)
-    val verts = packedVertices(g, touched).localCheckpoint()
-    val nVerts = verts.count()
     // ADAPTIVE headroom instead of a hard failure: the round-1 worst
     // case (every rank summed into one vertex) must fit a long, so the
     // working scale shrinks by powers of 10 until
@@ -931,34 +854,36 @@ object Iterative {
     // fixed-point precision for completing — the round-10 scale tier
     // found the old hard `require` had been failing q50 at 8x since
     // the tier existed, with the failure TIME recorded as a datapoint.
-    var workScale = scale
-    while (workScale > 0 &&
-        BigInt(nVerts) * workScale * 85 >= BigInt(Long.MaxValue))
-      workScale /= 10
-    require(workScale > 0,
-      s"fixed-point overflow: n=$nVerts leaves no usable scale")
-    if (workScale != scale) {
-      // rank_fp's unit just changed — say so (advisor, round 10), and
-      // record it on the graph so downstream readers can normalize
-      System.err.println(s"[graft] pageRankFixedPoint: n=$nVerts shrinks " +
-        s"the working scale $scale -> $workScale; rank_fp is in units " +
-        s"of 1/$workScale")
-      g.variables.set("graft.pagerank.work_scale", workScale.toString)
+    def workScaleFor(nVerts: Long): Long = {
+      var workScale = scale
+      while (workScale > 0 &&
+          BigInt(nVerts) * workScale * 85 >= BigInt(Long.MaxValue))
+        workScale /= 10
+      require(workScale > 0,
+        s"fixed-point overflow: n=$nVerts leaves no usable scale")
+      if (workScale != scale) {
+        // rank_fp's unit just changed — say so (advisor, round 10), and
+        // record it on the graph so downstream readers can normalize
+        System.err.println(s"[graft] pageRankFixedPoint: n=$nVerts shrinks " +
+          s"the working scale $scale -> $workScale; rank_fp is in units " +
+          s"of 1/$workScale")
+        g.variables.set("graft.pagerank.work_scale", workScale.toString)
+      }
+      workScale
     }
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): a bounded graph
     // replays the integer recurrence on the driver — exact Long sums
     // commute, so the result is bit-identical to the superstep loop.
-    val small = for {
-      e <- boundedRows(edges.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(verts.select(col("_v")), smallGraphRows)
-    } yield localPairs(verts.sparkSession,
-      fixedPointPowerDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters,
-        init = _ => workScale,
-        reset = _ => (15L * workScale) / 100L),
-      "_v", "_r")
-    var ranks = small.getOrElse {
+    val (ranks, workScale) = escape(Seq(
+        packedEdges(g, edgeLabels, undirected = false),
+        packedVertices(g, touched)), smallGraphRows) {
+      case Seq(e, v) =>
+        val ws = workScaleFor(v.length)
+        (localPairs(g.spark, fixedPointPowerDriver(pairs(e),
+          v.map(_.getLong(0)), iters,
+          init = _ => ws, reset = _ => (15L * ws) / 100L), "_v", "_r"), ws)
+    } { case (Seq(edges, verts), Seq(_, nVerts)) =>
+      val workScale = workScaleFor(nVerts)
       val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
       val degreed = edges.join(outDeg, "_s").localCheckpoint()
       var rk = verts.withColumn("_r", lit(workScale))
@@ -974,16 +899,16 @@ object Iterative {
                 + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
           superseded = if (rk eq init) Nil else Seq(rk))
       }
-      rk
+      (rk, workScale)
     }
     val untouched = g.vertexLabels.toSet -- touched
-    if (untouched.nonEmpty)
-      ranks = ranks.unionByName(packedVertices(g, untouched)
-        .withColumn("_r", expr(s"(15 * ${workScale}L) div 100")))
-    ranks.select(
-      unpackLabelStr(g, col("_v")).as("label"),
-      unpackKey(col("_v")).as(GC.Id),
-      col("_r").as("rank_fp"))
+    (if (untouched.isEmpty) ranks else ranks.unionByName(
+        packedVertices(g, untouched)
+          .withColumn("_r", expr(s"(15 * ${workScale}L) div 100"))))
+      .select(
+        unpackLabelStr(g, col("_v")).as("label"),
+        unpackKey(col("_v")).as(GC.Id),
+        col("_r").as("rank_fp"))
   }
 
   /** Personalized PageRank under the [[pageRankFixedPoint]] discipline:
@@ -1004,30 +929,27 @@ object Iterative {
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     require(iters >= 1, s"personalizedPageRank needs iters >= 1, got $iters")
     require(seedIds.nonEmpty, "personalizedPageRank needs at least one seed")
-    val edges = packedEdges(g, edgeLabels, undirected = false)
-    val touched = incidentLabels(g, edgeLabels)
-    val verts = packedVertices(g, touched).localCheckpoint()
-    val nVerts = verts.count()
-    require(BigInt(nVerts) * scale * 85 < BigInt(Long.MaxValue),
-      s"fixed-point overflow: n=$nVerts scale=$scale")
     val seedSet = seedIds.map(graft.analytics.GraphXBridge.pack(
       g.labelIds(seedLabel), _))
-    val resetPerSeed = 15L * scale / 100L * nVerts / seedIds.size
-    val reset = when(col("_v").isin(seedSet: _*), lit(resetPerSeed))
-      .otherwise(lit(0L))
+    def resetPerSeed(nVerts: Long): Long = {
+      require(BigInt(nVerts) * scale * 85 < BigInt(Long.MaxValue),
+        s"fixed-point overflow: n=$nVerts scale=$scale")
+      15L * scale / 100L * nVerts / seedIds.size
+    }
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): same integer
     // recurrence replayed on the driver — init IS the reset vector here.
-    val seedLongs = seedSet.toSet
-    val resetFn = (v: Long) => if (seedLongs.contains(v)) resetPerSeed else 0L
-    val small = for {
-      e <- boundedRows(edges.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(verts.select(col("_v")), smallGraphRows)
-    } yield localPairs(verts.sparkSession,
-      fixedPointPowerDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters, init = resetFn, reset = resetFn),
-      "_v", "_r")
-    val ranks = small.getOrElse {
+    escape(Seq(packedEdges(g, edgeLabels, undirected = false),
+        packedVertices(g, incidentLabels(g, edgeLabels))), smallGraphRows) {
+      case Seq(e, v) =>
+        val perSeed = resetPerSeed(v.length)
+        val seedLongs = seedSet.toSet
+        val resetFn = (x: Long) => if (seedLongs.contains(x)) perSeed else 0L
+        localPairs(g.spark, fixedPointPowerDriver(pairs(e),
+          v.map(_.getLong(0)), iters, init = resetFn, reset = resetFn),
+          "_v", "_r")
+    } { case (Seq(edges, verts), Seq(_, nVerts)) =>
+      val reset = when(col("_v").isin(seedSet: _*), lit(resetPerSeed(nVerts)))
+        .otherwise(lit(0L))
       val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
       val degreed = edges.join(outDeg, "_s").localCheckpoint()
       var rk = verts.withColumn("_r", reset)
@@ -1043,8 +965,7 @@ object Iterative {
           superseded = if (rk eq init) Nil else Seq(rk))
       }
       rk
-    }
-    ranks.select(
+    }.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
       col("_r").as("rank_fp"))
@@ -1072,68 +993,52 @@ object Iterative {
       scale: Long = 1000000L,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
     require(iters >= 1, s"hitsFixedPoint needs iters >= 1, got $iters")
-    val edgesRaw = packedEdges(g, edgeLabels, undirected = false)
-    val touched = incidentLabels(g, edgeLabels)
-    val vertsRaw = packedVertices(g, touched)
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): exact Long gathers
-    // and renormalizations replayed on the driver.
-    val smallHits = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield {
-      val b = math.max(e.length.toLong, v.length.toLong)
-      require(BigInt(b) * scale * scale < BigInt(Long.MaxValue),
-        s"fixed-point overflow: bound=$b scale=$scale")
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      vertsRaw.sparkSession.createDataFrame(
-        java.util.Arrays.asList(
-          hitsDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-            v.map(_.getLong(0)), iters, scale)
-            .map(t => org.apache.spark.sql.Row(t._1, t._2, t._3)): _*),
-        StructType(Seq(StructField("_v", LongType, nullable = false),
-          StructField("_h", LongType, nullable = false),
-          StructField("_a", LongType, nullable = false))))
-    }
-    smallHits match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_h").as("hub_fp"),
-        col("_a").as("auth_fp"))
-      case None =>
-    }
-    val edges = edgesRaw.localCheckpoint()
-    val verts = vertsRaw.localCheckpoint()
-    val bound = math.max(edges.count(), verts.count())
     // round-1 worst case: an unnormalized raw sum (<= bound * scale)
     // times the renormalization factor `scale` must stay in a long
-    require(BigInt(bound) * scale * scale < BigInt(Long.MaxValue),
-      s"fixed-point overflow: bound=$bound scale=$scale")
-    def renorm(raw: DataFrame): DataFrame = {
-      // raw: (_v, _raw) >= 0; rescale so the scores sum to ~scale
-      val tot = raw.agg(greatest(sum(col("_raw")), lit(1L)).as("_t"))
-      raw.crossJoin(broadcast(tot))
-        .select(col("_v"), expr(s"_raw * ${scale}L div _t").as("_x"))
-    }
-    def gather(scores: DataFrame, scoreCol: String, from: Column, to: Column): DataFrame =
-      verts.join(
-        edges.join(scores, from === scores("_v"))
-          .groupBy(to.as("_g")).agg(sum(col(scoreCol)).as("_m")),
-        verts("_v") === col("_g"), "left")
-        .select(verts("_v"), coalesce(col("_m"), lit(0L)).as("_raw"))
-    var scores = verts.select(col("_v"), lit(scale).as("_h"), lit(scale).as("_a"))
-    val init = scores // round-1 state sits on `verts` — never release it
-    for (_ <- 1 to iters) {
-      val auth = renorm(gather(scores.select(col("_v"), col("_h")), "_h",
-        edges("_s"), edges("_d"))).withColumnRenamed("_x", "_a")
-      val hub = renorm(gather(auth, "_a", edges("_d"), edges("_s")))
-        .withColumnRenamed("_x", "_h")
-      scores = graft.plans.Supersteps.cut(
-        hub.join(auth, "_v").select(col("_v"), col("_h"), col("_a")),
-        superseded = if (scores eq init) Nil else Seq(scores))
-    }
-    scores.select(
+    def checkBound(bound: Long): Unit =
+      require(BigInt(bound) * scale * scale < BigInt(Long.MaxValue),
+        s"fixed-point overflow: bound=$bound scale=$scale")
+    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): exact Long gathers
+    // and renormalizations replayed on the driver.
+    escape(Seq(packedEdges(g, edgeLabels, undirected = false),
+        packedVertices(g, incidentLabels(g, edgeLabels))), smallGraphRows) {
+      case Seq(e, v) =>
+        checkBound(math.max(e.length.toLong, v.length.toLong))
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        g.spark.createDataFrame(
+          java.util.Arrays.asList(
+            hitsDriver(pairs(e), v.map(_.getLong(0)), iters, scale)
+              .map(t => org.apache.spark.sql.Row(t._1, t._2, t._3)): _*),
+          StructType(Seq(StructField("_v", LongType, nullable = false),
+            StructField("_h", LongType, nullable = false),
+            StructField("_a", LongType, nullable = false))))
+    } { case (Seq(edges, verts), Seq(nEdges, nVerts)) =>
+      checkBound(math.max(nEdges, nVerts))
+      def renorm(raw: DataFrame): DataFrame = {
+        // raw: (_v, _raw) >= 0; rescale so the scores sum to ~scale
+        val tot = raw.agg(greatest(sum(col("_raw")), lit(1L)).as("_t"))
+        raw.crossJoin(broadcast(tot))
+          .select(col("_v"), expr(s"_raw * ${scale}L div _t").as("_x"))
+      }
+      def gather(scores: DataFrame, scoreCol: String, from: Column, to: Column): DataFrame =
+        verts.join(
+          edges.join(scores, from === scores("_v"))
+            .groupBy(to.as("_g")).agg(sum(col(scoreCol)).as("_m")),
+          verts("_v") === col("_g"), "left")
+          .select(verts("_v"), coalesce(col("_m"), lit(0L)).as("_raw"))
+      var scores = verts.select(col("_v"), lit(scale).as("_h"), lit(scale).as("_a"))
+      val init = scores // round-1 state sits on `verts` — never release it
+      for (_ <- 1 to iters) {
+        val auth = renorm(gather(scores.select(col("_v"), col("_h")), "_h",
+          edges("_s"), edges("_d"))).withColumnRenamed("_x", "_a")
+        val hub = renorm(gather(auth, "_a", edges("_d"), edges("_s")))
+          .withColumnRenamed("_x", "_h")
+        scores = graft.plans.Supersteps.cut(
+          hub.join(auth, "_v").select(col("_v"), col("_h"), col("_a")),
+          superseded = if (scores eq init) Nil else Seq(scores))
+      }
+      scores
+    }.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
       col("_h").as("hub_fp"),
@@ -1212,9 +1117,9 @@ object Iterative {
       // The q54-family cost is almost entirely this serial action
       // floor, so the overlap is worth a ~2x on the whole peel.)
       val fwdF = scala.concurrent.Future(
-        minLabelLoop(edges, init, maxIter, smallGraphRows))(
+        minLabels(edges, init, maxIter, smallGraphRows))(
         scala.concurrent.ExecutionContext.global)
-      val bwd = minLabelLoop(
+      val bwd = minLabels(
         edges.select(col("_d").as("_s"), col("_s").as("_d")), init, maxIter,
         smallGraphRows)
         .select(col("_v").as("_bv"), col("_lbl").as("_bl"))
@@ -1524,79 +1429,66 @@ object Iterative {
   def maximalIndependentSet(g: PropertyGraph,
       edgeLabels: Set[String] = Set.empty, maxRounds: Int = 15,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    val edgesRaw = packedEdges(g, edgeLabels, undirected = true).distinct()
-    val touched = incidentLabels(g, edgeLabels)
-    val vertsRaw = packedVertices(g, touched)
     // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): Luby rounds with the
     // identical md5 priorities replayed on the driver; a blown round
     // budget throws the same contract error as the distributed peel.
-    val smallMis = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield {
-      val got = misDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), maxRounds)
-      require(got.isDefined,
-        s"MIS did not converge in $maxRounds rounds (driver peel)")
-      import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-      vertsRaw.sparkSession.createDataFrame(
-        java.util.Arrays.asList(got.get.map(t =>
-          org.apache.spark.sql.Row(t._1, t._2)): _*),
-        StructType(Seq(StructField("_v", LongType, nullable = false),
-          StructField("_round", IntegerType, nullable = false))))
-    }
-    smallMis match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_round").as("mis_round"))
-      case None =>
-    }
-    var edges = edgesRaw.localCheckpoint()
-    var active = vertsRaw.localCheckpoint()
-    var nActive = active.count()
-    val mis = Seq.newBuilder[DataFrame]
-    var round = 0
-    while (nActive > 0 && round < maxRounds) {
-      round += 1
-      def pri(v: Column): Column =
-        conv(substring(md5(concat_ws(":", lit(round), v)), 1, 15), 16, 10)
-          .cast("long")
-      val ps = pri(col("_s"))
-      val pd = pri(col("_d"))
-      // _s loses when some neighbor _d beats it under (priority, id)
-      val losers = edges
-        .where(pd < ps || (pd === ps && col("_d") < col("_s")))
-        .select(col("_s").as("_lv")).distinct()
-      val win = active.join(losers, col("_v") === col("_lv"), "left_anti")
-        .localCheckpoint()
-      mis += win.withColumn("_round", lit(round))
-      val removed = win
-        .unionByName(edges
-          .join(win.select(col("_v").as("_wv")), col("_s") === col("_wv"),
-            "left_semi")
-          .select(col("_d").as("_v")))
-        .distinct().localCheckpoint()
-      active = active.join(removed.select(col("_v").as("_rv")),
-        col("_v") === col("_rv"), "left_anti").localCheckpoint()
-      nActive = active.count()
-      if (nActive > 0)
-        edges = edges
-          .join(active, edges("_s") === active("_v"), "left_semi")
-          .join(active, col("_d") === active("_v"), "left_semi")
+    escape(Seq(packedEdges(g, edgeLabels, undirected = true).distinct(),
+        packedVertices(g, incidentLabels(g, edgeLabels))), smallGraphRows) {
+      case Seq(e, v) =>
+        val got = misDriver(pairs(e), v.map(_.getLong(0)), maxRounds)
+        require(got.isDefined,
+          s"MIS did not converge in $maxRounds rounds (driver peel)")
+        import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+        g.spark.createDataFrame(
+          java.util.Arrays.asList(got.get.map(t =>
+            org.apache.spark.sql.Row(t._1, t._2)): _*),
+          StructType(Seq(StructField("_v", LongType, nullable = false),
+            StructField("_round", IntegerType, nullable = false))))
+    } { case (Seq(edges0, active0), Seq(_, nActive0)) =>
+      var edges = edges0
+      var active = active0
+      var nActive = nActive0
+      val mis = Seq.newBuilder[DataFrame]
+      var round = 0
+      while (nActive > 0 && round < maxRounds) {
+        round += 1
+        def pri(v: Column): Column =
+          conv(substring(md5(concat_ws(":", lit(round), v)), 1, 15), 16, 10)
+            .cast("long")
+        val ps = pri(col("_s"))
+        val pd = pri(col("_d"))
+        // _s loses when some neighbor _d beats it under (priority, id)
+        val losers = edges
+          .where(pd < ps || (pd === ps && col("_d") < col("_s")))
+          .select(col("_s").as("_lv")).distinct()
+        val win = active.join(losers, col("_v") === col("_lv"), "left_anti")
           .localCheckpoint()
-    }
-    require(nActive == 0,
-      s"MIS did not converge in $maxRounds rounds ($nActive vertices left)")
-    // empty vertex set -> no rounds ran; emit the (empty) schema
-    mis.result()
-      .reduceOption(_.unionByName(_))
-      .getOrElse(active.withColumn("_round", lit(0)))
-      .select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_round").as("mis_round"))
+        mis += win.withColumn("_round", lit(round))
+        val removed = win
+          .unionByName(edges
+            .join(win.select(col("_v").as("_wv")), col("_s") === col("_wv"),
+              "left_semi")
+            .select(col("_d").as("_v")))
+          .distinct().localCheckpoint()
+        active = active.join(removed.select(col("_v").as("_rv")),
+          col("_v") === col("_rv"), "left_anti").localCheckpoint()
+        nActive = active.count()
+        if (nActive > 0)
+          edges = edges
+            .join(active, edges("_s") === active("_v"), "left_semi")
+            .join(active, col("_d") === active("_v"), "left_semi")
+            .localCheckpoint()
+      }
+      require(nActive == 0,
+        s"MIS did not converge in $maxRounds rounds ($nActive vertices left)")
+      // empty vertex set -> no rounds ran; emit the (empty) schema
+      mis.result()
+        .reduceOption(_.unionByName(_))
+        .getOrElse(active.withColumn("_round", lit(0)))
+    }.select(
+      unpackLabelStr(g, col("_v")).as("label"),
+      unpackKey(col("_v")).as(GC.Id),
+      col("_round").as("mis_round"))
   }
 
   /** Second-order (node2vec) DETERMINISTIC walks — Grover & Leskovec

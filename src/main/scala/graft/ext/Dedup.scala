@@ -390,91 +390,48 @@ object Dedup {
     * standard resolution (dedup keeps ONE doc per chain A~B~C even when
     * A!~C directly).
     *
-    * Implementation: iterative min-label propagation over the
-    * undirected pair graph (each round: label = min(own, neighbors');
-    * one shuffle per round, `localCheckpoint` keeps lineage flat),
-    * converging in at most graph-diameter rounds — dedup components are
-    * short chains in practice. The convergence test rides the SAME
-    * materialization: a `changed` count is observed via
-    * [[org.apache.spark.sql.Observation]] during the checkpoint job, so
-    * each round costs exactly ONE driver-blocking action (round 3 ran a
-    * second `isEmpty` join per round, which doubled the serial driver
-    * chain and magnified load noise). For adversarially deep components
-    * run [[graft.analytics.GraphXBridge]] connected components instead
+    * Implementation: the pair graph's components resolve behind the
+    * fixpoint family's size-adaptive escape
+    * ([[graft.plans.Supersteps.escape]]). Near-dup pair sets are sparse
+    * by construction (banded LSH candidates), so a bounded pair set
+    * resolves with one driver union-find (min-rep rule — exactly the
+    * min-label fixpoint's representative) and ONE corpus join attaches
+    * keep_id; docs outside any pair keep themselves via the left-join
+    * coalesce. Above the cap the doubled pair edges run
+    * [[graft.analytics.Iterative.minLabelLoop]] from every doc's own
+    * label: one observed checkpoint action per round, pointer jumping
+    * (O(log diameter) rounds), and it converges or throws — never a
+    * silently capped `maxIter`. For adversarially deep components run
+    * [[graft.analytics.GraphXBridge]] connected components instead
     * (Pregel halves rounds via large-star/small-star style hops). */
   def dedupClusters(docs: DataFrame, maxIter: Int = 20,
       maxBucket: Long = graft.operators.Skew.DefaultBucketCap,
       smallGraphRows: Long =
         graft.analytics.Iterative.DefaultSmallGraphRows): DataFrame = {
     val pairs = minhashCandidatePairs(docs, maxBucket)
-    // SIZE-ADAPTIVE escape (graft.analytics.Iterative.DefaultSmallGraphRows
-    // — the mergeComponentsBatch union-find discipline): near-dup pair
-    // sets are sparse by construction (banded LSH candidates), so a
-    // bounded pair set resolves its transitive components with one
-    // driver union-find (min-rep rule — exactly the min-label fixpoint's
-    // representative) and ONE corpus join attaches keep_id; docs outside
-    // any pair keep themselves via the left-join coalesce, exactly the
-    // fixpoint's untouched-label behavior. Above the cap the superstep
-    // loop below runs unchanged (the 100-TB shape).
-    graft.plans.Supersteps.boundedRows(
-        pairs.select(col("doc_a"), col("doc_b")),
-        smallGraphRows) match {
-      case Some(rows) =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        rows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val members = rows.iterator
-          .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-          .toArray.distinct.sorted
+      .select(col("doc_a"), col("doc_b"))
+    graft.plans.Supersteps.escape(Seq(pairs), smallGraphRows) {
+      case Seq(rows) =>
         import org.apache.spark.sql.types.{LongType, StructField, StructType}
         val comps = docs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(members.map(v =>
-            org.apache.spark.sql.Row(v, find(v))): _*),
+          java.util.Arrays.asList(graft.analytics.Iterative
+            .minRepComponents(rows).map { case (v, k) =>
+              org.apache.spark.sql.Row(v, k) }: _*),
           StructType(Seq(StructField("doc_id", LongType, nullable = false),
             StructField("_keep", LongType, nullable = false))))
-        return docs.select(col("doc_id"))
+        docs.select(col("doc_id"))
           .join(comps, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("_keep"), col("doc_id")).as("keep_id"))
-      case None =>
+    } { case (Seq(p), _) =>
+      val labels = graft.analytics.Iterative.minLabelLoop(
+        p.select(col("doc_a").as("_s"), col("doc_b").as("_d"))
+          .unionByName(p.select(col("doc_b").as("_s"), col("doc_a").as("_d"))),
+        docs.select(col("doc_id").as("_v"), col("doc_id").as("_lbl")),
+        maxIter)
+      graft.plans.Supersteps.release(p) // loop-only input, now consumed
+      labels.select(col("_v").as("doc_id"), col("_lbl").as("keep_id"))
     }
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint()
-    var labels = docs.select(col("doc_id"), col("doc_id").as("lbl")).localCheckpoint()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val nbrMin = edges.join(labels, edges("v") === labels("doc_id"))
-        .groupBy(col("u")).agg(min(col("lbl")).as("nlbl"))
-      val obs = new org.apache.spark.sql.Observation(s"dedup_cc_$iter")
-      val updated = labels.join(nbrMin, labels("doc_id") === nbrMin("u"), "left")
-        .select(labels("doc_id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
-          (coalesce(col("nlbl"), col("lbl")) < col("lbl")).as("_chg"))
-        .observe(obs, sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
-        // the round's ONE action; fires the observation. Loop-carried:
-        // cut STATS too, or they compound per round (Supersteps scaladoc)
-      val next = graft.plans.Supersteps.cut(updated,
-        superseded = Seq(labels)) // seed is loop-owned — releasable
-      done = obs.get("changed").asInstanceOf[Long] == 0L
-      labels = next.drop("_chg")
-      iter += 1
-    }
-    graft.plans.Supersteps.release(edges) // loop-only input, now consumed
-    labels.withColumnRenamed("lbl", "keep_id")
   }
 
   /** Exact-dup survivors: the minimum-id document of each byte-identical

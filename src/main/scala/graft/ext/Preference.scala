@@ -165,51 +165,46 @@ object Preference {
     // SIZE-ADAPTIVE escape: a bounded game log resolves all rounds on
     // the driver (see mmDriver); the superstep path below is the
     // billions-of-comparisons shape, unchanged.
-    graft.plans.Supersteps.boundedRows(
-        games.select(col("a"), col("b"), col("win_a")),
-        smallGamesRows) match {
-      case Some(rows) =>
-        val spark = games.sparkSession
-        return mmDriver(
-          rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-          rounds).map(localState(spark, _))
-      case None =>
-    }
-    val g = games.select(col("a"), col("b"), col("win_a"))
-      .localCheckpoint()
-    val players = g.select(col("a").as("t"))
-      .unionByName(g.select(col("b").as("t"))).distinct()
-    val wins = g.select(col("a").as("t"), col("win_a").as("_w"))
-      .unionByName(g.select(col("b").as("t"), (lit(1L) - col("win_a")).as("_w")))
-      .groupBy("t").agg(sum(col("_w")).as("_wins"))
-    val base = players.join(wins, Seq("t"), "left")
-      .select(col("t"), coalesce(col("_wins"), lit(0L)).as("_wins"))
-      .localCheckpoint()
-    var state = graft.plans.Supersteps.cut(
-      base.select(col("t"), lit(Scale).as("w")))
-    val out = Seq.newBuilder[DataFrame]
-    out += state
-    for (_ <- 1 to rounds) {
-      val wa = state.select(col("t").as("a"), col("w").as("_wa"))
-      val wb = state.select(col("t").as("b"), col("w").as("_wb"))
-      // reciprocal at scale 2^20: S^2 div (wa+wb) < 2^39 per edge
-      val r = g.join(wa, Seq("a")).join(wb, Seq("b"))
-        .withColumn("_r", expr(s"(${Scale * Scale}L) div (_wa + _wb)"))
-      val denom = r.select(col("a").as("t"), col("_r"))
-        .unionByName(r.select(col("b").as("t"), col("_r")))
-        .groupBy("t")
-        .agg(sum(col("_r").cast("decimal(38,0)")).as("_d"))
-      state = graft.plans.Supersteps.cut(
-        base.join(state.select(col("t"), col("w")), Seq("t"))
-          .join(denom, Seq("t"), "left")
-          .select(col("t"),
-            when(col("_d").isNull, col("w")).otherwise(
-              expr(s"CAST(greatest(least((CAST(_wins AS DECIMAL(38,0)) * ${Scale * Scale}L) div _d, " +
-                s"${WCap}L), CAST(1 AS BIGINT)) AS BIGINT)")).as("w")),
-        superseded = if (keepAll) Nil else Seq(state))
+    graft.plans.Supersteps.escape(
+        Seq(games.select(col("a"), col("b"), col("win_a"))), smallGamesRows) {
+      case Seq(rows) =>
+        mmDriver(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+          rounds).map(localState(games.sparkSession, _))
+    } { case (Seq(g), _) =>
+      val players = g.select(col("a").as("t"))
+        .unionByName(g.select(col("b").as("t"))).distinct()
+      val wins = g.select(col("a").as("t"), col("win_a").as("_w"))
+        .unionByName(g.select(col("b").as("t"), (lit(1L) - col("win_a")).as("_w")))
+        .groupBy("t").agg(sum(col("_w")).as("_wins"))
+      val base = players.join(wins, Seq("t"), "left")
+        .select(col("t"), coalesce(col("_wins"), lit(0L)).as("_wins"))
+        .localCheckpoint()
+      var state = graft.plans.Supersteps.cut(
+        base.select(col("t"), lit(Scale).as("w")))
+      val out = Seq.newBuilder[DataFrame]
       out += state
+      for (_ <- 1 to rounds) {
+        val wa = state.select(col("t").as("a"), col("w").as("_wa"))
+        val wb = state.select(col("t").as("b"), col("w").as("_wb"))
+        // reciprocal at scale 2^20: S^2 div (wa+wb) < 2^39 per edge
+        val r = g.join(wa, Seq("a")).join(wb, Seq("b"))
+          .withColumn("_r", expr(s"(${Scale * Scale}L) div (_wa + _wb)"))
+        val denom = r.select(col("a").as("t"), col("_r"))
+          .unionByName(r.select(col("b").as("t"), col("_r")))
+          .groupBy("t")
+          .agg(sum(col("_r").cast("decimal(38,0)")).as("_d"))
+        state = graft.plans.Supersteps.cut(
+          base.join(state.select(col("t"), col("w")), Seq("t"))
+            .join(denom, Seq("t"), "left")
+            .select(col("t"),
+              when(col("_d").isNull, col("w")).otherwise(
+                expr(s"CAST(greatest(least((CAST(_wins AS DECIMAL(38,0)) * ${Scale * Scale}L) div _d, " +
+                  s"${WCap}L), CAST(1 AS BIGINT)) AS BIGINT)")).as("w")),
+          superseded = if (keepAll) Nil else Seq(state))
+        out += state
+      }
+      out.result()
     }
-    out.result()
   }
 
   /** Final ratings joined back to the game record:

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation, Row}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Superstep checkpoint discipline.
   *
@@ -100,16 +101,64 @@ object Supersteps {
   /** Whether an RDD id is exempt from block-cleanup sweeps. */
   def isPinned(rddId: Int): Boolean = pinned.contains(rddId)
 
-  /** Collect up to `cap` rows of a frame, or None when it is larger —
-    * the probe behind the fixpoint family's SIZE-ADAPTIVE driver
-    * escapes ([[graft.analytics.Iterative.DefaultSmallGraphRows]]): one
-    * bounded job (LIMIT cap+1 stops the scan early, so the probe is
-    * cheap even on a corpus-sized frame), never a corpus-sized
-    * collect. */
-  def boundedRows(df: DataFrame,
-      cap: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (cap <= 0 || cap >= Int.MaxValue) return None
-    val rows = df.limit(cap.toInt + 1).collect()
-    if (rows.length > cap) None else Some(rows)
+  private val escapeTag = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The fixpoint family's SIZE-ADAPTIVE escape, under the row cap
+    * [[graft.analytics.Iterative.DefaultSmallGraphRows]]: below it an
+    * operator collects its bounded inputs and replays its loop on the
+    * driver (`driver`), above it runs the distributed superstep loop
+    * (`distributed`) unchanged.
+    *
+    * Each input is materialized ONCE (`localCheckpoint`), its row count
+    * observed on that same action, so the path above the cap never
+    * computes a shuffle-fed input twice; the distributed loop receives
+    * the materialized frames with their row counts. A frame that
+    * already reads only materialized rows (a checkpoint, or a
+    * projection/union over one) is taken as is and counted in one job.
+    * When the TOTAL across all inputs is at most `cap` (and `cap > 0`;
+    * `0` forces the distributed path), the inputs are collected in one
+    * job with every column cast to bigint — the coercion the
+    * distributed arithmetic applies — the checkpoints this call made
+    * are released, and `driver` gets each input's rows in order. */
+  def escape[T](inputs: Seq[DataFrame], cap: Long)(
+      driver: Seq[Array[Row]] => T)(
+      distributed: (Seq[DataFrame], Seq[Long]) => T): T = {
+    // the checkpoints are independent: they run on driver threads, so a
+    // call pays one action's latency floor, not one per input
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val mat = inputs.map { df =>
+      scala.concurrent.Future {
+        if (GraftSqlShims.readsMaterialized(df)) (df, None)
+        else {
+          val obs = new Observation(s"escape_${escapeTag.incrementAndGet()}")
+          val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+          (ck, Some(obs.get("n").asInstanceOf[Long]))
+        }
+      }
+    }.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    val frames = mat.map(_._1)
+    val unknown = mat.indices.filter(mat(_)._2.isEmpty)
+    val counted = if (unknown.isEmpty) Array.emptyLongArray
+      else unknown.map(i => frames(i).select(lit(i).as("_i")))
+        .reduce(_.unionAll(_)).rdd
+        .aggregate(new Array[Long](inputs.size))(
+          (n, r) => { n(r.getInt(0)) += 1L; n },
+          (a, b) => { b.indices.foreach(i => a(i) += b(i)); a })
+    val rows = mat.indices.map(i => mat(i)._2.getOrElse(counted(i)))
+    if (cap <= 0 || rows.sum > cap) return distributed(frames, rows)
+    val width = frames.map(_.columns.length).max
+    val collected = frames.zipWithIndex.map { case (f, i) =>
+      f.select(lit(i).as("_i") +: (0 until width).map { c =>
+        (if (c < f.columns.length) col(s"`${f.columns(c)}`") else lit(null))
+          .cast("bigint").as(s"_c$c")
+      }: _*)
+    }.reduce(_.unionAll(_)).collect()
+    mat.foreach { case (f, n) => if (n.isDefined) release(f) }
+    val parts = frames.map(_ => Array.newBuilder[Row])
+    collected.foreach { r =>
+      val i = r.getInt(0)
+      parts(i) += Row.fromSeq(r.toSeq.slice(1, 1 + frames(i).columns.length))
+    }
+    driver(parts.map(_.result()))
   }
 }

@@ -42,7 +42,7 @@ object Extensions {
     graft.sources.Tables.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.read(s, s"$dir/embeddings.parquet")
-  // WIDE variants (Tables.readWide): a scale-adaptive round-robin
+  // WIDE variant (Tables.readWide): a scale-adaptive round-robin
   // fan-out below per-row-expensive single-chain passes (64-dim vector
   // folds, tokenize/gram explodes) — the single-row-group fixture files
   // cap a scan at ONE task, so without it those passes run on one core.
@@ -50,8 +50,6 @@ object Extensions {
   // plan re-scans the table many times (e72's trainer chains, e87's
   // n-gram legs) pays one added exchange per scan and got SLOWER with
   // a blanket fan-out (r17 A/B), so the default readers stay narrow.
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.readWide(s, s"$dir/documents.parquet")
   private def embWide(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.readWide(s, s"$dir/embeddings.parquet")
   /** Normalizes `events.ts` to session-timezone TIMESTAMP regardless of

@@ -85,6 +85,23 @@ object GraftSqlShims {
     }
   }
 
+  /** Whether evaluating the frame only re-reads rows that are already
+    * materialized: its analyzed plan is persisted `LogicalRDD` leaves
+    * (checkpoints) or driver-local relations under projections,
+    * filters and unions — no source scan, no shuffle. */
+  def readsMaterialized(df: Dataset[Row]): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def narrow(p: LogicalPlan): Boolean = p match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _: LocalRelation => true
+      case _: Project | _: Filter | _: Union | _: SubqueryAlias =>
+        p.children.forall(narrow)
+      case _ => false
+    }
+    narrow(df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed)
+  }
+
   /** Register a native expression in the session's FunctionRegistry so
     * it is callable from SQL text (runtime twin of the
     * `spark.sql.extensions` injection path). */

@@ -632,4 +632,22 @@ class IterativeSpec extends SparkSpec {
     val m = G0.V("Person", 0L, 1L).community(5, "KNOWS").toDF
     assert(m.columns.contains("community_id") && m.count() == 2L)
   }
+
+  test("incrementalComponents caps the seed and all batches together") {
+    // 8 + 6 + 6 rows: every frame fits a cap of 10, their total does not
+    val verts = (1L to 8L).toDF("id")
+    val batches = Seq(
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L), (7L, 8L)),
+      Seq((4L, 5L), (8L, 9L), (9L, 10L), (11L, 12L), (2L, 2L), (12L, 1L)))
+      .map(_.toDF("src", "dst"))
+    val capped = Iterative.incrementalComponents(verts, batches,
+      smallGraphRows = 10L)
+    assert(!capped.queryExecution.analyzed.collectLeaves().exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+      "a total above the cap must take the distributed fold")
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(canon(capped) ==
+      canon(Iterative.incrementalComponents(verts, batches)))
+  }
 }

@@ -490,4 +490,25 @@ class DedupSpec extends SparkSpec {
     assert(canon(Dedup.dedupClusters(chain)) ==
       canon(Dedup.dedupClusters(chain, smallGraphRows = 0L)))
   }
+
+  /** Four docs, each one word away from the previous: a near-dup chain. */
+  private lazy val chain4 = Seq(
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (2, "alpha beta gamma delta epsilon eta"),
+    (3, "alpha beta gamma delta theta eta"),
+    (4, "alpha beta gamma iota theta eta")
+  ).toDF("doc_id", "text")
+
+  test("dedupClusters over an int doc_id equals its distributed result") {
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val small = canon(Dedup.dedupClusters(chain4))
+    assert(small.nonEmpty &&
+      small == canon(Dedup.dedupClusters(chain4, smallGraphRows = 0L)))
+  }
+
+  test("dedupClusters throws instead of returning an unconverged labeling") {
+    intercept[IllegalArgumentException](
+      Dedup.dedupClusters(chain4, maxIter = 1, smallGraphRows = 0L))
+  }
 }

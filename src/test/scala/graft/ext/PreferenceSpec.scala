@@ -129,4 +129,18 @@ class PreferenceSpec extends SparkSpec {
     assert(a.size == b.size &&
       a.zip(b).forall { case (x, y) => canon(x) == canon(y) })
   }
+
+  test("bradleyTerry over int-typed games equals the bigint result both ways") {
+    val games = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 0L), (3L, 4L, 1L),
+      (4L, 1L, 0L), (2L, 4L, 0L))
+    val big = games.toDF("a", "b", "win_a")
+    val int = games.map { case (a, b, w) => (a.toInt, b.toInt, w.toInt) }
+      .toDF("a", "b", "win_a")
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val want = canon(Preference.bradleyTerry(big, rounds = 4))
+    assert(canon(Preference.bradleyTerry(int, rounds = 4)) == want)
+    assert(canon(Preference.bradleyTerry(int, rounds = 4,
+      smallGamesRows = 0L)) == want)
+  }
 }
