@@ -282,7 +282,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -344,13 +345,6 @@ object Bench {
       val fn = SparkEntry.queries(name)
       var failed = false
       def once(): Double = {
-        // Superstep checkpoints persist blocks for the session lifetime;
-        // without a sweep the 135-query suite strands thousands of
-        // blocks and LATER queries pay eviction/GC (round-10 finding
-        // #2: q01 read 2.8x in-suite vs 0.88x standalone, same plan).
-        // Release everything this run persisted once its write lands —
-        // after the noop write the blocks have no consumer — except
-        // ids pinned by session-lifetime memos.
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
         try fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -359,10 +353,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!before.contains(id) && !graft.plans.Supersteps.isPinned(id))
-            rdd.unpersist(blocking = false)
-        }
+        graft.plans.Supersteps.sweep(spark, before)
         dt
       }
       once() // warm-up, untimed
@@ -382,7 +373,7 @@ object Bench {
   }
 
   // Locale.ROOT: a comma-decimal default locale would break the JSON
-  // artifacts (ADVICE round 7, flagged on Throughput — same class here)
+  // artifacts (ADVICE round 7)
   private def f(d: Double) =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 

@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -32,20 +33,13 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // Release the superstep-checkpoint blocks each query persisted
-      // once its parquet lands (no consumer remains) — the 135-query
-      // session otherwise strands thousands of blocks (round-10
-      // finding #2). Memo-pinned ids survive the sweep.
       val before = spark.sparkContext.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id) && !graft.plans.Supersteps.isPinned(id))
-          rdd.unpersist(blocking = false)
-      }
+      graft.plans.Supersteps.sweep(spark, before)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

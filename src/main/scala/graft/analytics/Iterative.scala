@@ -1088,7 +1088,7 @@ object Iterative {
     * PRECOMPUTED via their `assignments` parameter. The map is
     * deterministic for a given (graph, edgeLabels), so a session that
     * runs several condensation consumers should compute it once
-    * (checkpoint + [[graft.plans.Supersteps.pin]]) and thread it
+    * ([[graft.plans.SessionMemo.frame]]) and thread it
     * through — the peel is the dominant serial-fixpoint cost
     * (~40 driver actions), and re-running it per consumer was the
     * main bench noise of the q59 family (round-10 verdict task 5). */

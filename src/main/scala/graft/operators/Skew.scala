@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -68,13 +67,11 @@ object Skew {
 
   private val log = LoggerFactory.getLogger(getClass)
   private val obsSeq = new AtomicLong()
-  private val listenerInstalled = new ConcurrentHashMap[SparkSession, java.lang.Boolean]()
 
   /** Log observed hot-bucket drops once per completed query. Installed
-    * at most once per session (weak no-leak: entries die with the JVM,
-    * sessions are few and long-lived). */
+    * once per session, as a memoized entry. */
   private def ensureDropLogger(spark: SparkSession): Unit =
-    if (listenerInstalled.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
+    graft.plans.SessionMemo(spark, "skew.dropLogger") {
       spark.listenerManager.register(new QueryExecutionListener {
         override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
           qe.observedMetrics.foreach { case (name, row) =>

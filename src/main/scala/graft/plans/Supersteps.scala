@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation, Row}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Superstep checkpoint discipline.
@@ -77,29 +77,27 @@ object Supersteps {
     * [[cut]]/`localCheckpoint` result (or a projection over one). Only
     * pass frames whose persisted leaves are ALL superseded and fully
     * consumed — never a frame that still joins a live loop-constant
-    * checkpoint (e.g. the edge set). [[pin]]ned leaves are always
+    * checkpoint (e.g. the edge set). [[isPinned]] leaves are always
     * skipped, so a memoized input threaded into a loop state can never
     * be torn down by the loop's own release. */
   def release(df: DataFrame): Boolean =
     org.apache.spark.sql.GraftSqlShims.unpersistLeafRdd(df,
       skip = isPinned)
 
-  // Session-lifetime memos (e.g. the queries layer's shared SCC
-  // assignments) hold checkpointed frames whose lineage is truncated —
-  // a block-cleanup sweep (Bench/Verify release new blocks after each
-  // query) that unpersisted them would leave LATER consumers nothing to
-  // recompute from. Memo owners pin; sweeps skip pinned ids.
-  private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  /** Whether an RDD id is exempt from block-cleanup sweeps: a persisted
+    * leaf of a frame a [[SessionMemo]] entry holds. */
+  def isPinned(rddId: Int): Boolean = SessionMemo.held.contains(rddId)
 
-  /** Mark a cut/checkpointed frame's persisted RDD as session-lifetime:
-    * block-cleanup sweeps must not release it. Returns `df`. */
-  def pin(df: DataFrame): DataFrame = {
-    org.apache.spark.sql.GraftSqlShims.leafRddIds(df).foreach(pinned.add(_))
-    df
-  }
-
-  /** Whether an RDD id is exempt from block-cleanup sweeps. */
-  def isPinned(rddId: Int): Boolean = pinned.contains(rddId)
+  /** Unpersist every RDD persisted since `before` (the session's
+    * persisted ids when a query started) except pinned ones. Superstep
+    * checkpoints persist blocks for the session lifetime; a long
+    * session that never sweeps strands thousands of blocks and later
+    * queries pay eviction/GC (round-10 finding #2). Call it once the
+    * query's result has landed, when those blocks have no consumer. */
+  def sweep(spark: SparkSession, before: collection.Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id) && !isPinned(id)) rdd.unpersist(blocking = false)
+    }
 
   private val escapeTag = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Glove, Pca, Preference, Sampling, Similarity, Sketches, Text}
 import graft.operators.{AsOfJoin, RangeJoin}
+import graft.plans.SessionMemo
 import graft.streaming.Streams
 
 /** Extension queries (SURVEY.md §2.3 E1–E4): the LLM-training-pipeline
@@ -14,26 +15,10 @@ import graft.streaming.Streams
   */
 object Extensions {
 
-  /** Session-lifetime memo for deterministic TRAINED ARTIFACTS shared
-    * by a train query and its apply/eval consumers (the q59-family
-    * SCC-peel pattern, VERDICT r10 task 5, applied to the other
-    * train->apply pairs): the BPE segmentation (e58/e59), the
-    * perceptron weights (e61/e66), the unigram vocabulary (e63/e64).
-    * Each artifact is deterministic for a given (session, fixture),
-    * vocabulary-sized, checkpointed and [[graft.plans.Supersteps.pin]]ned
-    * so the Bench/Verify block sweeps can't tear it down mid-session.
-    * This is the production shape — models train once, then tokenize /
-    * score / evaluate many times. */
-  private val artifactMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String), DataFrame]()
-  private def memoArtifact(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame =
-    artifactMemo.computeIfAbsent((System.identityHashCode(s), dir, key), { _ =>
-      val raw = build
-      val ck = graft.plans.Supersteps.pin(raw.localCheckpoint())
-      graft.plans.Supersteps.release(raw) // build-time blocks consumed
-      ck
-    })
+  // Trained artifacts (BPE e58/e59, perceptron e61/e66, unigram
+  // vocabulary e63/e64, ...) are deterministic per (session, fixture):
+  // they train once and are held as `SessionMemo` checkpoints for their
+  // apply/eval consumers (the q59-family SCC-peel pattern).
 
   // Memoized fixture reads (graft.sources.Tables) — each bare
   // spark.read.parquet re-ran listing + schema inference (~84 ms of
@@ -148,7 +133,7 @@ object Extensions {
     * (trainers pay, consumers memoize — VERDICT r12 task 5): e92 and
     * e96 each consumed a full LSH+verify chain of their own before. */
   private def nearDupPairsMemo(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "near_dup_pairs") {
+    SessionMemo.frame(s, (dir, "near_dup_pairs")) {
       Dedup.nearDupPairs(docs(s, dir), threshold = 0.5)
     }
 
@@ -549,17 +534,17 @@ object Extensions {
         benchPred = col("vec_id") % 40 === 1, threshold = 0.35)
       .orderBy("vec_id", "bench_id")
 
-  /** The e75 bigram-LM scoring pass, memoized like [[bpeArtifacts]]
+  /** The e75 bigram-LM scoring pass, memoized like [[bpeSyms]]
     * (e75 MEASURES the scorer; e78/e86 consume the memo). */
   private def bigramScored(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "bigram_surprisal") {
+    SessionMemo.frame(s, (dir, "bigram_surprisal")) {
       Text.bigramSurprisal(docs(s, dir), trainFilter = col("doc_id") % 5 =!= 3)
     }
 
   /** The e101 KN-trigram scoring pass, memoized the same way (e101
     * MEASURES the scorer; e104 consumes the memo). */
   private def knScored(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "kn_trigram_surprisal") {
+    SessionMemo.frame(s, (dir, "kn_trigram_surprisal")) {
       Text.knTrigramSurprisal(docs(s, dir), trainFilter = col("doc_id") % 5 =!= 3)
     }
 
@@ -613,10 +598,10 @@ object Extensions {
   def e81_gopher_rules(s: SparkSession, dir: String): DataFrame =
     Text.gopherRules(docs(s, dir)).orderBy("doc_id")
 
-  /** The trained WordPiece segmentation, memoized like [[bpeArtifacts]]
+  /** The trained WordPiece segmentation, memoized like [[bpeSyms]]
     * (e76 MEASURES the trainer; consumers read the memo). */
   private def wordpieceSyms(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "wordpiece_syms") {
+    SessionMemo.frame(s, (dir, "wordpiece_syms")) {
       graft.ext.Bpe.train(docs(s, dir), rounds = 8, likelihood = true)._2
     }
 
@@ -725,13 +710,13 @@ object Extensions {
       .unionAll(dup.select(col("doc_b").as("query_id"), col("doc_a").as("doc_id")))
     val qids = truth.select(col("query_id")).distinct()
     val d = docs(s, dir)
-    val lex = memoArtifact(s, dir, "e96_lex_ranks") {
+    val lex = SessionMemo.frame(s, (dir, "e96_lex_ranks")) {
       val qs = d.join(qids, col("doc_id") === col("query_id"))
         .select(col("query_id"),
           concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
       graft.ext.Retrieval.bm25TopK(d, qs, k = KnnK, excludeSelf = true)
     }
-    val dense = memoArtifact(s, dir, "e96_dense_ranks") {
+    val dense = SessionMemo.frame(s, (dir, "e96_dense_ranks")) {
       graft.ext.Retrieval.denseRanks(emb(s, dir), qids, KnnK)
     }
     val fused = graft.ext.Retrieval.rrfFuse(lex, dense, KnnK)
@@ -760,7 +745,7 @@ object Extensions {
   def e97_index_dedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val corpus = d.where(!e97NewPred)
-    val index = memoArtifact(s, dir, "minhash_index") {
+    val index = SessionMemo.frame(s, (dir, "minhash_index")) {
       Dedup.minhashSignatures(corpus)
     }
     Dedup.dedupAgainstIndex(d.where(e97NewPred), index, corpus, threshold = 0.5)
@@ -956,7 +941,7 @@ object Extensions {
 
   def e110_incremental_health(s: SparkSession, dir: String): DataFrame = {
     val (older, newer) = e110Snapshots(s, dir)
-    val base = memoArtifact(s, dir, "health_base_110") {
+    val base = SessionMemo.frame(s, (dir, "health_base_110")) {
       graft.ext.Snapshot.healthSums(older)
     }
     graft.ext.Snapshot.refreshHealth(base, older, newer)
@@ -973,7 +958,7 @@ object Extensions {
     * exact. Same bounded delta as e110. */
   def e111_incremental_hh(s: SparkSession, dir: String): DataFrame = {
     val (older, newer) = e110Snapshots(s, dir)
-    val base = memoArtifact(s, dir, "term_counts_110") {
+    val base = SessionMemo.frame(s, (dir, "term_counts_110")) {
       graft.ext.Snapshot.termCounts(older)
     }
     graft.ext.Snapshot.refreshHeavyHitters(base, older, newer, k = 25)
@@ -989,7 +974,7 @@ object Extensions {
     * indistinguishable from a rebuild. Same bounded delta as e110. */
   def e112_incremental_index(s: SparkSession, dir: String): DataFrame = {
     val (older, newer) = e110Snapshots(s, dir)
-    val base = memoArtifact(s, dir, "sig_index_110") {
+    val base = SessionMemo.frame(s, (dir, "sig_index_110")) {
       Dedup.minhashSignatures(older)
     }
     graft.ext.Snapshot.refreshSignatureIndex(base, older, newer)
@@ -1012,15 +997,15 @@ object Extensions {
     // first, dfreq derives from the CHECKPOINTED postings, and dl is a
     // row-local projection (advisor, round 14 — the previous form
     // re-tokenized the older corpus once per memoized frame).
-    val basePostings = memoArtifact(s, dir, "bm25_post_110") {
+    val basePostings = SessionMemo.frame(s, (dir, "bm25_post_110")) {
       graft.ext.Retrieval.buildBm25Index(older).postings
     }
     val base = graft.ext.Retrieval.Bm25Index(
       basePostings,
-      memoArtifact(s, dir, "bm25_dl_110") {
+      SessionMemo.frame(s, (dir, "bm25_dl_110")) {
         graft.ext.Retrieval.buildBm25Index(older).dl
       },
-      memoArtifact(s, dir, "bm25_df_110") {
+      SessionMemo.frame(s, (dir, "bm25_df_110")) {
         graft.ext.Retrieval.dfreqOf(basePostings)
       })
     val idx = graft.ext.Snapshot.refreshBm25Index(base, older, newer)
@@ -1028,17 +1013,6 @@ object Extensions {
       k = 10, excludeSelf = true)
       .orderBy("query_id", "rank")
   }
-
-  /** Session-lifetime memo for DRIVER-SIDE Gram states (the
-    * [[memoArtifact]] discipline for the one trained artifact that is
-    * a tuple of integer sums rather than a DataFrame). */
-  private val gramMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String), (Long, Array[BigInt], Array[Array[BigInt]])]()
-  private def memoGram(s: SparkSession, dir: String, key: String)(
-      build: => (Long, Array[BigInt], Array[Array[BigInt]]))
-      : (Long, Array[BigInt], Array[Array[BigInt]]) =
-    gramMemo.computeIfAbsent((System.identityHashCode(s), dir, key),
-      _ => build)
 
   /** e114: delta-driven PCA-axis maintenance ([[graft.ext.Pca.mergeGram]])
     * — the incremental seam reaching the LINEAR-ALGEBRA state: the
@@ -1056,7 +1030,7 @@ object Extensions {
       .where(not((col("vec_id") % 7 === 2) && (col("vec_id") < E110AddedCap)))
     val newer = e
       .where(not((col("vec_id") % 13 === 5) && (col("vec_id") < E110RemovedCap)))
-    val base = memoGram(s, dir, "gram_base_114") { Pca.gramPass(older) }
+    val base = SessionMemo(s, (dir, "gram_base_114")) { Pca.gramPass(older) }
     val sub = Pca.gramPass(older.where(
       (col("vec_id") % 13 === 5) && (col("vec_id") < E110RemovedCap)))
     val add = Pca.gramPass(newer.where(
@@ -1097,24 +1071,24 @@ object Extensions {
     val snap = graft.ext.Snapshot
     // Frozen bases — memoized once per session under the SAME keys as
     // e110–e114 (they are the same offline artifacts; untimed warm-up).
-    val healthBase = memoArtifact(s, dir, "health_base_110") {
+    val healthBase = SessionMemo.frame(s, (dir, "health_base_110")) {
       snap.healthSums(older)
     }
-    val hhBase = memoArtifact(s, dir, "term_counts_110") {
+    val hhBase = SessionMemo.frame(s, (dir, "term_counts_110")) {
       snap.termCounts(older)
     }
-    val sigBase = memoArtifact(s, dir, "sig_index_110") {
+    val sigBase = SessionMemo.frame(s, (dir, "sig_index_110")) {
       Dedup.minhashSignatures(older)
     }
-    val basePostings = memoArtifact(s, dir, "bm25_post_110") {
+    val basePostings = SessionMemo.frame(s, (dir, "bm25_post_110")) {
       graft.ext.Retrieval.buildBm25Index(older).postings
     }
     val bmBase = graft.ext.Retrieval.Bm25Index(
       basePostings,
-      memoArtifact(s, dir, "bm25_dl_110") {
+      SessionMemo.frame(s, (dir, "bm25_dl_110")) {
         graft.ext.Retrieval.buildBm25Index(older).dl
       },
-      memoArtifact(s, dir, "bm25_df_110") {
+      SessionMemo.frame(s, (dir, "bm25_df_110")) {
         graft.ext.Retrieval.dfreqOf(basePostings)
       })
     val e = emb(s, dir)
@@ -1122,7 +1096,7 @@ object Extensions {
       .where(not((col("vec_id") % 7 === 2) && (col("vec_id") < E110AddedCap)))
     val newerE = e
       .where(not((col("vec_id") % 13 === 5) && (col("vec_id") < E110RemovedCap)))
-    val gramBase = memoGram(s, dir, "gram_base_114") { Pca.gramPass(olderE) }
+    val gramBase = SessionMemo(s, (dir, "gram_base_114")) { Pca.gramPass(olderE) }
 
     // THE one diff — computed once, shared by all five consumers.
     val (subIds, addIds) = snap.deltaWorkLists(older, newer)
@@ -1217,11 +1191,11 @@ object Extensions {
     // artifacts, memoized once per session — untimed warm-up). The e23
     // centroid picks are all %7==0 ids, so every centroid vector
     // exists in the older snapshot.
-    val centroids = memoArtifact(s, dir, "ivf_cen_116") {
+    val centroids = SessionMemo.frame(s, (dir, "ivf_cen_116")) {
       older.where(col("vec_id").isin(IvfCentroidIds: _*))
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     }
-    val base = memoArtifact(s, dir, "ivf_asg_116") {
+    val base = SessionMemo.frame(s, (dir, "ivf_asg_116")) {
       Similarity.ivfAssignments(older, centroids)
     }
     val subIds = older.where(
@@ -1270,7 +1244,7 @@ object Extensions {
     val (older, newer) = e110Snapshots(s, dir)
     def toks(d: DataFrame) = d.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    val base = memoArtifact(s, dir, "pack_base_118") {
+    val base = SessionMemo.frame(s, (dir, "pack_base_118")) {
       graft.ext.Packing.contiguousPack(toks(older), col("doc_id"),
           col("n_tokens"), E38Budget, E38Shards)
         .select(col("doc_id"), col("n_tokens"), col("shard"), col("pack_id"))
@@ -1294,7 +1268,7 @@ object Extensions {
     * the corpus. Same bounded delta as e110. */
   def e119_incremental_cooc(s: SparkSession, dir: String): DataFrame = {
     val (older, newer) = e110Snapshots(s, dir)
-    val base = memoArtifact(s, dir, "cooc_base_110") {
+    val base = SessionMemo.frame(s, (dir, "cooc_base_110")) {
       Text.cooccurrence(older, window = 3)
     }
     graft.ext.Snapshot.refreshCooccurrence(base, older, newer, window = 3)
@@ -1316,10 +1290,10 @@ object Extensions {
     val (older, newer) = e110Snapshots(s, dir)
     val trainF = col("doc_id") % 5 =!= 3
     val base = Text.BigramCounts(
-      memoArtifact(s, dir, "lm_big_110") {
+      SessionMemo.frame(s, (dir, "lm_big_110")) {
         Text.buildBigramCounts(older.where(trainF)).big
       },
-      memoArtifact(s, dir, "lm_uni_110") {
+      SessionMemo.frame(s, (dir, "lm_uni_110")) {
         Text.buildBigramCounts(older.where(trainF)).uni
       })
     val m = graft.ext.Snapshot.refreshBigramCounts(base, older, newer, trainF)
@@ -1336,7 +1310,7 @@ object Extensions {
   def e121_incremental_kn(s: SparkSession, dir: String): DataFrame = {
     val (older, newer) = e110Snapshots(s, dir)
     val trainF = col("doc_id") % 5 =!= 3
-    val base = memoArtifact(s, dir, "kn_c3_110") {
+    val base = SessionMemo.frame(s, (dir, "kn_c3_110")) {
       Text.buildTrigramCounts(older.where(trainF))
     }
     // The scorer derives five frames from the maintained c3 — cut the
@@ -1361,17 +1335,17 @@ object Extensions {
     val (older, newer) = e110Snapshots(s, dir)
     val snap = graft.ext.Snapshot
     val trainF = col("doc_id") % 5 =!= 3
-    val coocBase = memoArtifact(s, dir, "cooc_base_110") {
+    val coocBase = SessionMemo.frame(s, (dir, "cooc_base_110")) {
       Text.cooccurrence(older, window = 3)
     }
     val lmBase = Text.BigramCounts(
-      memoArtifact(s, dir, "lm_big_110") {
+      SessionMemo.frame(s, (dir, "lm_big_110")) {
         Text.buildBigramCounts(older.where(trainF)).big
       },
-      memoArtifact(s, dir, "lm_uni_110") {
+      SessionMemo.frame(s, (dir, "lm_uni_110")) {
         Text.buildBigramCounts(older.where(trainF)).uni
       })
-    val knBase = memoArtifact(s, dir, "kn_c3_110") {
+    val knBase = SessionMemo.frame(s, (dir, "kn_c3_110")) {
       Text.buildTrigramCounts(older.where(trainF))
     }
 
@@ -1474,7 +1448,7 @@ object Extensions {
       .where(not((col("vec_id") % 13 === 5) && (col("vec_id") < E110RemovedCap)))
     // The frozen axis: PC1 of the OLDER snapshot (the same memoized
     // Gram state e114/e115 hold — the offline artifact).
-    val (n, sv, g) = memoGram(s, dir, "gram_base_114") { Pca.gramPass(olderE) }
+    val (n, sv, g) = SessionMemo(s, (dir, "gram_base_114")) { Pca.gramPass(olderE) }
     val v = Pca.pc1Direction(n, sv, g)
     def meanMilli(snap: DataFrame): Long = snap
       .select(Pca.pc1Col(col("embedding"), v).as("_p"))
@@ -1645,15 +1619,9 @@ object Extensions {
     * merge rounds learned from the corpus word-frequency table; the
     * oracle unrolls every round (pair count -> argmax -> greedy
     * islands merge) in MATERIALIZED SQL CTEs. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), (DataFrame, DataFrame)]()
-  private def bpeArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeMemo.computeIfAbsent((System.identityHashCode(s), dir), { _ =>
-      val (tbl, syms) = graft.ext.Bpe.train(docs(s, dir), rounds = 8)
-      // tbl is a driver-literal LocalRelation (one row per merge);
-      // syms is the final superstep cut — pinned against block sweeps
-      (tbl, graft.plans.Supersteps.pin(syms))
-    })
+  private def bpeSyms(s: SparkSession, dir: String): DataFrame =
+    // the final superstep cut, which the memo holds against block sweeps
+    SessionMemo(s, (dir, "bpe_syms"))(graft.ext.Bpe.train(docs(s, dir), rounds = 8)._2)
 
   def e58_bpe_train(s: SparkSession, dir: String): DataFrame =
     // computes FRESH per invocation — e58 is the query that MEASURES
@@ -1665,7 +1633,7 @@ object Extensions {
     * ([[graft.ext.Bpe.bpeTokenCounts]]) — merges segment the
     * vocabulary table once; the corpus tokenizes by dictionary join. */
   def e59_bpe_tokenize(s: SparkSession, dir: String): DataFrame =
-    graft.ext.Bpe.tokenCountsFrom(docs(s, dir), bpeArtifacts(s, dir)._2)
+    graft.ext.Bpe.tokenCountsFrom(docs(s, dir), bpeSyms(s, dir))
       .orderBy("doc_id")
 
   /** e57: hard-triplet mining ([[Similarity.hardTriplets]]) — per
@@ -1865,7 +1833,7 @@ object Extensions {
     * to end; the oracle replays all 8 training rounds as chained CTEs
     * and averages the same round-end weights. */
   private def perceptronW(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "perceptron_w") {
+    SessionMemo.frame(s, (dir, "perceptron_w")) {
       graft.ext.Classify.perceptronTrain(docs(s, dir),
         when(col("lang") === "en", 1L).otherwise(-1L),
         rounds = E61Rounds, buckets = E61Buckets)
@@ -1902,7 +1870,7 @@ object Extensions {
     * costs, the position-unrolled DP with its smallest-last-piece tie
     * break, the backtracks, and the recounts. */
   private def unigramVocab(s: SparkSession, dir: String): DataFrame =
-    memoArtifact(s, dir, "unigram_vocab") {
+    SessionMemo.frame(s, (dir, "unigram_vocab")) {
       graft.ext.Unigram.train(docs(s, dir), rounds = 2)
     }
 

@@ -945,20 +945,14 @@ object Inventory {
     * task 5): the peel is deterministic for a given (graph, edgeLabels),
     * costs ~40 serial driver actions, and re-running it inside each
     * condensation consumer tripled the family's serial floor. The memo
-    * holds a [[graft.plans.Supersteps.pin]]ned checkpoint so the
+    * holds a [[graft.plans.SessionMemo.frame]] checkpoint, so the
     * Bench/Verify block sweeps (and the consumers' own releases) can
     * never tear it down mid-session. q54 does NOT use the memo — it IS
     * the peel measurement, and memoizing it would benchmark a cache. */
-  private val sccMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
   private def thinnedSccAssignments(s: SparkSession, dir: String): DataFrame =
-    sccMemo.computeIfAbsent((System.identityHashCode(s), dir), { _ =>
-      val raw = graft.analytics.Iterative
-        .sccAssignments(snbThinnedKnows(s, dir), Set("KNOWS"))
-      val ck = graft.plans.Supersteps.pin(raw.localCheckpoint())
-      graft.plans.Supersteps.release(raw) // peel blocks now consumed
-      ck
-    })
+    graft.plans.SessionMemo.frame(s, (dir, "thinned_scc")) {
+      graft.analytics.Iterative.sccAssignments(snbThinnedKnows(s, dir), Set("KNOWS"))
+    }
 
   /** Q54: strongly connected components of the thinned directed KNOWS
     * graph ([[graft.analytics.Iterative.stronglyConnectedComponents]])

@@ -1,8 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.plans.SessionMemo
 
 /** Session-scoped reader memo for the READ-ONLY fixture tables.
   *
@@ -26,12 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The memoized batch reader. Thread-safe; one entry per
     * (session, path). */
   def read(spark: SparkSession, path: String): DataFrame =
-    cache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+    SessionMemo(spark, ("parquet", path))(spark.read.parquet(path))
 
   /** Scan parallelism below which [[readWide]] fans the frame out —
     * a small single-row-group parquet file can never scan wider than
@@ -39,8 +37,6 @@ object Tables {
     * expression ABOVE the scan (vector math, tokenize/gram explodes,
     * md5 hashing) runs on one core of the machine. */
   val WideFloor = 16
-
-  private val wideCache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** [[read]] plus a SCALE-ADAPTIVE scan fan-out for compute-heavy
     * consumers: when the planned scan parallelism is under
@@ -55,10 +51,10 @@ object Tables {
     * The partition-count probe plans the scan (driver-only, no job) and
     * is memoized with the frame. */
   def readWide(spark: SparkSession, path: String): DataFrame =
-    wideCache.computeIfAbsent((spark, path), _ => {
+    SessionMemo(spark, ("wide", path)) {
       val df = read(spark, path)
       val target = spark.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions >= math.min(WideFloor, target)) df
       else df.repartition(target)
-    })
+    }
 }

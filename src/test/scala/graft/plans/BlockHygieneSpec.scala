@@ -30,13 +30,9 @@ class BlockHygieneSpec extends SparkSpec {
   private def leakOf(op: => org.apache.spark.sql.DataFrame): (Long, Int) = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val rows = op.count()
-    val after = spark.sparkContext.getPersistentRDDs
-    val added = after.keySet.diff(before).size
+    val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before).size
     // leave the session clean for other suites
-    after.foreach { case (id, rdd) =>
-      if (!before.contains(id) && !Supersteps.isPinned(id))
-        rdd.unpersist(blocking = false)
-    }
+    Supersteps.sweep(spark, before)
     (rows, added)
   }
 
@@ -78,8 +74,7 @@ class BlockHygieneSpec extends SparkSpec {
 
   test("pin exempts a frame from release") {
     import spark.implicits._
-    val df = Seq(1, 2, 3).toDF("x").localCheckpoint()
-    Supersteps.pin(df)
+    val df = SessionMemo.frame(spark, "BlockHygieneSpec.pin")(Seq(1, 2, 3).toDF("x"))
     assert(!Supersteps.release(df), "release must skip pinned leaves")
     assert(df.count() == 3)
   }
@@ -113,12 +108,8 @@ class BlockHygieneSpec extends SparkSpec {
     Seq(Seq((1L, 2L)), Seq((2L, 3L)), Seq((4L, 5L))).zipWithIndex
       .foreach { case (b, i) => m.sink(b.toDF("src", "dst"), i.toLong) }
     assert(m.state.where(col("component") === 1L).count() == 3)
-    val after = spark.sparkContext.getPersistentRDDs
-    val added = after.keySet.diff(before).size
-    after.foreach { case (id, rdd) =>
-      if (!before.contains(id) && !Supersteps.isPinned(id))
-        rdd.unpersist(blocking = false)
-    }
+    val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before).size
+    Supersteps.sweep(spark, before)
     // per-fold growth must not accumulate: only the LIVE state (plus
     // its construction constant) may remain after 3 folds
     assert(added <= 4, s"streaming fold stranded $added persisted RDDs")
