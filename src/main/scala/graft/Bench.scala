@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * k-times replica of the fixture (shifted keys so join/group
   * cardinality grows with the data; per-replica word suffixes so the
   * document corpus grows with DISTINCT content at constant near-dup
-  * density — the ScaleProbe discipline, BASELINE.md round-4 note) and
-  * times the most expensive queries on it. At sf0.1 nearly every query
+  * density, BASELINE.md round-4 note) and times the most expensive
+  * queries on it. At sf0.1 nearly every query
   * sits on the ~0.3-0.7 s job-launch floor, so the default tier mostly
   * measures overhead; this tier is the one where plan regressions are
   * visible (round-5 verdict task 6). Results land in bench_scale.json,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.PropertyGraph
@@ -151,13 +151,24 @@ object GraphLoader {
     * self-join on (order, rank) — all partition-parallel; the generator
     * itself would scale to any N.
     *
-    * @param materializeComments when true, the ranked comment frame
-    *   (lineitem distinct + rank window) is `localCheckpoint`ed once, so
-    *   the four frames derived from it (Comment, both REPLY_OF specs,
-    *   the comment HAS_CREATOR) are cheap projections/joins of the
-    *   materialized rank instead of each re-running the window —
-    *   the right mode for thread-unroll workloads that traverse
-    *   REPLY_OF repeatedly (q33); the default stays fully lazy. */
+    * @param materializeComments when true, the graph is built for
+    *   repeated point reads: its constructor `localCheckpoint`s, once,
+    *   the Person and Post vertex frames, KNOWS, the Post HAS_CREATOR
+    *   edge frame, the ranked comment frame (lineitem distinct + rank
+    *   window) and the REPLY_OF Comment→Comment parent resolution.
+    *   Comment, REPLY_OF Comment→Post and the Comment HAS_CREATOR frame
+    *   are projections of the ranked checkpoint, so every frame of the
+    *   graph reads only materialized rows: a point hop scans in-memory
+    *   adjacency instead of regenerating KNOWS (explode + `distinct`
+    *   shuffle) or rescanning Parquet, the way the reference reads the
+    *   adjacency it wrote once at load (TorcHelper.java:352-370). The
+    *   person count N is observed on the Person checkpoint's own action
+    *   and folded in as a literal, so no frame carries the count join.
+    *   Independent checkpoints run on driver threads. The checkpoints
+    *   are held by the returned graph's frames, not by a
+    *   [[graft.plans.SessionMemo]] entry: memo entries live as long as
+    *   the session, while these blocks are reclaimed once the graph is
+    *   unreachable. The default stays fully lazy. */
   def snb(spark: SparkSession, dir: String,
       materializeComments: Boolean = false): PropertyGraph =
     snbFromTables(spark,
@@ -171,13 +182,12 @@ object GraphLoader {
     * generated graph cannot use: the knows and comment-creator frames
     * compute their targets as `key % count`, so person ids must stay
     * contiguous in [0, n) or most generated edges dangle. Replica
-    * persons therefore take ids `i*n0 + key` (the ScaleProbe FoF
-    * discipline, BASELINE.md round 6), posts shift by 1e8 per replica
-    * with their creator re-pointed into the replica person space, and
-    * lineitem follows its order so each replica post carries its own
-    * reply tree. Supernode population (`p % 97 == 0`) and the degree mix
-    * grow WITH the graph. One count action (n0) per call — replica
-    * construction is a bench/dev tier, not a query path. */
+    * persons therefore take ids `i*n0 + key`, posts shift by 1e8 per
+    * replica with their creator re-pointed into the replica person
+    * space, and lineitem follows its order so each replica post carries
+    * its own reply tree. Supernode population (`p % 97 == 0`) and the
+    * degree mix grow WITH the graph. One count action (n0) per call —
+    * replica construction is a bench tier, not a query path. */
   def snbReplicaTables(customer: DataFrame, orders: DataFrame,
       lineitem: DataFrame, k: Int): (DataFrame, DataFrame, DataFrame) = {
     require(k >= 1, s"replica factor must be >= 1, got $k")
@@ -196,12 +206,11 @@ object GraphLoader {
     }
   }
 
-  /** [[snb]] over explicit source frames — the ScaleProbe hook: scaling
-    * probes replicate orders/lineitem (k-times posts + reply trees per
-    * person) while keeping the person set fixed, which a directory-based
-    * loader cannot express. `replicas > 1` applies [[snbReplicaTables]]
-    * first — the contiguous-keyspace growth mode for whole-graph scale
-    * runs. */
+  /** [[snb]] over explicit source frames, for callers that grow the
+    * source tables themselves (e.g. k-times posts + reply trees over a
+    * fixed person set), which a directory-based loader cannot express.
+    * `replicas > 1` applies [[snbReplicaTables]] first — the
+    * contiguous-keyspace growth mode for whole-graph scale runs. */
   def snbFromTables(spark: SparkSession, customer0: DataFrame,
       orders0: DataFrame, lineitem0: DataFrame,
       materializeComments: Boolean = false, replicas: Int = 1): PropertyGraph = {
@@ -219,22 +228,8 @@ object GraphLoader {
       col("o_orderdate").as("created"),
       col("o_totalprice").as("score"))
 
-    // Person count feeding the `% _n` generator frames. Lazy mode
-    // broadcasts the 1-row aggregate — a bounded NLJ, whitelisted per
-    // consuming query (PlanAuditSpec). Materialized mode folds it to a
-    // literal instead: the construction already pays checkpoint actions,
-    // and a literal keeps every generator frame NLJ-free so the thread
-    // queries (q33/q36) plan pure projections of the checkpointed rank.
-    val addN: DataFrame => DataFrame =
-      if (materializeComments) {
-        val n = customer.count()
-        df => df.withColumn("_n", lit(n))
-      } else {
-        val nRow = broadcast(
-          customer.agg(count(lit(1)).as("_n")).withColumn("_one", lit(1)))
-        df => df.withColumn("_one", lit(1)).join(nRow, "_one")
-      }
-    val knows = addN(customer.select(col("c_custkey").cast("bigint").as("p")))
+    // KNOWS over person ids `p` that carry the person count `_n`
+    def knowsOf(ps: DataFrame): DataFrame = ps
       .withColumn("d",
         when(col("p") % 97 === 0, lit(40L)).otherwise((col("p") * 13 + 7) % 5 + 1))
       .withColumn("k", explode(sequence(lit(1L), col("d"))))
@@ -259,7 +254,55 @@ object GraphLoader {
         org.apache.spark.sql.expressions.Window
           .partitionBy("_ok").orderBy("_ln")).cast("bigint"))
       .withColumn("_cid", col("_ok") * 8 + col("_ln"))
-    val ranked = if (materializeComments) rankedLazy.localCheckpoint() else rankedLazy
+    def replyOfCommentOf(ranked: DataFrame): DataFrame = {
+      val parents = ranked.select(col("_ok").as("_pok"), col("_r").as("_pr"),
+        col("_cid").as("_pcid"))
+      ranked.where(col("_r") >= 2)
+        .withColumn("_want", (col("_ok") + col("_r") * 13) % (col("_r") - 1) + 1)
+        .join(parents, col("_ok") === col("_pok") && col("_want") === col("_pr"))
+        .select(col("_cid").as(GC.Src), col("_pcid").as(GC.Dst))
+    }
+
+    // (Person, Post, Post HAS_CREATOR, ranked, KNOWS, REPLY_OF
+    // Comment→Comment, the `_n` column the comment creators read)
+    val (persons, posts, creators, ranked, knows, replyOfComment, addN) =
+      if (!materializeComments) {
+        // lazy mode broadcasts the 1-row person count — a bounded NLJ,
+        // whitelisted per consuming query (PlanAuditSpec)
+        val nRow = broadcast(
+          customer.agg(count(lit(1)).as("_n")).withColumn("_one", lit(1)))
+        val addN: DataFrame => DataFrame =
+          df => df.withColumn("_one", lit(1)).join(nRow, "_one")
+        (person, post, creator, rankedLazy,
+          knowsOf(addN(customer.select(col("c_custkey").cast("bigint").as("p")))),
+          replyOfCommentOf(rankedLazy), addN)
+      } else {
+        // Checkpoints with no dependency between them run on driver
+        // threads. N is counted on the Person checkpoint's own action
+        // and folded in as a literal, so KNOWS waits only for Person,
+        // and no frame carries the count join. A thread unroll joins
+        // REPLY_OF Comment→Comment once PER DEPTH, so its parent
+        // resolution is checkpointed too, after the rank.
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.duration.Duration.Inf
+        val obs = new Observation()
+        val personF = Future {
+          val ck = person.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+          (ck, lit(obs.get("n")))
+        }
+        val postF = Future(post.localCheckpoint())
+        val creatorF = Future(creator.localCheckpoint())
+        val rankedF = Future(rankedLazy.localCheckpoint())
+        val knowsF = personF.map { case (p, n) =>
+          knowsOf(p.select(col(GC.Id).as("p"), n.as("_n"))).localCheckpoint()
+        }
+        val replyF = rankedF.map(replyOfCommentOf(_).localCheckpoint())
+        def get[T](f: Future[T]): T = Await.result(f, Inf)
+        val (p, n) = get(personF)
+        (p, get(postF), get(creatorF), get(rankedF), get(knowsF), get(replyF),
+          (df: DataFrame) => df.withColumn("_n", n))
+      }
 
     val comment = ranked.select(
       col("_cid").as(GC.Id),
@@ -269,29 +312,15 @@ object GraphLoader {
     val replyOfPost = ranked.where(col("_r") === 1)
       .select(col("_cid").as(GC.Src), col("_ok").as(GC.Dst))
 
-    val parents = ranked.select(col("_ok").as("_pok"), col("_r").as("_pr"),
-      col("_cid").as("_pcid"))
-    val replyOfCommentLazy = ranked.where(col("_r") >= 2)
-      .withColumn("_want", (col("_ok") + col("_r") * 13) % (col("_r") - 1) + 1)
-      .join(parents, col("_ok") === col("_pok") && col("_want") === col("_pr"))
-      .select(col("_cid").as(GC.Src), col("_pcid").as(GC.Dst))
-    // materialized mode also pins the parent-resolution self-join: a
-    // repeated thread unroll joins this frame once PER DEPTH, and each
-    // of those joins would otherwise re-execute the self-join above the
-    // reused exchange
-    val replyOfComment =
-      if (materializeComments) replyOfCommentLazy.localCheckpoint()
-      else replyOfCommentLazy
-
     val commentCreator = addN(ranked)
       .select(col("_cid").as(GC.Src),
         ((col("_cid") * 31 + 7) % col("_n")).as(GC.Dst))
 
     new PropertyGraph(spark,
-      Map("Person" -> person, "Post" -> post, "Comment" -> comment),
+      Map("Person" -> persons, "Post" -> posts, "Comment" -> comment),
       Map(
         EdgeSpec("KNOWS", "Person", "Person") -> knows,
-        EdgeSpec("HAS_CREATOR", "Post", "Person") -> creator,
+        EdgeSpec("HAS_CREATOR", "Post", "Person") -> creators,
         EdgeSpec("HAS_CREATOR", "Comment", "Person") -> commentCreator,
         EdgeSpec("REPLY_OF", "Comment", "Post") -> replyOfPost,
         EdgeSpec("REPLY_OF", "Comment", "Comment") -> replyOfComment))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.GraftSqlShims
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +14,7 @@ class SnbSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val sg = GraphLoader.snb(spark, sf0001)
+  private lazy val pg = GraphLoader.snb(spark, sf0001, materializeComments = true)
 
   test("knows generator: no self loops, deduped, supernode skew, since formula") {
     val knows = sg.edgeFrames(EdgeSpec("KNOWS", "Person", "Person"))
@@ -73,5 +75,39 @@ class SnbSpec extends SparkSpec {
     assert(viaPregel == viaDsl,
       s"engines disagree: pregel-only=${(viaPregel -- viaDsl).take(5)}, dsl-only=${(viaDsl -- viaPregel).take(5)}")
     assert(viaPregel.contains(1L) && viaPregel.size > 1)
+  }
+
+  test("point-read mode: all 8 frames equal the lazy graph's and read only materialized rows") {
+    val frames =
+      sg.vertexFrames.keys.toSeq.map(l => (l, sg.vertexFrames(l), pg.vertexFrames(l))) ++
+      sg.edgeFrames.keys.toSeq.map(e => (e.toString, sg.edgeFrames(e), pg.edgeFrames(e)))
+    assert(frames.size == 8 && pg.vertexFrames.size == 3 && pg.edgeFrames.size == 5)
+    frames.foreach { case (name, lazyDf, pointDf) =>
+      assert(pointDf.columns.toSeq == lazyDf.columns.toSeq, name)
+      assert(pointDf.count() == lazyDf.count(), name)
+      assert(pointDf.exceptAll(lazyDf).isEmpty, s"$name: rows the lazy graph lacks")
+      assert(lazyDf.exceptAll(pointDf).isEmpty, s"$name: rows the point-read graph lacks")
+    }
+    val unmaterialized = frames.collect {
+      case (name, _, pointDf) if !GraftSqlShims.readsMaterialized(pointDf) => name
+    }
+    assert(unmaterialized.isEmpty, s"frames not materialized: ${unmaterialized.mkString(", ")}")
+  }
+
+  test("point hops on the point-read graph neither generate KNOWS nor shuffle it") {
+    val hops = Seq(
+      graft.dsl.G(pg).V("Person", 0L).bothE("KNOWS").toDF,
+      graft.dsl.G(pg).V("Person", 0L).both("KNOWS").both("KNOWS").dedup().toDF)
+    hops.foreach { df =>
+      assert(df.collect().nonEmpty)
+      val p = df.queryExecution.executedPlan.toString
+      val shown = p.linesIterator.take(60).mkString("\n")
+      assert(p.contains("AdaptiveSparkPlan isFinalPlan=true"), "AQE did not finalize")
+      assert(!p.contains("Generate"), s"KNOWS explode in a point hop:\n$shown")
+      assert(!p.contains("Window"), s"Window in a point hop:\n$shown")
+      // KNOWS's (src, dst) `distinct` is the only hash exchange over both keys
+      assert(!"Exchange hashpartitioning\\(_src#\\d+L?, _dst#\\d+L?".r.findFirstIn(p).isDefined,
+        s"KNOWS distinct shuffle in a point hop:\n$shown")
+    }
   }
 }
