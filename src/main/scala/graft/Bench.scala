@@ -282,40 +282,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only reclaims broadcasts/accumulators when the
-      // DRIVER GCs; the default 30 min periodic GC never fires inside a
-      // ~10 min suite, so late queries inherit ~10k queries' worth of
-      // uncollected driver state (the round-11 residual in-suite tax on
-      // the serial q5x family after the block sweep landed).
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The per-round state releases (Supersteps.cut superseded /
-    // the per-query sweep below) unpersist locally-checkpointed RDDs —
-    // Spark warns once per block that the truncated lineage cannot
-    // recompute, which is exactly the intended contract (the new state
-    // is already materialized). Thousands of those lines would bury
-    // the bench tail the driver captures, so the RDD logger goes to
-    // ERROR for this main only; the library never touches log config.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // localSession declares sfDir's RI contracts. (Scale-tier queries
+    // read the replica dir, whose paths match no declaration; q01 is not
+    // in that subset.)
+    val spark = SparkEntry.localSession(sfDir)
 
     // Warm-up: a tiny end-to-end job (scan + shuffle) before any timing.
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
-    // RI contracts declared before ANY query is planned or timed — q01
-    // would otherwise mutate optimizer state mid-suite, making later
-    // plans depend on whether q01 ran first. (Scale-tier queries read
-    // the replica dir, whose paths match no declaration; q01 is not in
-    // that subset.)
-    graft.sources.GraphLoader.declareTpchRi(spark, sfDir)
 
     // Fail fast on a malformed flag: a silent fallback to the default
     // tier would spend ~4 min and overwrite the sidecar instead of

@@ -10,6 +10,43 @@ import graft.queries.{Extensions, Inventory, Oracles}
   */
 object SparkEntry {
 
+  /** The session every graft main runs in: `local[SPARK_GRAFT_CPUS]`
+    * (default: the JVM's processors) with one shuffle partition per core,
+    * UTC, [[graft.functions.GraftExtensions]], no UI, and the TPC-H RI
+    * contracts of `sfDir` declared before any query is planned. */
+  private[graft] def localSession(sfDir: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      // ContextCleaner only reclaims broadcasts/accumulators when the
+      // DRIVER GCs; the default 30 min periodic GC never fires inside a
+      // ~10 min suite, so late queries inherit ~10k queries' worth of
+      // uncollected driver state (the round-11 residual in-suite tax on
+      // the serial q5x family after the block sweep landed).
+      .config("spark.cleaner.periodicGC.interval", "1min")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The per-round state releases (Supersteps.cut superseded /
+    // Bench's and Verify's per-query sweep) unpersist locally-checkpointed
+    // RDDs — Spark warns once per block that the truncated lineage cannot
+    // recompute, which is exactly the intended contract (the new state
+    // is already materialized). Thousands of those lines would bury
+    // the log tail, so the RDD logger goes to ERROR for the mains only;
+    // the library never touches log config.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    // RI contracts declared before ANY query is planned or timed — q01
+    // would otherwise mutate optimizer state mid-session, making later
+    // plans depend on whether q01 ran first.
+    graft.sources.GraphLoader.declareTpchRi(spark, sfDir)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Inventory.q02_two_hop_fuse(spark, "/root/testdata/sf0.001")

@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // see Bench: drive the ContextCleaner inside a long suite
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // see Bench: the intended checkpoint releases would otherwise emit
-    // one lineage-truncation WARN per block into the driver's log tail
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    // Declare the fixture RI contracts up front so every query is
-    // planned under IDENTICAL optimizer state (q01 would otherwise
-    // install them mid-session, making later plans order-dependent).
-    graft.sources.GraphLoader.declareTpchRi(spark, sfDir)
+    val spark = SparkEntry.localSession(sfDir)
     new java.io.File(outDir).mkdirs()
     // Dev-loop filter: SPARK_GRAFT_ONLY=e31_pipeline,e29_dedup_clusters
     // runs just those queries (the driver leaves it unset -> all).

@@ -19,33 +19,6 @@ package object functions {
   def uint128(hi: Column, lo: Column): Column =
     struct(hi.cast("bigint").as("hi"), lo.cast("bigint").as("lo"))
 
-  /** 16-byte big-endian binary form of a (hi, lo) pair. Lexicographic
-    * binary comparison == unsigned 128-bit numeric order, which is the
-    * same trick the reference uses for RAMCloud keys
-    * (UInt128.java toBytes / big-endian layout). */
-  def uint128Bytes(hi: Column, lo: Column): Column = {
-    // to_binary(hex) would allocate strings; concat of two 8-byte
-    // big-endian longs stays in binary domain.
-    concat(longBytes(hi), longBytes(lo))
-  }
-
-  /** Big-endian 8-byte encoding of a long column (no UDF: shift+cast). */
-  private def longBytes(c: Column): Column = {
-    val l = c.cast("bigint")
-    // Build 8 single-byte binaries and concat. shiftrightunsigned keeps
-    // this purely in codegen'd integer ops.
-    val bytes = (7 to 0 by -1).map { i =>
-      // cast to tinyint wraps to the low 8 bits, then to 1-byte binary
-      shiftrightunsigned(l, i * 8).cast("tinyint").cast("binary")
-    }
-    concat(bytes: _*)
-  }
-
-  /** Lower-case hex display of a uint128 struct column, matching the
-    * reference's "%x" formatting (UInt128.java:285-292). */
-  def uint128Hex(id: Column): Column =
-    lower(concat(hex(id.getField("hi")), lpad(hex(id.getField("lo")), 16, "0")))
-
   /** Cosine similarity between two float-array columns, computed as a
     * sequential left fold in double precision (deterministic order) by
     * the native codegen'd [[DotProductExpr]] (norms = dot(v, v)). */

@@ -166,15 +166,12 @@ object GraphMutations {
     derived(g, g.vertexFrames + (label -> updated), g.edgeFrames)
   }
 
-  /** Vertex label fetch (O15) / property map fetch (O12) for point ids —
-    * thin wrappers over the unified view for API parity. POINT OPS: each
-    * call runs a driver-blocking collect of one row, mirroring the
-    * reference's single-vertex read. Never map these over an id set —
-    * use `PropertyGraph.hydrate` (batch hydration, one distributed join)
+  /** Property map fetch (O12) for one point id — a thin wrapper over the
+    * unified view for API parity. POINT OP: each call runs a
+    * driver-blocking collect of one row, mirroring the reference's
+    * single-vertex read. Never map it over an id set — use
+    * `PropertyGraph.hydrate` (batch hydration, one distributed join)
     * for anything bigger than a handful of lookups. */
-  def vertexLabel(g: PropertyGraph, id: Long, label: String): Option[String] =
-    if (g.verticesById(label, Seq(id)).isEmpty) None else Some(label)
-
   def vertexProperties(g: PropertyGraph, label: String, id: Long,
       keys: Seq[String] = Nil): Map[String, String] = {
     val rows = g.verticesById(label, Seq(id))

@@ -333,7 +333,15 @@ object GraphLoader {
     * (TorcHelper.java:352-370). At cluster scale, additionally bucketing
     * edges by `_src`/`_dst` would co-locate repeated hop joins
     * (SURVEY.md §4). */
-  def persist(g: PropertyGraph, path: String): Unit = {
+  def persist(g: PropertyGraph, path: String): Unit =
+    writeLayout(g, path)((df, dir) => df.write.mode("overwrite").parquet(dir))
+
+  /** The on-disk layout [[persist]] and [[persistCsv]] share: write
+    * each vertex frame to `vertices/label=…` and each edge frame to
+    * `edges/label=…/src_label=…/dst_label=…` with the format's `write`,
+    * then the variables sidecar. */
+  private def writeLayout(g: PropertyGraph, path: String)(
+      write: (DataFrame, String) => Unit): Unit = {
     // Each frame writes to its OWN directory, so the per-frame write
     // jobs are independent — submit them from driver threads and let
     // later jobs back-fill executors freed by the current job's tail
@@ -344,15 +352,38 @@ object GraphLoader {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration.Inf
     val writes =
-      g.vertexFrames.toSeq.map { case (label, df) => Future {
-        df.write.mode("overwrite").parquet(s"$path/vertices/label=$label")
-      }} ++
-      g.edgeFrames.toSeq.map { case (spec, df) => Future {
-        df.write.mode("overwrite").parquet(
-          s"$path/edges/label=${spec.label}/src_label=${spec.srcLabel}/dst_label=${spec.dstLabel}")
-      }}
+      g.vertexFrames.toSeq.map { case (label, df) =>
+        Future(write(df, s"$path/vertices/label=$label")) } ++
+      g.edgeFrames.toSeq.map { case (spec, df) => Future(write(df,
+        s"$path/edges/label=${spec.label}/src_label=${spec.srcLabel}/dst_label=${spec.dstLabel}")) }
     Await.result(Future.sequence(writes), Inf)
     writeVariables(g, path)
+  }
+
+  /** Re-open a graph written by [[writeLayout]], reading each frame's
+    * directory with the format's `read`. */
+  private def openLayout(spark: SparkSession, path: String)(
+      read: String => DataFrame): PropertyGraph = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    // `key=value` subdirectories of `p` as (value, full path)
+    def children(p: String, key: String): Seq[(String, String)] = {
+      val qualified = new org.apache.hadoop.fs.Path(p)
+      if (!fs.exists(qualified)) Nil
+      else fs.listStatus(qualified).toSeq.filter(_.isDirectory)
+        .map(_.getPath.getName).map(d => d.stripPrefix(s"$key=") -> s"$p/$d")
+    }
+    val vertices = children(s"$path/vertices", "label").map { case (label, dir) =>
+      label -> read(dir)
+    }.toMap
+    val edges = (for {
+      (label, ld) <- children(s"$path/edges", "label")
+      (srcLabel, sd) <- children(ld, "src_label")
+      (dstLabel, dd) <- children(sd, "dst_label")
+    } yield EdgeSpec(label, srcLabel, dstLabel) -> read(dd)).toMap
+    val g = new PropertyGraph(spark, vertices, edges)
+    readVariables(g, path)
+    g
   }
 
   /** Persist `graph.variables()` as a one-line-per-entry sidecar
@@ -456,26 +487,19 @@ object GraphLoader {
   /** Persist as CSV (the reference bulk-loads from LDBC CSVs,
     * README.md:83-117) with a DDL schema sidecar per frame — CSV carries
     * no types, so the sidecar makes the round trip lossless. */
-  def persistCsv(g: PropertyGraph, path: String): Unit = {
-    def writeOne(df: DataFrame, dir: String): Unit = {
+  def persistCsv(g: PropertyGraph, path: String): Unit =
+    writeLayout(g, path) { (df, dir) =>
       df.write.mode("overwrite").option("header", "true").csv(dir)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(dir), g.spark.sparkContext.hadoopConfiguration)
       val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_schema.ddl"), true)
       out.write(df.schema.toDDL.getBytes("UTF-8")); out.close()
     }
-    g.vertexFrames.foreach { case (label, df) =>
-      writeOne(df, s"$path/vertices/label=$label") }
-    g.edgeFrames.foreach { case (spec, df) =>
-      writeOne(df,
-        s"$path/edges/label=${spec.label}/src_label=${spec.srcLabel}/dst_label=${spec.dstLabel}") }
-    writeVariables(g, path)
-  }
 
   /** Re-open a CSV graph persisted by [[persistCsv]]. */
   def openCsv(spark: SparkSession, path: String): PropertyGraph = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def readOne(dir: String): DataFrame = {
+    openLayout(spark, path) { dir =>
       val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
       val in = fs.open(new org.apache.hadoop.fs.Path(dir, "_schema.ddl"))
       val ddl = new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
@@ -483,50 +507,9 @@ object GraphLoader {
       spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
         .option("header", "true").csv(dir)
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), conf)
-    def children(p: String): Seq[String] = {
-      val qp = new org.apache.hadoop.fs.Path(p)
-      if (!fs.exists(qp)) Nil
-      else fs.listStatus(qp).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-    }
-    val vertices = children(s"$path/vertices").map { d =>
-      d.stripPrefix("label=") -> readOne(s"$path/vertices/$d")
-    }.toMap
-    val edges = (for {
-      ld <- children(s"$path/edges"); label = ld.stripPrefix("label=")
-      sd <- children(s"$path/edges/$ld"); srcLabel = sd.stripPrefix("src_label=")
-      dd <- children(s"$path/edges/$ld/$sd"); dstLabel = dd.stripPrefix("dst_label=")
-    } yield EdgeSpec(label, srcLabel, dstLabel) ->
-        readOne(s"$path/edges/$ld/$sd/$dd")).toMap
-    val out = new PropertyGraph(spark, vertices, edges)
-    readVariables(out, path)
-    out
   }
 
   /** Re-open a graph persisted by [[persist]] (bulk-load round trip). */
-  def open(spark: SparkSession, path: String): PropertyGraph = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def children(p: String): Seq[String] = {
-      val qualified = new org.apache.hadoop.fs.Path(p)
-      if (!fs.exists(qualified)) Nil
-      else fs.listStatus(qualified).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-    }
-    val vertices = children(s"$path/vertices").map { d =>
-      val label = d.stripPrefix("label=")
-      label -> spark.read.parquet(s"$path/vertices/$d")
-    }.toMap
-    val edges = (for {
-      ld <- children(s"$path/edges")
-      label = ld.stripPrefix("label=")
-      sd <- children(s"$path/edges/$ld")
-      srcLabel = sd.stripPrefix("src_label=")
-      dd <- children(s"$path/edges/$ld/$sd")
-      dstLabel = dd.stripPrefix("dst_label=")
-    } yield EdgeSpec(label, srcLabel, dstLabel) ->
-        spark.read.parquet(s"$path/edges/$ld/$sd/$dd")).toMap
-    val g = new PropertyGraph(spark, vertices, edges)
-    readVariables(g, path)
-    g
-  }
+  def open(spark: SparkSession, path: String): PropertyGraph =
+    openLayout(spark, path)(spark.read.parquet(_))
 }

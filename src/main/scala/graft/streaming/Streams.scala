@@ -741,17 +741,6 @@ object Streams {
       }
   }
 
-  /** Start live corpus-health maintenance over a streaming document
-    * frame; read `maintainer.dashboard` any time. */
-  def startIncrementalHealth(docs: DataFrame,
-      maintainer: HealthMaintainer,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainer.sink)
-      .start()
-
   /** Live MinHash-index maintenance — the streaming face of
     * [[graft.ext.Snapshot.refreshSignatureIndex]]: each arriving
     * micro-batch UPSERTS its documents' signatures into the frozen
@@ -796,17 +785,6 @@ object Streams {
         if (releaseSuperseded) graft.plans.Supersteps.release(prev)
       }
   }
-
-  /** Start live signature-index maintenance over a streaming
-    * `(doc_id, text)` frame; read `maintainer.state` any time. */
-  def startIndexMaintenance(docs: DataFrame,
-      maintainer: SignatureIndexMaintainer,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainer.sink)
-      .start()
 
   /** Live BM25-index maintenance — the streaming face of
     * [[graft.ext.Snapshot.refreshBm25Index]] (VERDICT r14 task 4): a
@@ -886,17 +864,6 @@ object Streams {
       }
   }
 
-  /** Start live BM25-index maintenance over a streaming
-    * `(doc_id, text)` frame; read `maintainer.state` any time. */
-  def startBm25Maintenance(docs: DataFrame,
-      maintainer: Bm25Maintainer,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainer.sink)
-      .start()
-
   /** Live IVF-assignment maintenance — the streaming face of
     * [[graft.ext.Snapshot.refreshIvfAssignments]] (the e116 batch
     * seam): each arriving `(vec_id, embedding)` micro-batch UPSERTS
@@ -930,17 +897,6 @@ object Streams {
         if (releaseSuperseded) graft.plans.Supersteps.release(prev)
       }
   }
-
-  /** Start live IVF-assignment maintenance over a streaming
-    * `(vec_id, embedding)` frame; read `maintainer.state` any time. */
-  def startIvfAssignmentMaintenance(vectors: DataFrame,
-      maintainer: IvfAssignmentMaintainer,
-      checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainer.sink)
-      .start()
 
   /** Live co-occurrence-matrix maintenance — the streaming face of
     * [[graft.ext.Snapshot.refreshCooccurrence]]'s ADD side (VERDICT
@@ -1086,17 +1042,6 @@ object Streams {
       }
   }
 
-  /** Start the composed retrain-input maintenance over a streaming
-    * `(doc_id, text)` frame. */
-  def startRetrainInputIngest(docs: DataFrame,
-      maintainers: RetrainInputMaintainers,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainers.sink)
-      .start()
-
   /** ONE ingest stream, EVERY doc-grain live artifact — the streaming
     * twin of the e115 one-diff composition: a production crawl lands
     * once, and the SAME micro-batch folds into the health dashboard,
@@ -1141,27 +1086,6 @@ object Streams {
       }
   }
 
-  /** Start the composed crawl-ingest maintenance over a streaming
-    * `(doc_id, source, lang, text)` frame. */
-  def startCrawlIngest(docs: DataFrame, maintainers: CrawlMaintainers,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainers.sink)
-      .start()
-
-  /** Start the incremental-components maintenance over a streaming
-    * `(src, dst)` edge frame; read `maintainer.state` any time. */
-  def startIncrementalComponents(edges: DataFrame,
-      maintainer: ComponentsMaintainer,
-      checkpointDir: String): StreamingQuery =
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(maintainer.sink)
-      .start()
-
   /** STREAMING decontamination — drop arriving documents sharing any
     * n-gram with the static benchmark set, at ingest. Contamination is
     * PER-DOCUMENT against a static frame, so the exact batch operator
@@ -1176,14 +1100,10 @@ object Streams {
     * batch split yields exactly the batch operator's output. */
   def startDecontaminate(docs: DataFrame, benchmark: DataFrame, n: Int,
       path: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ext.Dedup.decontaminate(batch, benchmark, n)
-          .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
-      .start()
+    startForeachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.ext.Dedup.decontaminate(batch, benchmark, n)
+        .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+    }
 
   /** `foreachBatch` sink helper: write each micro-batch to
     * `<path>/batch_id=<id>` with overwrite — a replayed batch (after
@@ -1192,11 +1112,19 @@ object Streams {
     * effectively exactly-once end-to-end. */
   def startForeachBatchParquet(df: DataFrame, path: String,
       checkpointDir: String): StreamingQuery =
+    startForeachBatch(df, checkpointDir) { (batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+    }
+
+  /** Start `sink` over each append-mode micro-batch of the streaming
+    * `df` — every maintainer's `sink` above plugs in here
+    * (`startForeachBatch(docs, ckpt)(maintainer.sink)`); read the
+    * maintainer's state any time. */
+  def startForeachBatch(df: DataFrame, checkpointDir: String)(
+      sink: (Dataset[org.apache.spark.sql.Row], Long) => Unit): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
+      .foreachBatch(sink)
       .start()
 }

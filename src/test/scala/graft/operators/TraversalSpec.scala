@@ -73,6 +73,10 @@ class TraversalSpec extends SparkSpec {
     assert(fanned.df.count() == 4)
   }
 
+  test("SparkEntry.entry, the q02 two-hop fuse on sf0.001, returns rows") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
+  }
+
   test("intersect keeps only pairs with neighbor in set; subtract removes them") {
     val r = g.traverse(g.frontier("Person"), "Person", "LIVES_IN", Direction.Out, fillEdge = false)
     val city10 = Seq(10L).toDF(GC.Id)
