@@ -46,7 +46,10 @@ final case class G(graph: PropertyGraph) {
       Seq(label))
 
   /** Point lookup: `g.V("Customer", 1, 2, 3)` (O4 semantics: misses are
-    * simply absent). */
+    * simply absent). The frontier is point-rooted (see
+    * [[graft.graph.PropertyGraph]]): each hop broadcasts it, until a loop
+    * step ([[Step.untilFixpoint]], [[Step.repeatUntil]],
+    * [[Step.repeatEmitUntil]], [[Step.shortestPaths]]) drops the mark. */
   def V(label: String, ids: Long*): Step =
     Step(graph,
       graph.verticesById(label, ids).select(col(GC.Id), lit(label).as(GC.Label)),
@@ -200,7 +203,10 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
           // input rows x edges, same as the non-carried join semantics).
           val r = graph.traverse(sub.select(col(GC.Id)).distinct(), l, edgeLabel,
             dir, fillEdge, neighborLabels)
-          val rows = sub.select(col(GC.Id).as("_pid") +: carried.map(col): _*)
+          // a point-rooted frontier's rows are the build side here too
+          val pidRows = sub.select(col(GC.Id).as("_pid") +: carried.map(col): _*)
+          val rows =
+            if (PropertyGraph.isPointRooted(sub, GC.Id)) broadcast(pidRows) else pidRows
           val joined = r.df.join(rows, r.df(GC.Src) === rows("_pid"))
           val carriedOut = carried.map {
             case PathCol => concat(col(PathCol),
@@ -300,7 +306,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
       emitted.withColumn(Step.DepthCol, lit(d))
     }
     copy(
-      df = dfs.reduce(_.unionByName(_, allowMissingColumns = true)),
+      df = unionBranches(dfs),
       labels = fs.flatMap(_._2.labels).distinct.sorted,
       captures = fs.map(_._2.captures).foldLeft(captures)(mergeCaptures))
   }
@@ -317,7 +323,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * guarantees termination on cyclic graphs. For whole-graph iterative
     * analytics prefer [[graft.analytics.GraphXBridge]]. */
   def untilFixpoint(maxIter: Int = 20)(hop: Step => Step): Step = {
-    var visited = df.select(col(GC.Id), col(GC.Label))
+    var visited = unrooted.df.select(col(GC.Id), col(GC.Label))
       .dropDuplicates(GC.Id, GC.Label).localCheckpoint()
     var frontier = copy(df = visited)
     var seenLabels = labels.toSet
@@ -367,7 +373,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * action. */
   def repeatUntil(pred: Column, maxIter: Int = 20)(hop: Step => Step): Step = {
     require(maxIter >= 1, s"repeatUntil needs maxIter >= 1, got $maxIter")
-    var cur = this
+    var cur = unrooted
     var exited: DataFrame = null
     var exitLabels = Set.empty[String]
     var exitCaptures = captures
@@ -413,9 +419,9 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     val outs = Seq.newBuilder[DataFrame]
     var outLabels = Set.empty[String]
     var outCaptures = captures
-    var cur = this
+    var cur = unrooted
     if (emitInitial) {
-      val e0 = if (emitPred == null) df else partitionByPredicate(emitPred)._1
+      val e0 = if (emitPred == null) cur.df else cur.partitionByPredicate(emitPred)._1
       outs += e0.withColumn(Step.DepthCol, lit(0))
       outLabels ++= labels
     }
@@ -565,7 +571,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     require(branches.nonEmpty, "union needs at least one branch")
     val outs = branches.map(b => b(this))
     copy(
-      df = outs.map(_.df).reduce(_.unionByName(_, allowMissingColumns = true)),
+      df = unionBranches(outs.map(_.df)),
       labels = outs.flatMap(_.labels).distinct.sorted,
       captures = outs.foldLeft(captures)((a, o) => mergeCaptures(a, o.captures)))
   }
@@ -577,7 +583,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
   def optional(branch: Step => Step): Step = {
     val (out, missed) = branchSplit(branch)
     copy(
-      df = out.df.unionByName(missed, allowMissingColumns = true),
+      df = unionBranches(Seq(out.df, missed)),
       labels = (out.labels ++ labels).distinct.sorted,
       captures = mergeCaptures(captures, out.captures))
   }
@@ -588,19 +594,18 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
   def coalesce(branches: (Step => Step)*): Step = {
     require(branches.nonEmpty, "coalesce needs at least one branch")
     var remaining = this
-    var accDf: DataFrame = null
+    val outs = Seq.newBuilder[DataFrame]
     var accLabels = Seq.empty[String]
     var accCaptures = captures
     branches.foreach { b =>
       val (out, missed) = remaining.branchSplit(b)
-      accDf =
-        if (accDf == null) out.df
-        else accDf.unionByName(out.df, allowMissingColumns = true)
+      outs += out.df
       accLabels = (accLabels ++ out.labels).distinct
       accCaptures = mergeCaptures(accCaptures, out.captures)
       remaining = remaining.copy(df = missed)
     }
-    copy(df = accDf, labels = accLabels.sorted, captures = accCaptures)
+    copy(df = unionBranches(outs.result()), labels = accLabels.sorted,
+      captures = accCaptures)
   }
 
   /** Gremlin `choose(pred, onTrue, onFalse)`: traversers satisfying the
@@ -614,7 +619,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     val a = onTrue(copy(df = pass))
     val b = onFalse(copy(df = fail))
     copy(
-      df = a.df.unionByName(b.df, allowMissingColumns = true),
+      df = unionBranches(Seq(a.df, b.df)),
       labels = (a.labels ++ b.labels).distinct.sorted,
       captures = mergeCaptures(a.captures, b.captures))
   }
@@ -1215,7 +1220,7 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     val tag = Step.nextBranchTag()
     val src = s"${CapPrefix}__sp$tag"
     val self = struct(col(GC.Label).as("label"), col(GC.Id).cast("bigint").as("id"))
-    val seed = df.select(col(GC.Label), col(GC.Id))
+    val seed = unrooted.df.select(col(GC.Label), col(GC.Id))
       .dropDuplicates(GC.Label, GC.Id)
       .withColumn(src, self).withColumn(PathCol, array(self))
       .localCheckpoint()
@@ -1271,6 +1276,10 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
   /** Current frontier as (id, label[, eprops]) DataFrame. */
   def toDF: DataFrame = df
 
+  /** This step without the point-rooted mark — where a loop step starts,
+    * since its output is not a fixed number of hops from the ids. */
+  private def unrooted: Step = copy(df = PropertyGraph.unmarked(df))
+
   private val PathCol = "_path"
   private val CapPrefix = "_as_"
   private def isCarried(c: String): Boolean =
@@ -1286,6 +1295,14 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     (a.keySet ++ b.keySet).map { k =>
       k -> (a.getOrElse(k, Nil) ++ b.getOrElse(k, Nil)).distinct.sorted
     }.toMap
+
+  /** `unionByName` of branch frontiers. Spark's Union keeps the FIRST
+    * child's column metadata, so the point-rooted mark is kept only when
+    * every branch carries it (a branch through a loop step does not). */
+  private def unionBranches(dfs: Seq[DataFrame]): DataFrame = {
+    val u = dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    if (dfs.forall(PropertyGraph.isPointRooted(_, GC.Id))) u else PropertyGraph.unmarked(u)
+  }
 
   private def nonEmptyUnion(parts: Seq[DataFrame]): DataFrame =
     if (parts.isEmpty) df.where(lit(false)) // empty result, same schema

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
 
 import graft.model.{Direction, EdgeSpec, GraphColumns => GC}
 import graft.operators.TraversalResult
@@ -20,8 +21,22 @@ import graft.operators.TraversalResult
   * partitioned Parquet layout (SURVEY.md §4).
   *
   * Unlike the reference (which forbids full scans, TorcGraph.java:368-370),
-  * scans here are native and point lookups are filters — the inversion
-  * called out in SURVEY.md §1.1.
+  * scans here are native — the inversion called out in SURVEY.md §1.1.
+  * A point lookup ([[verticesById]]) is a filter, and its result is
+  * POINT-ROOTED: its id column carries a metadata mark saying every row
+  * is a fixed number of hops from literal ids. Catalyst sizes join sides
+  * by plan estimates and cannot see that such a frontier is small, so it
+  * would broadcast or shuffle the whole graph frame instead. A marked
+  * frontier is therefore always the build (broadcast) side of a hop
+  * ([[traverse]]) and of hydration ([[hydrate]]), and the graph frame
+  * streams past it — the reference's keyed read of only the named
+  * vertices' adjacency (TorcHelper.java:352-370). The mark rides on the
+  * DataFrame itself (aliases, filters, joins, aggregates, limits and
+  * `localCheckpoint` carry column metadata), so a caller's own `toDF`
+  * keeps it. It stops at steps that are not a fixed number of hops from
+  * the ids: the DSL's loop steps drop it ([[PropertyGraph.unmarked]]).
+  * Unmarked frames — scans, `has` over a scan, [[traverseAll]] — plan
+  * exactly as Catalyst chooses.
   *
   * Each vertex frame carries `_vid: bigint` (the natural key within the
   * label's id space) plus its natural property columns. Each edge frame
@@ -57,9 +72,12 @@ final class PropertyGraph(
 
   /** Point lookup by ids — the reference's `vertices(Object... ids)`
     * (TorcGraph.java:327-373) becomes a filter that Catalyst pushes into
-    * the Parquet scan. Misses are simply absent (no rows). */
+    * the Parquet scan. Misses are simply absent (no rows). The result is
+    * point-rooted (see the class doc): hops and hydration from it
+    * broadcast it and stream the graph frame. */
   def verticesById(label: String, ids: Seq[Long]): DataFrame =
     vertexFrames(label).where(col(GC.Id).isin(ids: _*))
+      .withMetadata(GC.Id, PropertyGraph.PointRooted)
 
   /** A frontier (id set) of every vertex of a label. */
   def frontier(label: String): DataFrame =
@@ -90,6 +108,11 @@ final class PropertyGraph(
     * 920-1401): Spark's shuffle/broadcast machinery replaces hand-rolled
     * async read batching (SURVEY.md §3.4).
     *
+    * Build side: a point-rooted frontier (see the class doc) is
+    * broadcast and the edge frame streams, and the output's `_dst` stays
+    * point-rooted. Any other frontier joins as Catalyst chooses, with an
+    * unmarked output.
+    *
     * @param frontier DataFrame with column `_vid` (set semantics: callers
     *                 pass unique ids, as the reference dedups frontiers
     *                 before fetch, TorcVertexStep.java:87-100)
@@ -111,7 +134,12 @@ final class PropertyGraph(
       neighborLabels: Seq[String] = Nil): TraversalResult = {
 
     // null frontier = the traverseAll fast path: no frontier join at all
-    val f = Option(frontier).map(_.select(col(GC.Id).as("_fid"))).orNull
+    val point = frontier != null && PropertyGraph.isPointRooted(frontier, GC.Id)
+    val f = Option(frontier).map { fr =>
+      val ids = fr.select(col(GC.Id).as("_fid"))
+      if (point) broadcast(ids) else ids
+    }.orNull
+    val dstMeta = if (point) PropertyGraph.PointRooted else Metadata.empty
 
     def expand(outbound: Boolean): Seq[DataFrame] = {
       val specs = edgeFrames.keys.toSeq
@@ -130,7 +158,7 @@ final class PropertyGraph(
         val base = Seq(
           srcId.as(GC.Src),
           lit(frontierLabel).as(GC.SrcLabel),
-          dstId.as(GC.Dst),
+          dstId.as(GC.Dst, dstMeta),
           lit(dstLab).as(GC.DstLabel))
         // plain col(), not e(col): dataset-tagged refs survive into the
         // projected output and trip DetectAmbiguousSelfJoin when callers
@@ -158,7 +186,10 @@ final class PropertyGraph(
   /** Batch property hydration — the reference's `fillProperties`
     * (TorcGraph.java:587-734, multiread batches of 2048): a join against
     * the label's vertex frame; Catalyst column pruning plays the role of
-    * the single-key projection path (TorcGraph.java:693-697).
+    * the single-key projection path (TorcGraph.java:693-697). When
+    * `df`'s `idCol` is point-rooted (see the class doc), `df` is the
+    * broadcast side and the vertex frame streams; otherwise Catalyst
+    * picks the sides.
     *
     * @param df any DataFrame; @param idCol its vertex-id column
     * @param label vertex label to hydrate from
@@ -168,7 +199,8 @@ final class PropertyGraph(
     val v = vertexFrames(label)
     val wanted = if (keys.isEmpty) v.columns.toSeq.filterNot(_ == GC.Id) else keys
     val proj = v.select(col(GC.Id).as("_hid") +: wanted.map(col): _*)
-    df.join(proj, df(idCol) === proj("_hid")).drop("_hid")
+    val d = if (PropertyGraph.isPointRooted(df, idCol)) broadcast(df) else df
+    d.join(proj, d(idCol) === proj("_hid")).drop("_hid")
   }
 
   /** Vertex-induced subgraph — the Gremlin `subgraph()` side-effect step
@@ -248,4 +280,27 @@ final class PropertyGraph(
 
   private def propColumns(spec: EdgeSpec): Seq[String] =
     edgeFrames(spec).columns.toSeq.filterNot(c => c == GC.Src || c == GC.Dst)
+}
+
+object PropertyGraph {
+
+  private val PointRootedKey = "graft.pointRooted"
+
+  /** The point-rooted mark: metadata on an id column whose every row is
+    * a fixed number of hops from literal ids (see the class doc). */
+  private[graft] val PointRooted: Metadata =
+    new MetadataBuilder().putBoolean(PointRootedKey, true).build()
+
+  /** Is `df`'s top-level column `idCol` point-rooted? */
+  def isPointRooted(df: DataFrame, idCol: String): Boolean =
+    df.schema.find(_.name.equalsIgnoreCase(idCol)).exists { f =>
+      f.metadata.contains(PointRootedKey) && f.metadata.getBoolean(PointRootedKey)
+    }
+
+  /** `df` with the point-rooted mark dropped from its `_vid` — for steps
+    * whose output is not a fixed number of hops from the ids (loops,
+    * unions with such a branch). An unmarked `df` is returned as is, so
+    * its plan does not change. */
+  private[graft] def unmarked(df: DataFrame): DataFrame =
+    if (isPointRooted(df, GC.Id)) df.withMetadata(GC.Id, Metadata.empty) else df
 }

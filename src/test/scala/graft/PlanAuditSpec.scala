@@ -366,6 +366,88 @@ class PlanAuditSpec extends SparkSpec {
       "comment frames not materialized in q36")
   }
 
+  test("point-rooted read shapes build every join on the frontier, never on a whole frame") {
+    // The six read shapes of the interactive point-op mix on the
+    // point-read SNB graph (checkpointed frames) and the TPC-H graph.
+    // Catalyst sizes join sides by plan estimates and cannot see that a
+    // frontier rooted at literal ids is small; left alone it broadcasts
+    // lineitem, Post or KNOWS, or shuffles REPLY_OF through
+    // SortMergeJoins. The point-rooted mark makes the frontier the build
+    // side of every hop and hydration, so no shape may plan a
+    // SortMergeJoin, and no BroadcastExchange may sit over an
+    // unfiltered scan of a whole frame.
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression, IsNotNull}
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.functions._
+    import graft.dsl.G
+    import graft.model.{GraphColumns => GC}
+    import graft.sources.GraphLoader
+
+    def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def notNullOnly(e: Expression): Boolean = e match {
+      case _: IsNotNull => true
+      case And(l, r) => notNullOnly(l) && notNullOnly(r)
+      case _ => false
+    }
+    // a whole frame: scans under projections and inferred null checks only
+    def wholeFrame(p: SparkPlan): Boolean = p match {
+      case f: FilterExec if !notNullOnly(f.condition) => false
+      case _: BaseJoinExec => false
+      case leaf if leaf.children.isEmpty => true
+      case other => other.children.forall(wholeFrame)
+    }
+    def broadcastsWholeFrame(p: SparkPlan): Boolean =
+      p.collect { case b: BroadcastExchangeExec => b }.exists(b => wholeFrame(b.child))
+
+    val snb = GraphLoader.snb(spark, sf0001, materializeComments = true)
+    val tpch = GraphLoader.tpch(spark, sf0001)
+    val g = G(snb)
+    val shapes = Seq(
+      "person" -> snb.verticesById("Person", Seq(19L))
+        .select(GC.Id, "name", "acctbal", "segment", "city"),
+      "friends" -> g.V("Person", 19L).bothE("KNOWS").toDF
+        .select(col(GC.Id), col("since")).orderBy(desc("since"), asc(GC.Id)).limit(20),
+      "posts" -> snb.hydrate(g.V("Person", 19L).in("HAS_CREATOR", "Post").toDF.select(col(GC.Id)),
+          GC.Id, "Post", Seq("created", "score"))
+        .select(col(GC.Id), col("created"), col("score"))
+        .orderBy(desc("created"), asc(GC.Id)).limit(10),
+      "fof" -> g.V("Person", 19L).both("KNOWS").both("KNOWS").dedup().toDF
+        .where(col(GC.Id) =!= 19L).select(col(GC.Id)).orderBy(GC.Id).limit(20),
+      "thread" -> g.V("Post", 1L).repeatEmit(3)(_.in("REPLY_OF", "Comment")).toDF
+        .select(col(GC.Id), col(graft.dsl.Step.DepthCol)),
+      "order_lines" -> G(tpch).V("Customer", 19L).in("PLACED_BY", "Order")
+        .outE("CONTAINS", "Part").toDF.select(col(GC.Id), col("l_extendedprice"))
+        .orderBy(desc("l_extendedprice"), asc(GC.Id)).limit(20))
+    shapes.foreach { case (n, df) =>
+      val p = physical(df)
+      assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty, s"$n plans a SortMergeJoin:\n$p")
+      assert(!broadcastsWholeFrame(p), s"$n broadcasts a whole frame:\n$p")
+    }
+
+    // Control: an unmarked frontier carries no broadcast hint. At
+    // sf0.001 every frame is under the broadcast threshold, so Catalyst
+    // would broadcast the Person scan on its own; with the threshold off,
+    // only a hint can plan a broadcast.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val scan = physical(g.V("Person").out("KNOWS").toDF)
+      assert(scan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"an unmarked frontier was broadcast:\n$scan")
+      val point = physical(g.V("Person", 19L).out("KNOWS").toDF)
+      assert(point.collect { case b: BroadcastExchangeExec => b }.nonEmpty,
+        s"a point-rooted frontier was not broadcast:\n$point")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("pipeline composition (e31) is one pruned plan end to end") {
     // The composed pipeline references `documents` in several subtrees
     // (dedup window, band self-join, Jaccard verify, survivor anti-join);

@@ -873,4 +873,85 @@ class GSpec extends SparkSpec {
     assert(got == Set(("Customer", 5L), ("Supplier", 5L), ("Supplier", 7L)))
     assert(picked.labels.toSet == Set("Customer", "Supplier"))
   }
+
+  test("point-rooted traversals == the same traversals rooted on V(label).hasId (multiset law)") {
+    // V(label, ids) marks its frontier point-rooted, so every hop and
+    // hydration below broadcasts the frontier; V(label).hasId(ids) is
+    // the same vertex set left unmarked, planned as Catalyst chooses.
+    // The build side must not change a single row.
+    import graft.graph.PropertyGraph
+    import graft.model.{GraphColumns => GC}
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    def law(name: String, graph: PropertyGraph, label: String, ids: Seq[Long])(
+        f: Step => org.apache.spark.sql.DataFrame): Unit = {
+      val point = f(G(graph).V(label, ids: _*))
+      val scan = f(G(graph).V(label).hasId(ids: _*))
+      assert(PropertyGraph.isPointRooted(point, GC.Id), s"$name: point frontier lost its mark")
+      assert(!PropertyGraph.isPointRooted(scan, GC.Id), s"$name: hasId frontier is marked")
+      val (p, q) = (rows(point), rows(scan))
+      assert(p.nonEmpty, s"$name: empty on both sides proves nothing")
+      assert(p == q, s"$name: point-rooted ${p.size} rows vs hasId ${q.size} rows")
+    }
+    // a supernode (p % 97 == 0), plain persons, a repeated id and a miss
+    val people = Seq(0L, 19L, 97L, 19L, 999999L)
+    val snbGraphs = Seq(
+      "lazy" -> GraphLoader.snb(spark, sf0001),
+      "point-read" -> GraphLoader.snb(spark, sf0001, materializeComments = true))
+    snbGraphs.foreach { case (mode, sg) =>
+      def snb(n: String, label: String = "Person", ids: Seq[Long] = people)(
+          f: Step => org.apache.spark.sql.DataFrame): Unit = law(s"$mode $n", sg, label, ids)(f)
+      snb("out")(_.out("KNOWS").toDF)
+      snb("in")(_.in("KNOWS").toDF)
+      snb("both")(_.both("KNOWS").toDF)
+      snb("bothE")(_.bothE("KNOWS").toDF)
+      snb("outE")(_.outE("KNOWS").toDF)
+      snb("2-hop dedup")(_.both("KNOWS").both("KNOWS").dedup().toDF)
+      snb("repeatEmit(3)", "Post", Seq(1L, 4L, 4L, 999999L))(
+        _.repeatEmit(3)(_.in("REPLY_OF", "Comment")).toDF)
+      snb("hydrate") { s =>
+        sg.hydrate(s.in("HAS_CREATOR", "Post").toDF, GC.Id, "Post", Seq("created", "score"))
+      }
+    }
+    val tg = g.graph
+    val custs = Seq(19L, 112L, 19L, 999999L)
+    law("tpch out", tg, "Customer", custs)(_.out("IN_NATION").toDF)
+    law("tpch in", tg, "Customer", custs)(_.in("PLACED_BY", "Order").toDF)
+    law("tpch both", tg, "Nation", Seq(0L, 5L, 5L, 99L))(_.both("IN_NATION").toDF)
+    law("tpch bothE", tg, "Nation", Seq(0L, 5L, 99L))(_.bothE("IN_NATION").toDF)
+    law("tpch 2-hop outE", tg, "Customer", custs)(
+      _.in("PLACED_BY", "Order").outE("CONTAINS", "Part").toDF)
+    law("tpch 2-hop dedup", tg, "Customer", custs)(
+      _.in("PLACED_BY", "Order").out("CONTAINS", "Part").dedup().toDF)
+    law("tpch repeatEmit(3)", tg, "Nation", Seq(0L, 0L, 99L))(
+      _.repeatEmit(3)(_.both("IN_NATION")).toDF)
+    law("tpch hydrate", tg, "Customer", custs) { s =>
+      tg.hydrate(s.in("PLACED_BY", "Order").toDF, GC.Id, "Order")
+    }
+  }
+
+  test("the point-rooted mark survives bounded steps and stops at loops") {
+    import graft.graph.PropertyGraph.isPointRooted
+    import graft.model.{GraphColumns => GC}
+    val sg = GraphLoader.snb(spark, sf0001, materializeComments = true)
+    val p = G(sg).V("Person", 19L)
+    def marked(s: Step) = isPointRooted(s.toDF, GC.Id)
+    // hops, both's unionByName, filters, dedup, limit, captures, the
+    // fixed unroll's unionByName and its localCheckpointed form
+    Seq(p, p.out("KNOWS"), p.both("KNOWS"), p.both("KNOWS").where(col(GC.Id) > 3L),
+        p.both("KNOWS").has("acctbal", 0.0), p.both("KNOWS").dedup(),
+        p.both("KNOWS").limit(5), p.as("a").both("KNOWS"),
+        p.repeatEmit(2)(_.both("KNOWS")),
+        p.repeatEmit(2, materialize = true)(_.both("KNOWS")),
+        p.union(_.out("KNOWS"), _.in("KNOWS")))
+      .zipWithIndex.foreach { case (s, i) => assert(marked(s), s"bounded step $i lost the mark") }
+    assert(isPointRooted(p.both("KNOWS").toDF.localCheckpoint(), GC.Id))
+    // loop steps, and a union with a loop branch, drop it
+    Seq(p.untilFixpoint(3)(_.both("KNOWS")),
+        p.repeatUntil(col(GC.Id) > 100L, 3)(_.both("KNOWS")),
+        p.repeatEmitUntil(col(GC.Id) > 100L, 3)(_.both("KNOWS")),
+        p.union(_.out("KNOWS"), _.untilFixpoint(3)(_.both("KNOWS"))))
+      .zipWithIndex.foreach { case (s, i) => assert(!marked(s), s"loop step $i kept the mark") }
+    assert(!marked(G(sg).V("Person").out("KNOWS")), "a scan frontier is marked")
+  }
 }
