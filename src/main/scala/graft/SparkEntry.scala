@@ -31,8 +31,9 @@ object SparkEntry {
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The per-round state releases (Supersteps.cut superseded /
-    // Bench's and Verify's per-query sweep) unpersist locally-checkpointed
+    // The superstep driver's releases of superseded state
+    // (Supersteps.rounds / closure) and Bench's and Verify's per-query
+    // sweep unpersist locally-checkpointed
     // RDDs — Spark warns once per block that the truncated lineage cannot
     // recompute, which is exactly the intended contract (the new state
     // is already materialized). Thousands of those lines would bury

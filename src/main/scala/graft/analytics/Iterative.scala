@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.graph.PropertyGraph
-import graft.plans.Supersteps.escape
+import graft.plans.Supersteps.{Bounded, Converge, closure, escape, rounds}
 import graft.model.{GraphColumns => GC}
 
 /** DataFrame-native iterative whole-graph analytics — the Tungsten twin
@@ -14,22 +14,19 @@ import graft.model.{GraphColumns => GC}
   * `/root/reference/pom.xml:19-27` — the reference itself throws on
   * `compute()`, TorcGraph.java:315-323, so this is extension surface).
   *
-  * Both run the superstep discipline the rest of the engine uses
-  * (one distributed join + `localCheckpoint` per round, `Observation`
-  * for the convergence count so each round costs exactly ONE action —
-  * the e29 lesson): rows stay in whole-stage codegen instead of GraphX's
-  * RDD serialization, which is what lets the same loop run against a
-  * 100-TB edge frame. Vertices ride as the packed 64-bit
+  * Every superstep loop here but [[sccAssignments]]' outer peel runs
+  * through the one driver ([[graft.plans.Supersteps.rounds]] /
+  * [[graft.plans.Supersteps.closure]]: one cut per round, the progress
+  * count observed on that cut, so each round costs exactly ONE action —
+  * the e29 lesson): rows stay in whole-stage codegen instead of
+  * GraphX's RDD serialization, which is what lets the same loop run
+  * against a 100-TB edge frame. Vertices ride as the packed 64-bit
   * `labelId << 48 | key` id ([[GraphXBridge.pack]]) so multi-label
   * graphs fold into one LongType column — comparisons stay primitive,
   * no struct shuffles. GraphX remains the fallback for adversarially
   * deep components (Pregel's large-star/small-star halves rounds).
   */
 object Iterative {
-
-  /** Uniquifies Observation names across repeated loop invocations in
-    * one session (the incremental merge runs the loop once per batch). */
-  private val obsTag = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Row cap under which an iterative fixpoint collects its BOUNDED
     * inputs and resolves the loop on the driver instead of running
@@ -358,19 +355,13 @@ object Iterative {
     else fwd
   }
 
-  /** Connected components (undirected) as the min-label loop over the
-    * packed id space — each round one equi-join + map-side-combined min
-    * aggregation, convergence observed on the round's single checkpoint
-    * action. Rounds are bounded by the longest min-label propagation
-    * chain (graph diameter). Output:
-    * `(label, _vid, component_label, component_id)` — the component
-    * representative is the packed-smallest member, so reruns agree
-    * under any partitioning. */
   /** The min-label fixpoint loop shared by [[connectedComponents]] and
     * the incremental merge: `edges` is the undirected-DOUBLED `(_s, _d)`
     * frame, `init` the starting `(_v, _lbl)` assignment; each round is
-    * one observed checkpoint action (the e29 single-action discipline).
-    * Converges to `_lbl(v)` = min initial label reachable from v.
+    * one [[graft.plans.Supersteps.rounds]] round, its changed-label
+    * count observed on the round's cut (the e29 single-action
+    * discipline). Converges to `_lbl(v)` = min initial label reachable
+    * from v.
     *
     * Each round does the neighbor-min step AND a POINTER JUMP
     * (`_lbl := _lbl(_lbl)`, one self-equi-join): a label is always the
@@ -381,54 +372,38 @@ object Iterative {
     * is what keeps the per-round job floor from dominating
     * fragmented-batch merges (q49). Fixpoint detection is unchanged:
     * zero decreases across BOTH steps is exactly the old loop's
-    * convergence condition (at the fixpoint labels are idempotent). */
+    * convergence condition (at the fixpoint labels are idempotent).
+    *
+    * A silent cap exit is UNSOUND for every caller: connected
+    * components would under-merge, and the SCC peel would certify
+    * F == B from non-minimal labels (caught by the q54 thinned-graph
+    * fixture: directed chains where the pointer jump cannot shortcut —
+    * jump targets can be their own minima — need diameter rounds, and
+    * capping mid-flight mislabeled 2.4% of vertices). So the loop
+    * converges or throws. */
   // (A 2-steps-per-cut fusion was tried in round 11 and MEASURED SLOWER
   // — q42 3.1 -> 5.7 s, q54 5.5 -> 8.0 s: the family's cost is the
   // per-step shuffle stages, not the job-launch floor, so halving the
   // action count while doubling per-action shuffles loses to the
   // coarser convergence granularity. One observed step per cut stands.)
   private[graft] def minLabelLoop(edges: DataFrame, init: DataFrame,
-      maxIter: Int): DataFrame = {
-    var labels = init
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+      maxIter: Int): DataFrame =
+    rounds(init, maxIter, Converge("min-label loop", "maxIter")) { (labels, round) =>
       val nbrMin = edges.join(labels, edges("_d") === labels("_v"))
         .groupBy(col("_s")).agg(min(col("_lbl")).as("_nl"))
       val stepped = labels.join(nbrMin, labels("_v") === nbrMin("_s"), "left")
         .select(labels("_v"), col("_lbl").as("_old"),
           least(col("_lbl"), coalesce(col("_nl"), col("_lbl"))).as("_l1"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"cc_it_${iter}_${obsTag.incrementAndGet()}")
-      val updated = stepped.join(
+      val jumped = least(stepped("_l1"), coalesce(col("_jl"), stepped("_l1")))
+      // the round references `labels` 4x, so carried stats would
+      // compound 4^n — the driver's cut drops them
+      round.progress(stepped.join(
           stepped.select(col("_v").as("_jv"), col("_l1").as("_jl")),
           stepped("_l1") === col("_jv"), "left")
-        .select(stepped("_v"),
-          least(stepped("_l1"), coalesce(col("_jl"), stepped("_l1"))).as("_lbl"),
-          (least(stepped("_l1"), coalesce(col("_jl"), stepped("_l1")))
-            < stepped("_old")).as("_chg"))
-        .observe(obs, sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
-      // loop-carried: cut stats, not just lineage (Supersteps scaladoc —
-      // this round references `labels` 4x, so carried stats compound 4^n).
-      // The superseded round's blocks are released once the new cut is
-      // live — but never `init`, which belongs to the caller.
-      val next = graft.plans.Supersteps.cut(updated,
-        if (labels eq init) Nil else Seq(labels))
-      done = obs.get("changed").asInstanceOf[Long] == 0L
-      labels = next.drop("_chg")
-      iter += 1
+        .select(stepped("_v"), jumped.as("_lbl"),
+          (jumped < stepped("_old")).as("_chg")),
+        sum(when(col("_chg"), 1L).otherwise(0L))).drop("_chg")
     }
-    // a silent cap exit is UNSOUND for every caller: connected
-    // components would under-merge, and the SCC peel would certify
-    // F == B from non-minimal labels (caught by the q54 thinned-graph
-    // fixture: directed chains where the pointer jump cannot shortcut
-    // — jump targets can be their own minima — need diameter rounds,
-    // and capping mid-flight mislabeled 2.4% of vertices). Converge or
-    // throw.
-    require(done,
-      s"min-label loop did not converge in $maxIter rounds; raise maxIter")
-    labels
-  }
 
   /** [[minLabelLoop]] behind the size-adaptive escape (see
     * DefaultSmallGraphRows): a bounded graph resolves its fixpoint with
@@ -441,6 +416,14 @@ object Iterative {
         minLabelDriver(pairs(e), pairs(i)), "_v", "_lbl")
     } { case (Seq(e, i), _) => minLabelLoop(e, i, maxIter) }
 
+  /** Connected components (undirected) as the min-label loop over the
+    * packed id space — each round one equi-join + map-side-combined min
+    * aggregation, convergence observed on the round's single checkpoint
+    * action. Rounds are bounded by the longest min-label propagation
+    * chain (graph diameter). Output:
+    * `(label, _vid, component_label, component_id)` — the component
+    * representative is the packed-smallest member, so reruns agree
+    * under any partitioning. */
   def connectedComponents(g: PropertyGraph,
       edgeLabels: Set[String] = Set.empty, maxIter: Int = 30,
       smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
@@ -621,40 +604,21 @@ object Iterative {
         packedVertices(g, incidentLabels(g, edgeLabels))), smallGraphRows) {
       case Seq(e, v) => localPairs(g.spark,
         kCoreDriver(pairs(e), v.map(_.getLong(0)), k, maxRounds), "_v", "_deg")
-    } { case (Seq(edges, seed), Seq(_, seedSize)) =>
-      var surv = seed
-      // one action per round: the observed checkpoint (the e29 lesson) —
-      // the previous round's size rides in a driver var, never re-counted
-      // (the seed count rides the seed checkpoint the same way)
-      var size = seedSize
-      var round = 0
-      var done = false
-      while (!done && round < maxRounds) {
-        val live = edges
-          .join(surv.select(col("_v").as("_sv")), col("_s") === col("_sv"), "left_semi")
-          .join(surv.select(col("_v").as("_dv")), col("_d") === col("_dv"), "left_semi")
-        val deg = live.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-        val obs = new org.apache.spark.sql.Observation(s"kcore_r$round")
-        // loop-carried: surv is referenced 3x per round — cut stats;
-        // the superseded round's blocks are released once the new cut is
-        // live — but never the seed, which may be the caller's checkpoint
-        val next = graft.plans.Supersteps.cut(
-          surv.join(deg, surv("_v") === deg("_s"), "left")
-            .where(coalesce(col("_deg"), lit(0L)) >= k)
-            .select(col("_v"))
-            .observe(obs, count(lit(1)).as("n")),
-          superseded = if (surv eq seed) Nil else Seq(surv))
-        val after = obs.get("n").asInstanceOf[Long]
-        done = after == size
-        size = after
-        surv = next
-        round += 1
-      }
-      val live = edges
+    } { case (Seq(edges, seed), _) =>
+      def liveDegrees(surv: DataFrame): DataFrame = edges
         .join(surv.select(col("_v").as("_sv")), col("_s") === col("_sv"), "left_semi")
         .join(surv.select(col("_v").as("_dv")), col("_d") === col("_dv"), "left_semi")
-      val deg = live.groupBy(col("_s").as("_v")).agg(count(lit(1)).as("_deg"))
-      surv.join(deg, Seq("_v"), "left")
+        .groupBy(col("_s").as("_v")).agg(count(lit(1)).as("_deg"))
+      // bounded: the cap is the contract; a round that drops nothing
+      // (its drop count observed on its cut) ends the peel early
+      val surv = rounds(seed, maxRounds, Bounded) { (surv, round) =>
+        val deg = liveDegrees(surv).withColumnRenamed("_v", "_gv")
+        round.progress(surv.join(deg, surv("_v") === deg("_gv"), "left")
+            .withColumn("_in", coalesce(col("_deg"), lit(0L)) >= k),
+          sum(when(col("_in"), 0L).otherwise(1L)))
+          .where(col("_in")).select(col("_v"))
+      }
+      surv.join(liveDegrees(surv), Seq("_v"), "left")
         .select(col("_v"), coalesce(col("_deg"), lit(0L)).as("_deg"))
     }.select(
       unpackLabelStr(g, col("_v")).as("label"),
@@ -685,8 +649,7 @@ object Iterative {
       case Seq(e, v) => localPairs(g.spark,
         lpaDriver(pairs(e), v.map(_.getLong(0)), iters), "_v", "_lbl")
     } { case (Seq(edges, seed), _) =>
-      var labels = seed
-      for (_ <- 1 to iters) {
+      rounds(seed, iters, Bounded) { (labels, _) =>
         val freq = edges.join(labels, edges("_d") === labels("_v"))
           .groupBy(col("_s"), col("_lbl")).agg(count(lit(1)).as("_n"))
         val w = org.apache.spark.sql.expressions.Window
@@ -694,12 +657,9 @@ object Iterative {
         val best = freq.withColumn("_rn", row_number().over(w))
           .where(col("_rn") === 1)
           .select(col("_s").as("_bv"), col("_lbl").as("_nl"))
-        labels = graft.plans.Supersteps.cut( // loop-carried: cut stats
-          labels.join(best, labels("_v") === col("_bv"), "left")
-            .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl")),
-          superseded = if (labels eq seed) Nil else Seq(labels))
+        labels.join(best, labels("_v") === col("_bv"), "left")
+          .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl"))
       }
-      labels
     }
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
@@ -773,6 +733,26 @@ object Iterative {
           .otherwise(lit(0L)).as("coeff_fp"))
   }
 
+  /** The power-iteration rounds the PageRank family shares: `verts`
+    * `(_v)` start at rank `init`; each round sums `share` (a source's
+    * per-out-edge contribution over its `_r` and out-degree `_deg`) into
+    * each target's `_in` and sets every vertex's `_r` to `next` (over
+    * `_in`, null for a vertex nothing reaches). Exactly `iters` rounds,
+    * one cut each, over pre-degreed edges checkpointed once. */
+  private def powerIteration(edges: DataFrame, verts: DataFrame, iters: Int,
+      init: Column, share: Column, next: Column): DataFrame = {
+    val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
+    val degreed = edges.join(outDeg, "_s").localCheckpoint()
+    val ranks = rounds(verts.withColumn("_r", init), iters, Bounded) { (rk, _) =>
+      val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
+        .groupBy(col("_d")).agg(sum(share).as("_in"))
+      verts.join(contrib, verts("_v") === contrib("_d"), "left")
+        .select(verts("_v"), next.as("_r"))
+    }
+    graft.plans.Supersteps.release(degreed) // the last round's cut consumed it
+    ranks
+  }
+
   /** Fixed-iteration PageRank (damping 0.85, GraphX `staticPageRank`
     * semantics: ranks start at 1.0, dangling mass is not redistributed,
     * `rank' = 0.15 + 0.85 * Σ incoming rank/outDegree`) over the STORED
@@ -785,22 +765,11 @@ object Iterative {
   def pageRank(g: PropertyGraph, iters: Int = 20,
       edgeLabels: Set[String] = Set.empty): DataFrame = {
     require(iters >= 1, s"pageRank needs iters >= 1, got $iters")
-    val edges = packedEdges(g, edgeLabels, undirected = false)
-    val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-    val degreed = edges.join(outDeg, "_s").localCheckpoint()
     val touched = incidentLabels(g, edgeLabels)
-    val verts = packedVertices(g, touched).localCheckpoint()
-    var ranks = verts.withColumn("_r", lit(1.0))
-    val init = ranks // round-1 state sits on `verts` — never release it
-    for (_ <- 1 to iters) {
-      val contrib = degreed.join(ranks, degreed("_s") === ranks("_v"))
-        .groupBy(col("_d")).agg(sum(col("_r") / col("_deg")).as("_in"))
-      ranks = graft.plans.Supersteps.cut( // loop-carried: cut stats
-        verts.join(contrib, verts("_v") === contrib("_d"), "left")
-          .select(verts("_v"),
-            (lit(0.15) + lit(0.85) * coalesce(col("_in"), lit(0.0))).as("_r")),
-        superseded = if (ranks eq init) Nil else Seq(ranks))
-    }
+    var ranks = powerIteration(packedEdges(g, edgeLabels, undirected = false),
+      packedVertices(g, touched).localCheckpoint(), iters, init = lit(1.0),
+      share = col("_r") / col("_deg"),
+      next = lit(0.15) + lit(0.85) * coalesce(col("_in"), lit(0.0)))
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
       // a vertex with no incident edges converges to the reset mass
@@ -884,22 +853,10 @@ object Iterative {
           init = _ => ws, reset = _ => (15L * ws) / 100L), "_v", "_r"), ws)
     } { case (Seq(edges, verts), Seq(_, nVerts)) =>
       val workScale = workScaleFor(nVerts)
-      val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      val degreed = edges.join(outDeg, "_s").localCheckpoint()
-      var rk = verts.withColumn("_r", lit(workScale))
-      val init = rk // round-1 state sits on `verts` — never release it
-      for (_ <- 1 to iters) {
-        val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
-          .groupBy(col("_d"))
-          .agg(sum(expr("_r div _deg")).as("_in"))
-        rk = graft.plans.Supersteps.cut(
-          verts.join(contrib, verts("_v") === contrib("_d"), "left")
-            .select(verts("_v"),
-              (expr(s"(15 * ${workScale}L) div 100")
-                + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
-          superseded = if (rk eq init) Nil else Seq(rk))
-      }
-      (rk, workScale)
+      (powerIteration(edges, verts, iters, init = lit(workScale),
+        share = expr("_r div _deg"),
+        next = expr(s"(15 * ${workScale}L) div 100")
+          + expr("(85 * coalesce(_in, 0L)) div 100")), workScale)
     }
     val untouched = g.vertexLabels.toSet -- touched
     (if (untouched.isEmpty) ranks else ranks.unionByName(
@@ -950,21 +907,9 @@ object Iterative {
     } { case (Seq(edges, verts), Seq(_, nVerts)) =>
       val reset = when(col("_v").isin(seedSet: _*), lit(resetPerSeed(nVerts)))
         .otherwise(lit(0L))
-      val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      val degreed = edges.join(outDeg, "_s").localCheckpoint()
-      var rk = verts.withColumn("_r", reset)
-      val init = rk // round-1 state sits on `verts` — never release it
-      for (_ <- 1 to iters) {
-        val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
-          .groupBy(col("_d"))
-          .agg(sum(expr("_r div _deg")).as("_in"))
-        rk = graft.plans.Supersteps.cut(
-          verts.join(contrib, verts("_v") === contrib("_d"), "left")
-            .select(verts("_v"),
-              (reset + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
-          superseded = if (rk eq init) Nil else Seq(rk))
-      }
-      rk
+      powerIteration(edges, verts, iters, init = reset,
+        share = expr("_r div _deg"),
+        next = reset + expr("(85 * coalesce(_in, 0L)) div 100"))
     }.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
@@ -1026,18 +971,14 @@ object Iterative {
             .groupBy(to.as("_g")).agg(sum(col(scoreCol)).as("_m")),
           verts("_v") === col("_g"), "left")
           .select(verts("_v"), coalesce(col("_m"), lit(0L)).as("_raw"))
-      var scores = verts.select(col("_v"), lit(scale).as("_h"), lit(scale).as("_a"))
-      val init = scores // round-1 state sits on `verts` — never release it
-      for (_ <- 1 to iters) {
+      rounds(verts.select(col("_v"), lit(scale).as("_h"), lit(scale).as("_a")),
+          iters, Bounded) { (scores, _) =>
         val auth = renorm(gather(scores.select(col("_v"), col("_h")), "_h",
           edges("_s"), edges("_d"))).withColumnRenamed("_x", "_a")
         val hub = renorm(gather(auth, "_a", edges("_d"), edges("_s")))
           .withColumnRenamed("_x", "_h")
-        scores = graft.plans.Supersteps.cut(
-          hub.join(auth, "_v").select(col("_v"), col("_h"), col("_a")),
-          superseded = if (scores eq init) Nil else Seq(scores))
+        hub.join(auth, "_v").select(col("_v"), col("_h"), col("_a"))
       }
-      scores
     }.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
@@ -1098,14 +1039,16 @@ object Iterative {
     val edges0 = packedEdges(g, edgeLabels, undirected = false)
       .distinct().localCheckpoint()
     val touched = incidentLabels(g, edgeLabels)
-    val obs0 = new org.apache.spark.sql.Observation(
-      s"scc_active_init_${obsTag.incrementAndGet()}")
+    val obs0 = new org.apache.spark.sql.Observation()
     var active = packedVertices(g, touched)
       .observe(obs0, count(lit(1)).as("n")).localCheckpoint()
     var nActive = obs0.get("n").asInstanceOf[Long]
     var edges = edges0
     val done = Seq.newBuilder[DataFrame]
     var outer = 0
+    // The outer peel is not a Supersteps.rounds loop: its state is three
+    // frames (active set, edges, resolved rounds) and each round runs two
+    // fixpoints on driver threads.
     while (nActive > 0 && outer < maxOuter) {
       val init = active.select(col("_v"), col("_v").as("_lbl"))
       // The forward and backward fixpoints are INDEPENDENT — both read
@@ -1138,8 +1081,7 @@ object Iterative {
       val prevActive = active
       // the survivor count rides the checkpoint action (the kCore /
       // e29 one-action discipline) instead of a separate count() job
-      val obs = new org.apache.spark.sql.Observation(
-        s"scc_active_${outer}_${obsTag.incrementAndGet()}")
+      val obs = new org.apache.spark.sql.Observation()
       active = active.join(peeled, col("_v") === col("_pv"), "left_anti")
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint()
@@ -1231,34 +1173,23 @@ object Iterative {
         col("_mv2") === col("_d"))
       .where(col("_cs") =!= col("_cd"))
       .select(col("_cs"), col("_cd")).distinct().localCheckpoint()
-    var layers = m.select(col("_scc").as("_c")).distinct()
-      .withColumn("_lvl", lit(0L))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxDepth) {
+    val layers = rounds(m.select(col("_scc").as("_c")).distinct()
+        .withColumn("_lvl", lit(0L)), maxDepth,
+        Converge("layer relaxation", "maxDepth (DAG deeper than the " +
+          "bound — or the SCC map fed a cycle, which condensation's " +
+          "acyclicity contract forbids)")) { (layers, round) =>
       val relaxed = ce.join(layers, ce("_cs") === layers("_c"))
         .groupBy(col("_cd")).agg((max(col("_lvl")) + lit(1L)).as("_nl"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"layer_it_${iter}_${obsTag.incrementAndGet()}")
-      val stepped = layers.join(relaxed, layers("_c") === relaxed("_cd"), "left")
-        .select(layers("_c"), col("_lvl").as("_old"),
-          greatest(col("_lvl"), coalesce(col("_nl"), col("_lvl"))).as("_l1"))
-        .select(col("_c"), col("_l1").as("_lvl"),
-          (col("_l1") > col("_old")).as("_chg"))
-        .observe(obs, sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
-      // Releasing round 1's superseded state also frees `m`: the seed
-      // layer frame is lazy over the SCC-assignment checkpoint, whose
-      // last consumer is that round-1 evaluation.
-      val next = graft.plans.Supersteps.cut(stepped, superseded = Seq(layers))
-      done = obs.get("changed").asInstanceOf[Long] == 0L
-      layers = next.drop("_chg")
-      iter += 1
+      round.progress(
+        layers.join(relaxed, layers("_c") === relaxed("_cd"), "left")
+          .select(layers("_c"), col("_lvl").as("_old"),
+            greatest(col("_lvl"), coalesce(col("_nl"), col("_lvl"))).as("_l1"))
+          .select(col("_c"), col("_l1").as("_lvl"),
+            (col("_l1") > col("_old")).as("_chg")),
+        sum(when(col("_chg"), 1L).otherwise(0L))).drop("_chg")
     }
-    graft.plans.Supersteps.release(ce) // loop-only input, now consumed
-    require(done,
-      s"layer relaxation did not converge in $maxDepth rounds; raise maxDepth " +
-        "(DAG deeper than the bound — or the SCC map fed a cycle, which " +
-        "condensation's acyclicity contract forbids)")
+    // loop-only inputs, now consumed (the seed read `m` lazily)
+    Seq(ce, m).foreach(graft.plans.Supersteps.release)
     layers.select(
       unpackLabelStr(g, col("_c")).as("scc_label"),
       unpackKey(col("_c")).as("scc_id"),
@@ -1299,38 +1230,16 @@ object Iterative {
       .select(col("_cs"), col("_cd")).distinct().localCheckpoint()
     // the SCC map's last consumer is ce's eager checkpoint above
     graft.plans.Supersteps.release(m)
-    var all = graft.plans.Supersteps.cut(ce)
-    var delta = all
-    var iter = 0
-    var done = false
-    while (!done && iter < maxDepth) {
-      val obs = new org.apache.spark.sql.Observation(
-        s"reach_it_${iter}_${obsTag.incrementAndGet()}")
-      val fresh = graft.plans.Supersteps.cut(
-        delta.join(ce.select(col("_cs").as("_es"), col("_cd").as("_ed")),
-            col("_cd") === col("_es"))
-          .select(col("_cs"), col("_ed").as("_cd")).distinct()
-          .join(all, Seq("_cs", "_cd"), "left_anti")
-          .observe(obs, count(lit(1)).as("fresh")))
-      done = obs.get("fresh").asInstanceOf[Long] == 0L
-      if (!done) {
-        // Supersede the pre-union closure and the CONSUMED delta (the
-        // prior round's fresh set; round 0 aliases `all`, release once).
-        val stale =
-          if (delta eq all) Seq(all) else Seq(all, delta)
-        all = graft.plans.Supersteps.cut(all.unionByName(fresh),
-          superseded = stale)
-        delta = fresh
-      } else {
-        graft.plans.Supersteps.release(fresh) // empty terminal delta
-        if (!(delta eq all)) graft.plans.Supersteps.release(delta)
-      }
-      iter += 1
+    val (all, _) = closure(ce, maxDepth, Converge("reachability closure",
+        "maxDepth (DAG longest path exceeds the bound)")) { (delta, all, _) =>
+      delta.join(ce.select(col("_cs").as("_es"), col("_cd").as("_ed")),
+          col("_cd") === col("_es"))
+        .select(col("_cs"), col("_ed").as("_cd")).distinct()
+        .join(all, Seq("_cs", "_cd"), "left_anti")
     }
-    graft.plans.Supersteps.release(ce) // loop-only input, now consumed
-    require(done,
-      s"reachability closure did not converge in $maxDepth rounds; raise " +
-        "maxDepth (DAG longest path exceeds the bound)")
+    // loop-only input, now consumed — unless no path was longer than
+    // one edge and the closure IS the condensation edge set
+    if (!(all eq ce)) graft.plans.Supersteps.release(ce)
     all.select(
       unpackLabelStr(g, col("_cs")).as("src_scc_label"),
       unpackKey(col("_cs")).as("src_scc_id"),
@@ -1444,47 +1353,46 @@ object Iterative {
             org.apache.spark.sql.Row(t._1, t._2)): _*),
           StructType(Seq(StructField("_v", LongType, nullable = false),
             StructField("_round", IntegerType, nullable = false))))
-    } { case (Seq(edges0, active0), Seq(_, nActive0)) =>
-      var edges = edges0
-      var active = active0
-      var nActive = nActive0
+    } { case (Seq(edges, active), _) =>
+      // ONE state frame holds the active subgraph: its edges between
+      // active vertices plus a self-loop per active vertex, so a vertex
+      // whose neighbors are all gone keeps a row. A self-loop never
+      // makes its vertex lose (the tie-break needs `_d < _s`), which is
+      // why a stored one could be dropped here.
+      val seed = edges.where(col("_s") =!= col("_d"))
+        .join(active, col("_s") === active("_v"), "left_semi")
+        .join(active, col("_d") === active("_v"), "left_semi")
+        .unionByName(active.select(col("_v").as("_s"), col("_v").as("_d")))
+        .localCheckpoint()
       val mis = Seq.newBuilder[DataFrame]
-      var round = 0
-      while (nActive > 0 && round < maxRounds) {
-        round += 1
+      rounds(seed, maxRounds, Converge("MIS", "maxRounds")) { (live, round) =>
         def pri(v: Column): Column =
-          conv(substring(md5(concat_ws(":", lit(round), v)), 1, 15), 16, 10)
+          conv(substring(md5(concat_ws(":", lit(round.n), v)), 1, 15), 16, 10)
             .cast("long")
         val ps = pri(col("_s"))
         val pd = pri(col("_d"))
         // _s loses when some neighbor _d beats it under (priority, id)
-        val losers = edges
+        val losers = live
           .where(pd < ps || (pd === ps && col("_d") < col("_s")))
           .select(col("_s").as("_lv")).distinct()
-        val win = active.join(losers, col("_v") === col("_lv"), "left_anti")
+        // the round's winners are a result, not state: materialized on
+        // their own, so releasing `live` never reaches them
+        val win = live.where(col("_s") === col("_d")).select(col("_s").as("_v"))
+          .join(losers, col("_v") === col("_lv"), "left_anti")
           .localCheckpoint()
-        mis += win.withColumn("_round", lit(round))
-        val removed = win
-          .unionByName(edges
-            .join(win.select(col("_v").as("_wv")), col("_s") === col("_wv"),
-              "left_semi")
-            .select(col("_d").as("_v")))
-          .distinct().localCheckpoint()
-        active = active.join(removed.select(col("_v").as("_rv")),
-          col("_v") === col("_rv"), "left_anti").localCheckpoint()
-        nActive = active.count()
-        if (nActive > 0)
-          edges = edges
-            .join(active, edges("_s") === active("_v"), "left_semi")
-            .join(active, col("_d") === active("_v"), "left_semi")
-            .localCheckpoint()
+        mis += win.withColumn("_round", lit(round.n))
+        // a winner's rows name itself (its self-loop) and its neighbors
+        val removed = live
+          .join(win.select(col("_v").as("_wv")), col("_s") === col("_wv"),
+            "left_semi")
+          .select(col("_d").as("_rv"))
+        round.progress(live
+          .join(removed, col("_s") === col("_rv"), "left_anti")
+          .join(removed, col("_d") === col("_rv"), "left_anti"),
+          count(lit(1)))
       }
-      require(nActive == 0,
-        s"MIS did not converge in $maxRounds rounds ($nActive vertices left)")
-      // empty vertex set -> no rounds ran; emit the (empty) schema
-      mis.result()
-        .reduceOption(_.unionByName(_))
-        .getOrElse(active.withColumn("_round", lit(0)))
+      graft.plans.Supersteps.release(seed) // the first round consumed it
+      mis.result().reduce(_.unionByName(_))
     }.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),

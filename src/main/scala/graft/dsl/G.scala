@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.PropertyGraph
 import graft.model.{Direction, GraphColumns => GC}
+import graft.plans.Supersteps
 
 /** Chainable traversal DSL over a [[PropertyGraph]] — the public verb
   * surface a user of the reference's Gremlin API writes against
@@ -273,30 +274,20 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * SHUFFLES, the operators above each reused exchange re-execute per
     * subtree; for deep unrolls over expensive hop inputs (q33's reply
     * trees: 24 s lazy vs ~2 s materialized at sf0.1) checkpointing is
-    * the affordable form. Costs one action per depth and trades plan
-    * purity for bounded lineage — the same trade [[untilFixpoint]]
-    * makes. */
+    * the affordable form. Costs one action per depth (the frontier's
+    * cut, whose row count stops the loop once a frontier drains) and
+    * trades plan purity for bounded lineage — the same trade
+    * [[untilFixpoint]] makes. */
   def repeatEmit(n: Int, emitInitial: Boolean = false,
       emitPred: Column = null, materialize: Boolean = false)(hop: Step => Step): Step = {
     require(n >= 1, s"repeatEmit needs n >= 1, got $n")
-    val frontiers = Seq.newBuilder[(Int, Step)]
-    var cur = this
-    if (emitInitial) frontiers += ((0, cur))
-    var d = 1
-    var drained = false
-    while (d <= n && !drained) {
-      cur = hop(cur)
-      if (materialize) {
-        // superstep mode: bound lineage AND stop early once a frontier
-        // drains — the materialized frame makes the emptiness check
-        // free, and every deeper frontier is necessarily empty too
-        cur = cur.copy(df = graft.plans.Supersteps.cut(cur.df))
-        drained = cur.df.isEmpty
-      }
-      frontiers += ((d, cur))
-      d += 1
-    }
-    val fs = frontiers.result()
+    // superstep mode drains: it stops early once a frontier is empty
+    // (every deeper one is empty too), read off the frontier's own cut
+    val hops =
+      if (materialize) drain(n) { (cur, _) => val next = hop(cur); (next, next.df) }
+      else (1 to n).scanLeft(this)((cur, _) => hop(cur)).tail
+    val fs = (if (emitInitial) Seq((0, this)) else Nil) ++
+      hops.zipWithIndex.map { case (st, i) => (i + 1, st) }
     val dfs = fs.map { case (d, st) =>
       // emit(pred): only frontier rows satisfying the predicate are
       // emitted (Gremlin's emit(traversal) filter); the REPETITION is
@@ -317,43 +308,30 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * the visited set as the new frontier.
     *
     * This is a driver-coordinated superstep loop (the DataFrame analogue
-    * of Pregel): each level is one distributed join, `localCheckpoint`
-    * cuts the plan after every level so lineage stays linear instead of
-    * exponential, and the anti-join against the visited set is what
-    * guarantees termination on cyclic graphs. For whole-graph iterative
+    * of Pregel, [[graft.plans.Supersteps.closure]]): each level is one
+    * distributed join whose fresh rows are cut (and counted on that
+    * cut), so lineage stays linear instead of exponential, and the
+    * anti-join against the visited set is what guarantees termination
+    * on cyclic graphs. For whole-graph iterative
     * analytics prefer [[graft.analytics.GraphXBridge]]. */
   def untilFixpoint(maxIter: Int = 20)(hop: Step => Step): Step = {
-    var visited = unrooted.df.select(col(GC.Id), col(GC.Label))
+    val seed = unrooted.df.select(col(GC.Id), col(GC.Label))
       .dropDuplicates(GC.Id, GC.Label).localCheckpoint()
-    var frontier = copy(df = visited)
-    var seenLabels = labels.toSet
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val next = hop(frontier)
-      val fresh = graft.plans.Supersteps.cut(
-        next.df.select(col(GC.Id), col(GC.Label))
-          .dropDuplicates(GC.Id, GC.Label)
-          .join(visited, Seq(GC.Id, GC.Label), "left_anti"))
-      if (fresh.isEmpty) {
-        done = true
-        graft.plans.Supersteps.release(fresh) // empty terminal frontier
-      } else {
-        val prevVisited = visited
-        val prevFrontier = frontier.df
-        visited = graft.plans.Supersteps.cut(visited.unionByName(fresh),
-          // the pre-union set and the hopped-from frontier (the prior
-          // round's fresh set) are both dead once the union cut lands;
-          // round 1's frontier IS the initial visited — release once
-          superseded = Seq(prevVisited) ++
-            (if (prevFrontier eq prevVisited) Nil else Seq(prevFrontier)))
-        seenLabels ++= next.labels
-        frontier = next.copy(df = fresh)
-        iter += 1
-      }
+    var front = copy(df = seed)
+    val hopLabels = Seq.newBuilder[Seq[String]]
+    val (visited, found) = Supersteps.closure(seed, maxIter,
+        Supersteps.Bounded) { (delta, visited, _) =>
+      val next = hop(front.copy(df = delta))
+      front = next
+      hopLabels += next.labels
+      next.df.select(col(GC.Id), col(GC.Label))
+        .dropDuplicates(GC.Id, GC.Label)
+        .join(visited, Seq(GC.Id, GC.Label), "left_anti")
     }
-    if (!(frontier.df eq visited)) graft.plans.Supersteps.release(frontier.df)
-    copy(df = visited, labels = seenLabels.toSeq.sorted)
+    if (!(visited eq seed)) Supersteps.release(seed)
+    // a hop's labels count once its level added something
+    copy(df = visited,
+      labels = (labels ++ hopLabels.result().take(found).flatten).distinct.sorted)
   }
 
   /** Predicate-terminated repetition — Gremlin `repeat(hop).until(pred)`
@@ -368,31 +346,21 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * forever; a bound is the batch-engine analogue).
     *
     * Driver-coordinated superstep loop like [[untilFixpoint]]: one
-    * distributed pass per level, `localCheckpoint` keeps lineage linear
-    * on cyclic graphs, and the per-level empty check is the only
-    * action. */
+    * distributed pass per level, and the cut of the looping remainder —
+    * which keeps lineage linear on cyclic graphs and whose row count
+    * ends the loop once it drains — is the level's only action. */
   def repeatUntil(pred: Column, maxIter: Int = 20)(hop: Step => Step): Step = {
     require(maxIter >= 1, s"repeatUntil needs maxIter >= 1, got $maxIter")
-    var cur = unrooted
-    var exited: DataFrame = null
-    var exitLabels = Set.empty[String]
-    var exitCaptures = captures
-    var iter = 0
-    var drained = false
-    while (!drained && iter < maxIter) {
+    val exited = Seq.newBuilder[DataFrame]
+    val hops = unrooted.drain(maxIter) { (cur, _) =>
       val next = hop(cur)
       val (pass, fail) = next.partitionByPredicate(pred)
-      exited =
-        if (exited == null) pass
-        else exited.unionByName(pass, allowMissingColumns = true)
-      exitLabels ++= next.labels
-      exitCaptures = mergeCaptures(exitCaptures, next.captures)
-      val failCk = graft.plans.Supersteps.cut(fail)
-      drained = failCk.isEmpty
-      cur = next.copy(df = failCk)
-      iter += 1
+      exited += pass
+      (next, fail)
     }
-    copy(df = exited, labels = exitLabels.toSeq.sorted, captures = exitCaptures)
+    copy(df = exited.result().reduce(_.unionByName(_, allowMissingColumns = true)),
+      labels = hops.flatMap(_.labels).distinct.sorted,
+      captures = hops.map(_.captures).foldLeft(captures)(mergeCaptures))
   }
 
   /** Combined `repeat(hop).emit([emitPred]).until(untilPred)` — BOTH
@@ -407,8 +375,9 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * still looping at `maxIter` are dropped, like [[repeatUntil]].
     * Both predicates hydrate per label ([[repeatUntil]]'s rules).
     *
-    * Superstep loop — one `localCheckpoint` + emptiness action per
-    * level ([[repeatEmit]]'s materialize discipline): only the looping
+    * Superstep loop — one cut action per level, its row count ending
+    * the loop once it drains ([[repeatEmit]]'s materialize
+    * discipline): only the looping
     * remainder is checkpointed; the per-depth exit/emit frames are lazy
     * projections OVER the previous level's checkpoint, so lineage stays
     * linear and each expansion executes exactly once. */
@@ -416,18 +385,13 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
       emitInitial: Boolean = false, emitPred: Column = null)(
       hop: Step => Step): Step = {
     require(maxIter >= 1, s"repeatEmitUntil needs maxIter >= 1, got $maxIter")
+    val start = unrooted
     val outs = Seq.newBuilder[DataFrame]
-    var outLabels = Set.empty[String]
-    var outCaptures = captures
-    var cur = unrooted
     if (emitInitial) {
-      val e0 = if (emitPred == null) cur.df else cur.partitionByPredicate(emitPred)._1
+      val e0 = if (emitPred == null) start.df else start.partitionByPredicate(emitPred)._1
       outs += e0.withColumn(Step.DepthCol, lit(0))
-      outLabels ++= labels
     }
-    var d = 1
-    var drained = false
-    while (!drained && d <= maxIter) {
+    val hops = start.drain(maxIter) { (cur, d) =>
       val next = hop(cur)
       val (exit, stay) = next.partitionByPredicate(untilPred)
       val emitted =
@@ -435,16 +399,34 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
         else next.copy(df = stay).partitionByPredicate(emitPred)._1
       outs += exit.withColumn(Step.DepthCol, lit(d))
       outs += emitted.withColumn(Step.DepthCol, lit(d))
-      outLabels ++= next.labels
-      outCaptures = mergeCaptures(outCaptures, next.captures)
-      val stayCk = graft.plans.Supersteps.cut(stay)
-      drained = stayCk.isEmpty
-      cur = next.copy(df = stayCk)
-      d += 1
+      (next, stay)
     }
     copy(
       df = outs.result().reduce(_.unionByName(_, allowMissingColumns = true)),
-      labels = outLabels.toSeq.sorted, captures = outCaptures)
+      labels = ((if (emitInitial) labels else Nil) ++ hops.flatMap(_.labels))
+        .distinct.sorted,
+      captures = hops.map(_.captures).foldLeft(captures)(mergeCaptures))
+  }
+
+  /** The drain loop behind [[repeatUntil]], [[repeatEmitUntil]] and
+    * [[repeatEmit]]`(materialize = true)`: round d (from 1) hands
+    * `round` the looping frontier and gets back the hopped step and the
+    * frame that keeps looping, which the driver cuts. The loop ends on
+    * the first empty cut (its emptiness observed on the cut's own
+    * action) or after `cap` rounds; traversers still looping then are
+    * dropped. The callers' outputs read every level's cut lazily, so
+    * none is released. Returns each round's hopped step over its cut. */
+  private def drain(cap: Int)(round: (Step, Int) => (Step, DataFrame)): Seq[Step] = {
+    val hops = Seq.newBuilder[Step]
+    var cur = this
+    val last = Supersteps.rounds(df, cap, Supersteps.Bounded,
+        keepStates = true) { (st, r) =>
+      if (r.n > 1) hops += cur.copy(df = st)
+      val (next, looping) = round(cur.copy(df = st), r.n)
+      cur = next
+      r.progress(looping, org.apache.spark.sql.functions.count(lit(1)))
+    }
+    (hops += cur.copy(df = last)).result()
   }
 
   /** Split the frontier by a predicate: (rows satisfying, rows not —
@@ -1193,8 +1175,9 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * PATH-returning form. [[graft.analytics.GraphXBridge.hopDistances]]
     * is the distance map (q26); this enumerates the shortest paths
     * themselves, per ORIGIN in the current frontier. BFS supersteps
-    * (one distributed join + `localCheckpoint` per level, the
-    * [[untilFixpoint]] discipline) over a per-origin visited set; BFS
+    * (the [[untilFixpoint]] closure: one distributed join + cut per
+    * level) over a per-origin visited set that carries every reached
+    * row with its level and is itself the result; BFS
     * first-reach level == distance, so every surviving row's path is
     * shortest by construction, and prefixes of shortest paths are
     * shortest — expanding only the surviving rows loses nothing.
@@ -1224,18 +1207,18 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
       .dropDuplicates(GC.Label, GC.Id)
       .withColumn(src, self).withColumn(PathCol, array(self))
       .localCheckpoint()
+    val keys = Seq(src, GC.Label, GC.Id)
     val narrow = Seq(col(GC.Label), col(GC.Id), col(src), col(PathCol))
-    var frontier = copy(df = seed)
-    var visited = seed.select(col(src), col(GC.Label), col(GC.Id))
-    val initVisited = visited
-    val levels = Seq.newBuilder[DataFrame]
-    levels += seed.withColumn(Step.DepthCol, lit(0))
-    var d = 1
-    var drained = false
-    while (d <= maxDepth && !drained) {
-      val next = hop(frontier)
+    // the visited set IS the result: every reached row, tagged with its
+    // level, so no level frame outlives its round
+    val level0 = seed.withColumn(Step.DepthCol, lit(0))
+    var front = copy(df = seed)
+    val (reached, _) = Supersteps.closure(level0, maxDepth,
+        Supersteps.Bounded) { (delta, visited, d) =>
+      val next = hop(front.copy(df = delta.drop(Step.DepthCol)))
+      front = next
       val freshAll = next.df.select(narrow: _*)
-        .join(visited, Seq(src, GC.Label, GC.Id), "left_anti")
+        .join(visited.select(keys.map(col): _*), keys, "left_anti")
       val fresh =
         if (all) freshAll
         else {
@@ -1247,26 +1230,10 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
           freshAll.withColumn(rn, row_number().over(w))
             .where(col(rn) === 1).drop(rn)
         }
-      val ck = graft.plans.Supersteps.cut(fresh)
-      drained = ck.isEmpty
-      if (!drained) {
-        val prevVisited = visited
-        visited = graft.plans.Supersteps.cut(visited.unionByName(
-          ck.select(col(src), col(GC.Label), col(GC.Id))
-            .dropDuplicates(src, GC.Label, GC.Id)),
-          // the pre-union set is dead once the union cut lands — but
-          // round 1's sits on `seed`, which the level union still needs
-          superseded =
-            if (prevVisited eq initVisited) Nil else Seq(prevVisited))
-        levels += ck.withColumn(Step.DepthCol, lit(d))
-        frontier = next.copy(df = ck)
-        d += 1
-      } else graft.plans.Supersteps.release(ck) // empty terminal level
+      fresh.withColumn(Step.DepthCol, lit(d))
     }
-    // the final visited set has no consumer — unless it's still the
-    // seed-backed initial frame, whose blocks the level union reads
-    if (!(visited eq initVisited)) graft.plans.Supersteps.release(visited)
-    levels.result().reduce(_.unionByName(_))
+    if (!(reached eq level0)) Supersteps.release(seed)
+    reached
       .select(col(src).getField("label").as("src_label"),
         col(src).getField("id").as("src_id"),
         col(GC.Label).as("dst_label"), col(GC.Id).cast("bigint").as("dst_id"),

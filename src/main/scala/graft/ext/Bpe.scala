@@ -130,7 +130,9 @@ object Bpe {
     //    the even-offsets-within-runs rule of the gaps-and-islands
     //    window formulation (BpeSpec pins the classic sequence).
     // The merge table therefore accumulates as DRIVER literals (1 row
-    // per round), and the final e58 plan is a LocalRelation.
+    // per round), and the final e58 plan is a LocalRelation. Reading the
+    // merge off the observation is also why this loop is not a
+    // Supersteps.rounds loop, whose rounds report only a progress count.
     var merges = Seq.empty[(Int, String, String, String, Long)]
     var r = 1
     var exhausted = false

@@ -68,33 +68,35 @@ object Classify {
     val labels = docs.select(col(idCol).as("_id"), label.cast("long").as("_y"))
       .localCheckpoint()
     val spark = docs.sparkSession
-    var w = spark.createDataFrame(
+    val w0 = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("_b",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("_w",
           org.apache.spark.sql.types.LongType))))
+    // every round's weights (the empty seed adds nothing to the sum)
     val perRound = Seq.newBuilder[DataFrame]
-    for (_ <- 1 to rounds) {
+    // weight frames are <= buckets+1 rows; the superstep cut stops the
+    // per-round lineage from re-deriving every earlier round (ONE
+    // action per round — the e29 discipline); the averaged model reads
+    // every round's weights, so none is released then
+    val w = graft.plans.Supersteps.rounds(w0, rounds,
+        graft.plans.Supersteps.Bounded, keepStates = averaged) { (w, _) =>
+      perRound += w
       val mis = scoreFeatures(feats, w)
         .join(labels, "_id")
         .where(col("_y") * col("_margin") <= 0)
         .select(col("_id"), col("_y"))
       val upd = feats.join(mis, "_id")
         .groupBy("_b").agg(sum(col("_y")).as("_dw"))
-      // weight frames are <= buckets+1 rows; the checkpoint stops the
-      // per-round lineage from re-deriving every earlier round (ONE
-      // action per round — the e29 discipline)
-      w = graft.plans.Supersteps.cut(
-        w.join(upd, Seq("_b"), "full")
-          .select(col("_b"),
-            (coalesce(col("_w"), lit(0L)) + coalesce(col("_dw"), lit(0L)))
-              .as("_w")))
-      perRound += w
+      w.join(upd, Seq("_b"), "full")
+        .select(col("_b"),
+          (coalesce(col("_w"), lit(0L)) + coalesce(col("_dw"), lit(0L)))
+            .as("_w"))
     }
     if (!averaged) w
-    else perRound.result().reduce(_.unionByName(_))
+    else (perRound += w).result().reduce(_.unionByName(_))
       .groupBy("_b").agg(sum(col("_w")).as("_w"))
   }
 

@@ -118,10 +118,12 @@ object Glove {
     val pairs = logTargets(cooc).localCheckpoint()
     val vocab = pairs.select(col("i").as("t"))
       .unionByName(pairs.select(col("j").as("t"))).distinct()
-    var state = graft.plans.Supersteps.cut(initVectors(vocab, dims))
+    // the history face returns every round's state: none is released
     val out = Seq.newBuilder[DataFrame]
-    out += state
-    for (_ <- 1 to rounds) {
+    val last = graft.plans.Supersteps.rounds(
+        graft.plans.Supersteps.cut(initVectors(vocab, dims)), rounds,
+        graft.plans.Supersteps.Bounded, keepStates = true) { (state, _) =>
+      out += state
       val err = residuals(pairs, state)
       val wv = state.where(col("side") === "w")
         .select(col("t").as("i"), col("k"), col("v").as("_wv"))
@@ -143,13 +145,11 @@ object Glove {
         greatest(least(coalesce(col("_g"), lit(0L)), lit(GClamp)),
           lit(-GClamp)).cast("long"),
         Shift + etaShift)
-      state = graft.plans.Supersteps.cut(
-        state.join(gw.unionByName(gc), Seq("side", "t", "k"), "left")
-          .select(col("side"), col("t"), col("k"),
-            greatest(least(col("v") - step, lit(VCap)), lit(-VCap)).as("v")))
-      out += state
+      state.join(gw.unionByName(gc), Seq("side", "t", "k"), "left")
+        .select(col("side"), col("t"), col("k"),
+          greatest(least(col("v") - step, lit(VCap)), lit(-VCap)).as("v"))
     }
-    out.result()
+    (out += last).result()
   }
 
   /** Final trained vectors `(side, t, k, v)`. */

@@ -179,11 +179,11 @@ object Preference {
       val base = players.join(wins, Seq("t"), "left")
         .select(col("t"), coalesce(col("_wins"), lit(0L)).as("_wins"))
         .localCheckpoint()
-      var state = graft.plans.Supersteps.cut(
-        base.select(col("t"), lit(Scale).as("w")))
       val out = Seq.newBuilder[DataFrame]
-      out += state
-      for (_ <- 1 to rounds) {
+      val last = graft.plans.Supersteps.rounds(
+          base.select(col("t"), lit(Scale).as("w")), rounds,
+          graft.plans.Supersteps.Bounded, keepStates = keepAll) { (state, _) =>
+        out += state
         val wa = state.select(col("t").as("a"), col("w").as("_wa"))
         val wb = state.select(col("t").as("b"), col("w").as("_wb"))
         // reciprocal at scale 2^20: S^2 div (wa+wb) < 2^39 per edge
@@ -193,17 +193,14 @@ object Preference {
           .unionByName(r.select(col("b").as("t"), col("_r")))
           .groupBy("t")
           .agg(sum(col("_r").cast("decimal(38,0)")).as("_d"))
-        state = graft.plans.Supersteps.cut(
-          base.join(state.select(col("t"), col("w")), Seq("t"))
-            .join(denom, Seq("t"), "left")
-            .select(col("t"),
-              when(col("_d").isNull, col("w")).otherwise(
-                expr(s"CAST(greatest(least((CAST(_wins AS DECIMAL(38,0)) * ${Scale * Scale}L) div _d, " +
-                  s"${WCap}L), CAST(1 AS BIGINT)) AS BIGINT)")).as("w")),
-          superseded = if (keepAll) Nil else Seq(state))
-        out += state
+        base.join(state.select(col("t"), col("w")), Seq("t"))
+          .join(denom, Seq("t"), "left")
+          .select(col("t"),
+            when(col("_d").isNull, col("w")).otherwise(
+              expr(s"CAST(greatest(least((CAST(_wins AS DECIMAL(38,0)) * ${Scale * Scale}L) div _d, " +
+                s"${WCap}L), CAST(1 AS BIGINT)) AS BIGINT)")).as("w"))
       }
-      out.result()
+      (out += last).result()
     }
   }
 

@@ -174,10 +174,8 @@ object Unigram {
       .select(explode(sequence(lit(1), length(col("w")))).as("_i"), col("w"))
       .select(col("w").substr(col("_i"), lit(1)).as("s"))
       .distinct().localCheckpoint()
-    var vocab = seedVocab(words)
-    val init = vocab // sits on the caller's words frame — never release
-    for (_ <- 1 to rounds) {
-      val prevVocab = vocab
+    val vocab = graft.plans.Supersteps.rounds(seedVocab(words), rounds,
+        graft.plans.Supersteps.Bounded) { (vocab, _) =>
       // alias the segment side: its `w` attribute IS words' (the DP
       // starts from the words frame), so a bare-name join would be an
       // ambiguous self-join
@@ -186,10 +184,8 @@ object Unigram {
         .join(words, col("_uw") === col("w"))
         .groupBy(col("piece").as("s")).agg(sum(col("freq")).as("cnt"))
       // single-char fallback stays alive at count >= 1
-      vocab = graft.plans.Supersteps.cut(
-        usage.join(chars, Seq("s"), "full")
-          .select(col("s"), coalesce(col("cnt"), lit(1L)).as("cnt")),
-        superseded = if (prevVocab eq init) Nil else Seq(prevVocab))
+      usage.join(chars, Seq("s"), "full")
+        .select(col("s"), coalesce(col("cnt"), lit(1L)).as("cnt"))
     }
     graft.plans.Supersteps.release(chars) // loop-only input, now consumed
     vocab

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Superstep checkpoint discipline.
@@ -40,6 +40,24 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * One-shot frames (edge sets, seed frontiers) keep plain
   * `localCheckpoint`: their stats are computed once from real leaves,
   * stay small, and remain useful to the planner.
+  *
+  * THE LOOP CONTRACT. Every distributed superstep loop runs through
+  * one of two drivers: [[rounds]] (each round replaces the state) or
+  * [[closure]] (semi-naive: each round finds the fresh rows and
+  * `visited ∪= fresh`). The driver owns the round counter, the [[cut]]
+  * of each new state, the progress count, the release of superseded
+  * state and the stop rule, so a loop body is only its round's plan:
+  *  - one action per round: the progress count is an `Observation`
+  *    on the round's own cut, never a separate `count`/`isEmpty` job
+  *    (the closure's union cut is its second, data-carrying action);
+  *  - seed ownership: the seed belongs to the caller and is never
+  *    released; every later state is released once its successor's
+  *    cut is live, unless a result still reads it lazily (the drain
+  *    loops' emitted frames, `keepStates`);
+  *  - stop rules: a round whose progress is zero ends the loop.
+  *    At the round cap the loop either throws "… did not converge in N
+  *    rounds" ([[Converge]]) or returns the bounded state ([[Bounded]]);
+  *    each call site fixes which by its algorithm's contract.
   */
 object Supersteps {
 
@@ -49,17 +67,11 @@ object Supersteps {
     * before this returns.
     *
     * `superseded`: prior-round state frames to release once the new
-    * checkpoint is live. A loop only ever needs its LAST state, but
-    * every `localCheckpoint` persists blocks for the session lifetime —
-    * across a long session (the driver's 135-query bench) that is a
-    * memory leak measured in thousands of stranded blocks (round-10
-    * verdict finding #2), and on a real cluster it evicts working
-    * memory. Because the cut is eager, by the time it returns every
-    * partition of the NEW state is materialized and the old blocks have
-    * no remaining consumer — releasing them here is safe even though
-    * localCheckpoint truncates lineage. Callers that genuinely keep all
-    * round states (e.g. GloVe's trainStates history face) simply don't
-    * pass them. */
+    * checkpoint is live. Every `localCheckpoint` persists blocks for the
+    * session lifetime — across a long session (the driver's 135-query
+    * bench) thousands of stranded blocks (round-10 verdict finding #2).
+    * The cut is eager, so when it returns the old blocks have no
+    * remaining consumer and releasing them is safe. */
   def cut(df: DataFrame, superseded: Seq[DataFrame] = Nil): DataFrame = {
     val ck = df.localCheckpoint()
     superseded.foreach(release)
@@ -99,7 +111,103 @@ object Supersteps {
       if (!before.contains(id) && !isPinned(id)) rdd.unpersist(blocking = false)
     }
 
-  private val escapeTag = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** What a loop returns when its round cap arrives while its rounds
+    * still make progress. */
+  private[graft] sealed trait AtCap
+
+  /** The result is a fixpoint or nothing: at the cap, throw "`what` did
+    * not converge in N rounds; raise `knob`". */
+  private[graft] final case class Converge(what: String, knob: String)
+      extends AtCap
+
+  /** The cap is part of the result (a bounded peel, a fixed iteration
+    * count, Gremlin's dropped traversers): return the capped state. */
+  private[graft] case object Bounded extends AtCap
+
+  /** One round of a [[rounds]] loop, as its body sees it: `n` counts
+    * from 1. */
+  private[graft] final class Round private[plans] (val n: Int) {
+    private[plans] var observed: Option[Observation] = None
+
+    /** `df` with the aggregate `changed` observed on this round's cut:
+      * zero ends the loop. A body that never calls it runs to the cap. */
+    def progress(df: DataFrame, changed: Column): DataFrame = {
+      val obs = new Observation()
+      observed = Some(obs)
+      df.observe(obs, changed.as("p"))
+    }
+  }
+
+  /** The observed progress of a finished cut. No metrics row (a null
+    * sum, or AQE pruning an empty plan together with its metrics node)
+    * means nothing changed. */
+  private def progressOf(obs: Observation): Long =
+    obs.get.get("p") match {
+      case Some(n: Long) => n
+      case _ => 0L
+    }
+
+  private def stop(atCap: AtCap, cap: Int, progress: Long): Unit =
+    atCap match {
+      case Converge(what, knob) => require(progress == 0L,
+        s"$what did not converge in $cap rounds (the last round's " +
+          s"progress count was $progress); raise $knob")
+      case Bounded =>
+    }
+
+  /** State-replacing rounds: round n cuts `step(state, round)` as the
+    * next state, releasing the one it replaces. Returns the last state
+    * (the seed itself only when `cap` is 0). `keepStates`: the caller's
+    * results read every state lazily, so none is released. */
+  private[graft] def rounds(seed: DataFrame, cap: Int, atCap: AtCap,
+      keepStates: Boolean = false)(
+      step: (DataFrame, Round) => DataFrame): DataFrame = {
+    var state = seed
+    var progress = -1L // unknown until a body observes it
+    var n = 0
+    while (n < cap && progress != 0L) {
+      n += 1
+      val round = new Round(n)
+      val next = cut(step(state, round),
+        superseded = if (keepStates || (state eq seed)) Nil else Seq(state))
+      progress = round.observed.fold(-1L)(progressOf)
+      state = next
+    }
+    stop(atCap, cap, progress)
+    state
+  }
+
+  /** Semi-naive closure: round n cuts `fresh(delta, visited, n)` — the
+    * rows the last round's delta reaches that `visited` lacks (the
+    * body's anti-join) — counting them on that cut; zero ends the loop,
+    * otherwise `visited ∪= fresh` is cut and the fresh rows become the
+    * next delta. The seed is round 0's delta and visited set. Returns
+    * the visited set (the seed when nothing was found) and the number
+    * of rounds that found rows. */
+  private[graft] def closure(seed: DataFrame, cap: Int, atCap: AtCap)(
+      fresh: (DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    var visited = seed
+    var delta = seed
+    var found = 0
+    var progress = -1L
+    while (found < cap && progress != 0L) {
+      val obs = new Observation()
+      val f = cut(fresh(delta, visited, found + 1)
+        .observe(obs, count(lit(1)).as("p")))
+      progress = progressOf(obs)
+      if (progress == 0L) release(f)
+      else {
+        visited = cut(visited.unionByName(f),
+          superseded = Seq(visited, delta).filterNot(_ eq seed))
+        delta = f
+        found += 1
+      }
+    }
+    // the last delta's rows are in `visited` now
+    if (!(delta eq seed)) release(delta)
+    stop(atCap, cap, progress)
+    (visited, found)
+  }
 
   /** The fixpoint family's SIZE-ADAPTIVE escape, under the row cap
     * [[graft.analytics.Iterative.DefaultSmallGraphRows]]: below it an
@@ -128,7 +236,7 @@ object Supersteps {
       scala.concurrent.Future {
         if (GraftSqlShims.readsMaterialized(df)) (df, None)
         else {
-          val obs = new Observation(s"escape_${escapeTag.incrementAndGet()}")
+          val obs = new Observation()
           val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
           (ck, Some(obs.get("n").asInstanceOf[Long]))
         }

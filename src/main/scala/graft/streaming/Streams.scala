@@ -672,15 +672,14 @@ object Streams {
     * between triggers; the batch twin
     * ([[graft.analytics.Iterative.incrementalComponents]]) is the
     * oracle-checked form (q49), and StreamsSpec proves the streaming
-    * fold lands on the same fixpoint. */
-  /** @param releaseSuperseded release the previous state's blocks after
-    *   each fold (default). On an unbounded stream the superseded
-    *   checkpoints are otherwise a leak proportional to trigger count.
-    *   A reader holding a LAZY frame derived from [[state]] across a
-    *   trigger boundary must either materialize it before the next
-    *   batch lands or construct the maintainer with `false`. */
-  final class ComponentsMaintainer(vertices: DataFrame,
-      releaseSuperseded: Boolean = true) {
+    * fold lands on the same fixpoint.
+    *
+    * Every maintainer here releases the previous state's blocks after
+    * each fold: on an unbounded stream the superseded checkpoints would
+    * otherwise leak in proportion to the trigger count. A reader that
+    * holds a LAZY frame derived from `state` across a trigger boundary
+    * must materialize it before the next batch lands. */
+  final class ComponentsMaintainer(vertices: DataFrame) {
     @volatile private var st: DataFrame = vertices
       .select(col(vertices.columns.head).cast("bigint").as("_v"))
       .dropDuplicates("_v")
@@ -698,7 +697,7 @@ object Streams {
         st = graft.analytics.Iterative.mergeComponentsBatch(prev,
           batch.select(col(cols(0)).cast("bigint").as("_s"),
             col(cols(1)).cast("bigint").as("_d")))
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 
@@ -716,8 +715,7 @@ object Streams {
     * All merge arithmetic is exact, so after ANY micro-batch split the
     * dashboard equals the batch rollup over everything seen
     * (StreamsSpec law). Read `dashboard` any time. */
-  final class HealthMaintainer(base: DataFrame,
-      releaseSuperseded: Boolean = true) {
+  final class HealthMaintainer(base: DataFrame) {
     @volatile private var st: DataFrame = base.localCheckpoint()
 
     /** Current mass `(source, lang, n_docs, sum_tokens, sum_q)`. */
@@ -737,7 +735,7 @@ object Streams {
             sum(col("sum_tokens")).as("sum_tokens"),
             sum(col("sum_q")).as("sum_q"))
           .localCheckpoint()
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 
@@ -764,8 +762,7 @@ object Streams {
     * shingle set is idempotent), but two DIFFERENT texts for one id in
     * one batch would sign the UNION of both shingle sets — a signature
     * neither document has. */
-  final class SignatureIndexMaintainer(base: DataFrame,
-      releaseSuperseded: Boolean = true) {
+  final class SignatureIndexMaintainer(base: DataFrame) {
     @volatile private var st: DataFrame = base.localCheckpoint()
 
     /** Current index `(doc_id, h0..h{k-1})`. */
@@ -782,7 +779,7 @@ object Streams {
         st = prev.join(ids, Seq("doc_id"), "left_anti")
           .unionByName(graft.ext.Dedup.minhashSignatures(batch.toDF()))
           .localCheckpoint()
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 
@@ -823,8 +820,7 @@ object Streams {
     * distinct: deterministic, a no-op on contract-honoring batches);
     * two DIFFERENT texts for one id in one batch have no defined
     * winner and stay a caller error. */
-  final class Bm25Maintainer(base: graft.ext.Retrieval.Bm25Index,
-      releaseSuperseded: Boolean = true) {
+  final class Bm25Maintainer(base: graft.ext.Retrieval.Bm25Index) {
     @volatile private var st: graft.ext.Retrieval.Bm25Index =
       graft.ext.Retrieval.Bm25Index(base.postings.localCheckpoint(),
         base.dl.localCheckpoint(), base.dfreq.localCheckpoint())
@@ -859,7 +855,7 @@ object Streams {
         // live (dfq's signed merge reads the previous postings via
         // subDf; a reader mid-fold keeps the previous consistent index)
         st = graft.ext.Retrieval.Bm25Index(post, dls, dfq)
-        if (releaseSuperseded) Seq(prev.postings, prev.dl, prev.dfreq)
+        Seq(prev.postings, prev.dl, prev.dfreq)
           .foreach(graft.plans.Supersteps.release)
       }
   }
@@ -878,8 +874,7 @@ object Streams {
     * [[graft.ext.Similarity.ivfAssignments]] pass over
     * base-overridden-by-everything-seen (StreamsSpec law). State is
     * 2 longs per row, localCheckpointed per fold. */
-  final class IvfAssignmentMaintainer(base: DataFrame, centroids: DataFrame,
-      releaseSuperseded: Boolean = true) {
+  final class IvfAssignmentMaintainer(base: DataFrame, centroids: DataFrame) {
     @volatile private var st: DataFrame = base.localCheckpoint()
 
     /** Current serving index `(vec_id, cell)`. */
@@ -894,7 +889,7 @@ object Streams {
           .unionByName(graft.ext.Similarity.ivfAssignments(
             batch.toDF(), centroids))
           .localCheckpoint()
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 
@@ -917,8 +912,7 @@ object Streams {
     * doc must route through the batch seam, which owns the signed
     * subtract-then-add merge a replacement needs. State is
     * pair-grain, localCheckpointed per fold. */
-  final class CooccurrenceMaintainer(base: DataFrame, window: Int = 3,
-      releaseSuperseded: Boolean = true) {
+  final class CooccurrenceMaintainer(base: DataFrame, window: Int = 3) {
     @volatile private var st: DataFrame = base.localCheckpoint()
 
     /** Current matrix `(center, context, weight_fp)`. */
@@ -933,7 +927,7 @@ object Streams {
           .groupBy("center", "context")
           .agg(sum(col("weight_fp")).as("weight_fp"))
           .localCheckpoint()
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 
@@ -954,8 +948,7 @@ object Streams {
     * new bigrams with stale unigrams). Id contract: the additive
     * family's — each doc_id at most once across the stream. */
   final class BigramCountsMaintainer(base: graft.ext.Text.BigramCounts,
-      trainFilter: org.apache.spark.sql.Column,
-      releaseSuperseded: Boolean = true) {
+      trainFilter: org.apache.spark.sql.Column) {
     @volatile private var st: graft.ext.Text.BigramCounts =
       graft.ext.Text.BigramCounts(base.big.localCheckpoint(),
         base.uni.localCheckpoint())
@@ -976,8 +969,7 @@ object Streams {
           .groupBy("w2").agg(sum(col("c1")).as("c1"))
           .localCheckpoint()
         st = graft.ext.Text.BigramCounts(big, uni)
-        if (releaseSuperseded) Seq(prev.big, prev.uni)
-          .foreach(graft.plans.Supersteps.release)
+        Seq(prev.big, prev.uni).foreach(graft.plans.Supersteps.release)
       }
   }
 
@@ -990,8 +982,7 @@ object Streams {
     * arithmetic, StreamsSpec law). Id contract: the additive
     * family's — each doc_id at most once across the stream. */
   final class TrigramCountsMaintainer(base: DataFrame,
-      trainFilter: org.apache.spark.sql.Column,
-      releaseSuperseded: Boolean = true) {
+      trainFilter: org.apache.spark.sql.Column) {
     @volatile private var st: DataFrame = base.localCheckpoint()
 
     /** Current counts `(w1, w2, w3, c3)` — score with
@@ -1007,7 +998,7 @@ object Streams {
             batch.toDF().where(trainFilter)))
           .groupBy("w1", "w2", "w3").agg(sum(col("c3")).as("c3"))
           .localCheckpoint()
-        if (releaseSuperseded) graft.plans.Supersteps.release(prev)
+        graft.plans.Supersteps.release(prev)
       }
   }
 

@@ -622,6 +622,41 @@ class IterativeSpec extends SparkSpec {
       smallGraphRows = s))
   }
 
+  test("superstep loops at their round cap: converge-or-throw, or the bounded result") {
+    // A directed chain 1 -> 2 -> ... -> 6 needs more rounds than every
+    // cap below; smallGraphRows = 0 keeps each loop distributed.
+    val spec = graft.model.EdgeSpec("KNOWS", "Person", "Person")
+    val chain = new graft.graph.PropertyGraph(spark,
+      Map("Person" -> (1L to 6L).toDF(GC.Id)),
+      Map(spec -> (1L to 5L).map(i => (i, i + 1)).toDF(GC.Src, GC.Dst)))
+    val knows = Set("KNOWS")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" -> (() => Iterative.connectedComponents(chain,
+        knows, maxIter = 1, smallGraphRows = 0L)),
+      "condensationLayers" -> (() =>
+        Iterative.condensationLayers(chain, knows, maxDepth = 2)),
+      "condensationReachability" -> (() =>
+        Iterative.condensationReachability(chain, knows, maxDepth = 2)),
+      "sccAssignments" -> (() => Iterative.sccAssignments(chain, knows,
+        maxOuter = 2, smallGraphRows = 0L)),
+      "maximalIndependentSet" -> (() => Iterative.maximalIndependentSet(g,
+        knows, maxRounds = 1, smallGraphRows = 0L))
+    ).foreach { case (name, run) =>
+      val e = intercept[IllegalArgumentException](run().collect())
+      assert(e.getMessage.contains("did not converge"), s"$name: ${e.getMessage}")
+    }
+    // bounded contracts: one peel round leaves the chain's interior,
+    // degrees measured within it; two hops reach two vertices
+    val core = Iterative.kCore(chain, 2, knows, maxRounds = 1,
+      smallGraphRows = 0L).select(col(GC.Id), col("degree"))
+      .as[(Long, Long)].collect().toMap
+    assert(core == Map(2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 1L))
+    val reach = graft.dsl.G(chain).V("Person", 1L)
+      .untilFixpoint(maxIter = 2)(_.out("KNOWS"))
+      .toDF.select(col(GC.Id)).as[Long].collect().toSet
+    assert(reach == Set(1L, 2L, 3L))
+  }
+
   test("step modulators annotate the frontier") {
     val G0 = graft.dsl.G(g)
     val c = G0.V("Person", 0L, 1L).componentId("KNOWS").toDF

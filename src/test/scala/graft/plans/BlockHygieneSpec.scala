@@ -37,8 +37,10 @@ class BlockHygieneSpec extends SparkSpec {
   }
 
   test("connectedComponents leaves O(1) persisted RDDs, not O(rounds)") {
+    // smallGraphRows = 0: the distributed superstep loop, not the
+    // driver escape sf0.001 would otherwise take
     val (rows, added) = leakOf(
-      graft.analytics.Iterative.connectedComponents(g))
+      graft.analytics.Iterative.connectedComponents(g, smallGraphRows = 0L))
     assert(rows > 0)
     // loop-constant edge/vertex checkpoints + the final state — the
     // per-round superseded states must all have been released. The
@@ -46,6 +48,34 @@ class BlockHygieneSpec extends SparkSpec {
     // loop-constant frame doesn't flake it, while the old behavior
     // (one stranded RDD per round, ~10+ here) still fails loudly.
     assert(added <= 6, s"connectedComponents stranded $added persisted RDDs")
+  }
+
+  test("distributed kCore and labelPropagation leave O(1) persisted RDDs") {
+    import graft.analytics.Iterative
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kCore" -> (() => Iterative.kCore(g, 3, Set("KNOWS"), smallGraphRows = 0L)),
+      "labelPropagation" -> (() =>
+        Iterative.labelPropagation(g, 5, Set("KNOWS"), smallGraphRows = 0L))
+    ).foreach { case (name, op) =>
+      val (rows, added) = leakOf(op())
+      assert(rows > 0, name)
+      // the escape's edge and vertex checkpoints + the final state
+      assert(added <= 4, s"$name stranded $added persisted RDDs")
+    }
+  }
+
+  test("distributed maximalIndependentSet keeps only its per-round winners") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val mis = graft.analytics.Iterative.maximalIndependentSet(g, Set("KNOWS"),
+      smallGraphRows = 0L)
+    val rounds = mis.agg(max(col("mis_round"))).head().getInt(0)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before).size
+    Supersteps.sweep(spark, before)
+    assert(rounds > 1)
+    // each round's winners are the result; the superseded active
+    // subgraphs are released: escape inputs + final state + winners
+    assert(added <= 3 + rounds,
+      s"maximalIndependentSet stranded $added persisted RDDs over $rounds rounds")
   }
 
   test("pageRank leaves O(1) persisted RDDs over 20 rounds") {

@@ -3,7 +3,15 @@
 # sbt launcher so probes can run while another sbt instance is busy).
 # Usage: tools/run_main.sh <MainClass> [args...]
 # Env: JVM_MEM (default 8g) plus the usual SPARK_GRAFT_* vars.
-CP=$(cat /tmp/cp.txt)
+# The classpath comes from /tmp/cp.txt; write it first with
+#   sbt --batch "export Runtime/fullClasspath" | tail -1 > /tmp/cp.txt
+CP_FILE=/tmp/cp.txt
+if [ ! -s "$CP_FILE" ]; then
+  echo "run_main.sh: $CP_FILE is missing or empty; write it with:" >&2
+  echo "  sbt --batch \"export Runtime/fullClasspath\" | tail -1 > $CP_FILE" >&2
+  exit 1
+fi
+CP=$(cat "$CP_FILE")
 MAIN=$1; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
