@@ -50,16 +50,27 @@ final case class G(graph: PropertyGraph) {
     * simply absent). The frontier is point-rooted (see
     * [[graft.graph.PropertyGraph]]): each hop broadcasts it, until a loop
     * step ([[Step.untilFixpoint]], [[Step.repeatUntil]],
-    * [[Step.repeatEmitUntil]], [[Step.shortestPaths]]) drops the mark. */
-  def V(label: String, ids: Long*): Step =
-    Step(graph,
-      graph.verticesById(label, ids).select(col(GC.Id), lit(label).as(GC.Label)),
-      Seq(label))
+    * [[Step.repeatEmitUntil]], [[Step.shortestPaths]]) drops the mark.
+    * On a graph with referential integrity, a hop taken directly on this
+    * frontier (no verb in between) reads no vertex frame: it filters each
+    * edge frame by the ids ([[graft.graph.PropertyGraph.traverseIds]]). */
+  def V(label: String, ids: Long*): Step = {
+    val df = graph.verticesById(label, ids).select(col(GC.Id), lit(label).as(GC.Label))
+    Step(graph, df, Seq(label), root = Some((df, ids)))
+  }
 }
 
 final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     captures: Map[String, Seq[String]] = Map.empty,
-    sideEffects: Map[String, (DataFrame, Seq[String])] = Map.empty) {
+    sideEffects: Map[String, (DataFrame, Seq[String])] = Map.empty,
+    private[dsl] val root: Option[(DataFrame, Seq[Long])] = None) {
+
+  /** The ids `G.V(label, ids)` looked up, while the frontier is still the
+    * exact frame it built (any verb that rebuilds `df` ends this), on a
+    * graph whose layout lets a hop filter the edge frames by them
+    * ([[graft.graph.PropertyGraph.traverseIds]]). */
+  private def keyFilterIds: Option[Seq[Long]] =
+    root.collect { case (frame, ids) if (frame eq df) && graph.referentialIntegrity => ids }
 
   /** Filter on a vertex property — Gremlin `has(key, value)`. */
   def has(key: String, value: Any): Step = has(col(key) === lit(value))
@@ -193,8 +204,11 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
       else {
         val sub = df.where(col(GC.Label) === l)
         if (carried.isEmpty) {
-          val r = graph.traverse(sub.select(col(GC.Id)), l, edgeLabel, dir,
-            fillEdge, neighborLabels)
+          val r = keyFilterIds match {
+            case Some(ids) => graph.traverseIds(ids, l, edgeLabel, dir, fillEdge, neighborLabels)
+            case None => graph.traverse(sub.select(col(GC.Id)), l, edgeLabel, dir,
+              fillEdge, neighborLabels)
+          }
           val keep = Seq(col(GC.Dst).as(GC.Id), col(GC.DstLabel).as(GC.Label)) ++
             r.edgePropCols.map(col)
           Some((r.df.select(keep: _*), r))
@@ -263,7 +277,8 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * preserved per depth — join semantics, like [[repeat]] — and
     * `as()`/`select()` captures ride through, so "all people within 3
     * hops, with where they were found" is one plan: n expansions
-    * unioned, no driver loop, no action. Not a fixpoint: for unbounded
+    * unioned, no driver loop, no action (for an unmarked frontier; see
+    * the point-rooted rule below). Not a fixpoint: for unbounded
     * reachability use [[untilFixpoint]].
     *
     * `materialize = true` switches to the SUPERSTEP discipline: each
@@ -277,14 +292,23 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * the affordable form. Costs one action per depth (the frontier's
     * cut, whose row count stops the loop once a frontier drains) and
     * trades plan purity for bounded lineage — the same trade
-    * [[untilFixpoint]] makes. */
+    * [[untilFixpoint]] makes.
+    *
+    * A POINT-ROOTED frontier (`G.V(label, ids)` and the bounded steps
+    * after it, see [[graft.graph.PropertyGraph]]) always takes the
+    * superstep discipline: its depths are a few rows each, so cutting
+    * them costs a small job per depth, while the lazy unroll would
+    * re-scan the hop's whole edge frames once per embedded depth. An
+    * unmarked frontier keeps the lazy unroll unless `materialize` is
+    * set. */
   def repeatEmit(n: Int, emitInitial: Boolean = false,
       emitPred: Column = null, materialize: Boolean = false)(hop: Step => Step): Step = {
     require(n >= 1, s"repeatEmit needs n >= 1, got $n")
     // superstep mode drains: it stops early once a frontier is empty
     // (every deeper one is empty too), read off the frontier's own cut
+    val superstep = materialize || PropertyGraph.isPointRooted(df, GC.Id)
     val hops =
-      if (materialize) drain(n) { (cur, _) => val next = hop(cur); (next, next.df) }
+      if (superstep) drain(n) { (cur, _) => val next = hop(cur); (next, next.df) }
       else (1 to n).scanLeft(this)((cur, _) => hop(cur)).tail
     val fs = (if (emitInitial) Seq((0, this)) else Nil) ++
       hops.zipWithIndex.map { case (st, i) => (i + 1, st) }
@@ -787,7 +811,9 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * semantics, computed as the natural join of per-pattern binding
     * frames instead of its per-traverser enumerator — each pattern is
     * ONE subplan seeded from the candidates bound so far, and Catalyst
-    * orders/broadcasts the joins).
+    * orders/broadcasts the joins). Bindings of a point-rooted seed keep
+    * the mark on their `id` field ([[as]]), so each pattern's hops
+    * broadcast the candidates.
     *
     * Patterns must be listed so each one's start variable is already
     * bound (by the seed or an earlier pattern's end) — the explicit
@@ -796,9 +822,8 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * keeps only solutions where both bindings agree. */
   def matchAll(seedVar: String, patterns: MatchPattern*): DataFrame = {
     require(patterns.nonEmpty, "match needs at least one pattern")
-    def element = struct(col(GC.Label).as("label"), col(GC.Id).cast("bigint").as("id"))
     var bound = Map(seedVar -> labels)
-    var solutions = df.select(element.as(seedVar)).distinct()
+    var solutions = df.select(element(df).as(seedVar)).distinct()
     patterns.foreach { p =>
       require(bound.contains(p.from),
         s"match pattern '${p.from}'->'${p.to}': start variable '${p.from}' " +
@@ -809,9 +834,9 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
         .select(col(p.from).getField("id").as(GC.Id),
           col(p.from).getField("label").as(GC.Label))
         .distinct()
-      val tagged = Step(graph, seed.withColumn(cap, element), bound(p.from))
+      val tagged = Step(graph, seed.withColumn(cap, element(seed)), bound(p.from))
       val out = p.branch(tagged)
-      val pairs = out.df.select(col(cap).as(p.from), element.as(p.to)).distinct()
+      val pairs = out.df.select(col(cap).as(p.from), element(out.df).as(p.to)).distinct()
       solutions = solutions.join(pairs,
         solutions.columns.intersect(pairs.columns).toSeq)
       bound += (p.to ->
@@ -844,18 +869,28 @@ final case class Step(graph: PropertyGraph, df: DataFrame, labels: Seq[String],
     * `struct<label, id>` column that rides every subsequent expansion
     * alongside `_path` — per traverser, like the reference's inherited
     * TinkerPop path engine. Re-using a name overwrites the capture
-    * (TinkerPop's last-wins convention). */
+    * (TinkerPop's last-wins convention). A point-rooted position's
+    * capture keeps the mark on its `id` field, so ids read back from it
+    * ([[select]], `getField("id")`) are point-rooted too. */
   def as(name: String): Step =
-    copy(
-      df = df.withColumn(s"$CapPrefix$name",
-        struct(col(GC.Label).as("label"), col(GC.Id).cast("bigint").as("id"))),
+    copy(df = df.withColumn(s"$CapPrefix$name", element(df)),
       captures = captures + (name -> labels))
+
+  /** `frame`'s current element as the `struct<label, id>` of a capture
+    * or a match binding; a point-rooted `_vid`'s mark rides on `id`. */
+  private def element(frame: DataFrame): Column = {
+    val mark =
+      if (PropertyGraph.isPointRooted(frame, GC.Id)) PropertyGraph.PointRooted
+      else org.apache.spark.sql.types.Metadata.empty
+    struct(col(GC.Label).as("label"), col(GC.Id).cast("bigint").as("id", mark))
+  }
 
   /** Gremlin `select(name)`: move each traverser back to its capture.
     * Multiplicity is per-traverser (a customer captured before a 3-order
     * fan-out comes back 3 times — `dedup()` for set semantics). Carried
     * columns (`_path`, other captures) survive; edge-property columns
-    * from the abandoned position do not. */
+    * from the abandoned position do not. A capture of a point-rooted
+    * position ([[as]]) gives back a point-rooted frontier. */
   def select(name: String): Step = {
     val cap = s"$CapPrefix$name"
     require(df.columns.contains(cap), s"""no as("$name") capture in scope""")

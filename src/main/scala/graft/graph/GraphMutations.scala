@@ -16,7 +16,9 @@ object GraphMutations {
 
   /** Derived graph sharing the source's graph-variables: mutations return
     * new immutable graphs, but metadata (schema version, lineage tags)
-    * belongs to the graph's identity and must survive them. */
+    * belongs to the graph's identity and must survive them. A derived
+    * graph records no referential integrity (see [[PropertyGraph]]):
+    * appended rows are not checked against the vertex frames. */
   private def derived(g: PropertyGraph,
       vs: Map[String, DataFrame],
       es: Map[graft.model.EdgeSpec, DataFrame]): PropertyGraph = {

@@ -38,6 +38,19 @@ import graft.operators.TraversalResult
   * Unmarked frames — scans, `has` over a scan, [[traverseAll]] — plan
   * exactly as Catalyst chooses.
   *
+  * REFERENTIAL INTEGRITY is a fact of the layout, recorded when the
+  * graph is built and never a caller option: every edge endpoint
+  * matches exactly one row (its key is unique) of its label's vertex
+  * frame. `GraphLoader.tpch` (the fixture foreign keys that
+  * `declareTpchRi` also trusts) and `GraphLoader.snbFromTables` (whose
+  * generator keeps every endpoint in range) record it; a graph built
+  * with `new PropertyGraph(...)`, [[inducedSubgraph]] or a
+  * `GraphMutations` call (`addEdges` checks no endpoint) lacks it. On
+  * such a graph a hop from literal ids needs no vertex lookup at all
+  * ([[traverseIds]]): the frontier join is a key filter on the edge
+  * frame, the reference's read of only the named vertices' edge lists
+  * (TorcGraph.java:479-585).
+  *
   * Each vertex frame carries `_vid: bigint` (the natural key within the
   * label's id space) plus its natural property columns. Each edge frame
   * carries `_src`, `_dst` plus edge property columns. Full 128-bit ids
@@ -45,10 +58,17 @@ import graft.operators.TraversalResult
   * generic `unifiedVertices` / `unifiedEdges` views — hot paths join on
   * plain longs, which Tungsten handles fastest.
   */
-final class PropertyGraph(
+final class PropertyGraph private[graft] (
     val spark: SparkSession,
     val vertexFrames: Map[String, DataFrame],
-    val edgeFrames: Map[EdgeSpec, DataFrame]) {
+    val edgeFrames: Map[EdgeSpec, DataFrame],
+    private[graft] val referentialIntegrity: Boolean) {
+
+  /** A graph over caller-built frames: no referential integrity is
+    * assumed (see the class doc). */
+  def this(spark: SparkSession, vertexFrames: Map[String, DataFrame],
+      edgeFrames: Map[EdgeSpec, DataFrame]) =
+    this(spark, vertexFrames, edgeFrames, referentialIntegrity = false)
 
   /** Graph-level metadata KV store — TinkerPop `graph.variables()`
     * (persisted/restored as a sidecar by GraphLoader persist/open). */
@@ -111,7 +131,8 @@ final class PropertyGraph(
     * Build side: a point-rooted frontier (see the class doc) is
     * broadcast and the edge frame streams, and the output's `_dst` stays
     * point-rooted. Any other frontier joins as Catalyst chooses, with an
-    * unmarked output.
+    * unmarked output. On a graph with referential integrity (class doc),
+    * a frontier of literal ids is a key filter instead ([[traverseIds]]).
     *
     * @param frontier DataFrame with column `_vid` (set semantics: callers
     *                 pass unique ids, as the reference dedups frontiers
@@ -139,6 +160,40 @@ final class PropertyGraph(
       val ids = fr.select(col(GC.Id).as("_fid"))
       if (point) broadcast(ids) else ids
     }.orNull
+    adjacency(frontierLabel, edgeLabel, dir, fillEdge, neighborLabels, point) { (e, key) =>
+      if (f == null) e else e.join(f, e(key) === f("_fid"))
+    }
+  }
+
+  /** [[traverse]] from `verticesById(frontierLabel, ids)` on a graph
+    * with referential integrity (see the class doc): no vertex frame is
+    * read, each edge frame is filtered by `key IN ids`, and the output's
+    * `_dst` is point-rooted. Under the guarantee this is row for row the
+    * join [[traverse]] plans (a missing id has no edges, and each
+    * endpoint's vertex row is unique). */
+  private[graft] def traverseIds(
+      ids: Seq[Long],
+      frontierLabel: String,
+      edgeLabel: String,
+      dir: Direction,
+      fillEdge: Boolean,
+      neighborLabels: Seq[String]): TraversalResult = {
+    require(referentialIntegrity, "a key-filter hop needs referential integrity")
+    adjacency(frontierLabel, edgeLabel, dir, fillEdge, neighborLabels, point = true) {
+      (e, key) => e.where(e(key).isin(ids: _*))
+    }
+  }
+
+  /** The per-spec body of a hop: `restrict(edgeFrame, key)` keeps the
+    * edge rows whose frontier-side `key` column is in the frontier. */
+  private def adjacency(
+      frontierLabel: String,
+      edgeLabel: String,
+      dir: Direction,
+      fillEdge: Boolean,
+      neighborLabels: Seq[String],
+      point: Boolean)(
+      restrict: (DataFrame, String) => DataFrame): TraversalResult = {
     val dstMeta = if (point) PropertyGraph.PointRooted else Metadata.empty
 
     def expand(outbound: Boolean): Seq[DataFrame] = {
@@ -150,8 +205,7 @@ final class PropertyGraph(
         .sortBy(s => (s.srcLabel, s.dstLabel))
       specs.map { spec =>
         val e = edgeFrames(spec)
-        val joinCol = if (outbound) GC.Src else GC.Dst
-        val joined = if (f == null) e else e.join(f, e(joinCol) === f("_fid"))
+        val joined = restrict(e, if (outbound) GC.Src else GC.Dst)
         val (srcId, dstId, dstLab) =
           if (outbound) (e(GC.Src), e(GC.Dst), spec.dstLabel)
           else (e(GC.Dst), e(GC.Src), spec.srcLabel)

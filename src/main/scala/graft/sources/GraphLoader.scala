@@ -74,7 +74,8 @@ object GraphLoader {
       EdgeSpec("SUPPLIED_BY", "Order", "Supplier") -> edge(lineitem, "l_orderkey", "l_suppkey",
         Seq("l_linenumber", "l_quantity")))
 
-    new PropertyGraph(spark, vertices, edges)
+    // every edge key is a fixture foreign key (see declareTpchRi)
+    new PropertyGraph(spark, vertices, edges, referentialIntegrity = true)
   }
 
   /** Install [[graft.plans.RiJoinElimination]] on the session and declare
@@ -316,6 +317,10 @@ object GraphLoader {
       .select(col("_cid").as(GC.Src),
         ((col("_cid") * 31 + 7) % col("_n")).as(GC.Dst))
 
+    // every endpoint is an existing, unique vertex key: person keys are
+    // 0..N-1 (the documented customer layout) and generated targets are
+    // taken mod N; post creators and comment orders are the fixture's
+    // foreign keys; a reply's parent is a comment of its own order
     new PropertyGraph(spark,
       Map("Person" -> persons, "Post" -> posts, "Comment" -> comment),
       Map(
@@ -323,7 +328,8 @@ object GraphLoader {
         EdgeSpec("HAS_CREATOR", "Post", "Person") -> creators,
         EdgeSpec("HAS_CREATOR", "Comment", "Person") -> commentCreator,
         EdgeSpec("REPLY_OF", "Comment", "Post") -> replyOfPost,
-        EdgeSpec("REPLY_OF", "Comment", "Comment") -> replyOfComment))
+        EdgeSpec("REPLY_OF", "Comment", "Comment") -> replyOfComment),
+      referentialIntegrity = true)
   }
 
   /** Persist a graph as partitioned Parquet: one directory per vertex

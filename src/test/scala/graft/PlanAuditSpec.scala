@@ -424,7 +424,13 @@ class PlanAuditSpec extends SparkSpec {
         .select(col(GC.Id), col(graft.dsl.Step.DepthCol)),
       "order_lines" -> G(tpch).V("Customer", 19L).in("PLACED_BY", "Order")
         .outE("CONTAINS", "Part").toDF.select(col(GC.Id), col("l_extendedprice"))
-        .orderBy(desc("l_extendedprice"), asc(GC.Id)).limit(20))
+        .orderBy(desc("l_extendedprice"), asc(GC.Id)).limit(20),
+      // q36's shape: the ids read back from an as() capture keep the
+      // mark, so the final hydrate builds on the replies
+      "q36" -> snb.hydrate(g.V("Person", 19L).in("HAS_CREATOR", "Post")
+          .in("REPLY_OF", "Comment").as("c").out("HAS_CREATOR", "Person").toDF
+          .select(col("_as_c").getField("id").as("comment_id"), col(GC.Id).as("replier_id")),
+          "comment_id", "Comment", Seq("created")))
     shapes.foreach { case (n, df) =>
       val p = physical(df)
       assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty, s"$n plans a SortMergeJoin:\n$p")
@@ -434,7 +440,9 @@ class PlanAuditSpec extends SparkSpec {
     // Control: an unmarked frontier carries no broadcast hint. At
     // sf0.001 every frame is under the broadcast threshold, so Catalyst
     // would broadcast the Person scan on its own; with the threshold off,
-    // only a hint can plan a broadcast.
+    // only a hint can plan a broadcast. The first hop from V(label, ids)
+    // joins nothing on this graph (the next test), so the marked
+    // frontier checked is hop 1's output.
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
@@ -442,10 +450,51 @@ class PlanAuditSpec extends SparkSpec {
       val scan = physical(g.V("Person").out("KNOWS").toDF)
       assert(scan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
         s"an unmarked frontier was broadcast:\n$scan")
-      val point = physical(g.V("Person", 19L).out("KNOWS").toDF)
+      val point = physical(g.V("Person", 19L).out("KNOWS").out("KNOWS").toDF)
       assert(point.collect { case b: BroadcastExchangeExec => b }.nonEmpty,
         s"a point-rooted frontier was not broadcast:\n$point")
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the first hop from V(label, ids) is a key filter only where the layout guarantees the endpoints") {
+    // GraphLoader's SNB and TPC-H layouts record referential integrity,
+    // so a hop taken straight on V(label, ids) filters the edge frames
+    // by the ids and reads no vertex frame: no join at all. The same
+    // frames wrapped in `new PropertyGraph` carry no such guarantee and
+    // keep the join that drops edges of missing vertices.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.dsl.{G, Step}
+    import graft.graph.PropertyGraph
+    import graft.sources.GraphLoader
+
+    def joins(step: Step): Int = {
+      val p: SparkPlan = step.toDF.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      p.collect { case j: BaseJoinExec => j }.size
+    }
+    val snb = GraphLoader.snb(spark, sf0001, materializeComments = true)
+    val tpch = GraphLoader.tpch(spark, sf0001)
+    def hops(graph: PropertyGraph): Seq[(String, Step)] = {
+      val g = G(graph)
+      if (graph.vertexFrames.contains("Person")) Seq(
+        "friends" -> g.V("Person", 19L).bothE("KNOWS"),
+        "posts" -> g.V("Person", 19L).in("HAS_CREATOR", "Post"),
+        "fof hop 1" -> g.V("Person", 19L, 97L).both("KNOWS"),
+        "thread hop 1" -> g.V("Post", 1L).in("REPLY_OF", "Comment"))
+      else Seq(
+        "order_lines hop 1" -> g.V("Customer", 19L).in("PLACED_BY", "Order"),
+        "nation both" -> g.V("Nation", 5L).both("IN_NATION"))
+    }
+    Seq(snb, tpch).foreach { graph =>
+      hops(graph).foreach { case (n, st) => assert(joins(st) == 0, s"$n plans a join") }
+      val plain = new PropertyGraph(spark, graph.vertexFrames, graph.edgeFrames)
+      hops(plain).foreach { case (n, st) =>
+        assert(joins(st) > 0, s"$n over new PropertyGraph lost its existence join") }
+    }
   }
 
   test("pipeline composition (e31) is one pruned plan end to end") {

@@ -912,6 +912,17 @@ class GSpec extends SparkSpec {
       snb("hydrate") { s =>
         sg.hydrate(s.in("HAS_CREATOR", "Post").toDF, GC.Id, "Post", Seq("created", "score"))
       }
+      if (mode == "point-read") {
+        // the steps that take the first hop straight on V's frame, and
+        // the superstep repeatEmit's initial depth and emit filter
+        // (V(label) keeps the property columns, which depth 0 emits)
+        snb("repeatEmit(3, emitInitial)", "Post", Seq(1L, 4L, 4L, 999999L))(
+          _.repeatEmit(3, emitInitial = true)(_.in("REPLY_OF", "Comment")).toDF
+            .select(GC.Id, GC.Label, Step.DepthCol))
+        snb("repeatEmit(3, emitPred)", "Post", Seq(1L, 4L, 4L, 999999L))(
+          _.repeatEmit(3, emitPred = col("length") > 60)(_.in("REPLY_OF", "Comment")).toDF)
+        snb("union(out, in)")(_.union(_.out("KNOWS"), _.in("KNOWS")).toDF)
+      }
     }
     val tg = g.graph
     val custs = Seq(19L, 112L, 19L, 999999L)
@@ -953,5 +964,55 @@ class GSpec extends SparkSpec {
         p.union(_.out("KNOWS"), _.untilFixpoint(3)(_.both("KNOWS"))))
       .zipWithIndex.foreach { case (s, i) => assert(!marked(s), s"loop step $i kept the mark") }
     assert(!marked(G(sg).V("Person").out("KNOWS")), "a scan frontier is marked")
+  }
+
+  test("a hop from literal ids keeps the existence check unless the layout guarantees the endpoints") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.graph.{GraphMutations, PropertyGraph}
+    import graft.model.{EdgeSpec, GraphColumns => GC}
+    def joins(df: org.apache.spark.sql.DataFrame): Int = {
+      val p: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      p.collect { case j: BaseJoinExec => j }.size
+    }
+    val knows = EdgeSpec("KNOWS", "Person", "Person")
+    val sg = GraphLoader.snb(spark, sf0001, materializeComments = true)
+    val missing = 999999L
+    val dangling = Seq((missing, 19L, 1L)).toDF(GC.Src, GC.Dst, "since")
+    assert(sg.referentialIntegrity, "the SNB layout lost its guarantee")
+    // the same frames plus one KNOWS edge whose _src is no Person
+    val plain = new PropertyGraph(spark, sg.vertexFrames,
+      sg.edgeFrames + (knows -> sg.edgeFrames(knows).unionByName(dangling)))
+    val added = GraphMutations.addEdges(sg, knows, dangling)
+    Seq("new PropertyGraph" -> plain, "addEdges" -> added).foreach { case (n, graph) =>
+      assert(!graph.referentialIntegrity, s"$n: claims a guarantee it cannot have")
+      assert(G(graph).V("Person", missing).out("KNOWS").count() == 0,
+        s"$n: a hop from a missing vertex found edges")
+      assert(joins(G(graph).V("Person", 19L).out("KNOWS").toDF) == 1,
+        s"$n: the hop does not check that the frontier exists")
+    }
+    assert(joins(G(sg).V("Person", 19L).out("KNOWS").toDF) == 0)
+  }
+
+  test("a capture of a point-rooted position keeps the mark through select and matchAll") {
+    import graft.graph.PropertyGraph.isPointRooted
+    import graft.model.{GraphColumns => GC}
+    val sg = GraphLoader.snb(spark, sf0001, materializeComments = true)
+    def idMarked(df: org.apache.spark.sql.DataFrame, struct: String): Boolean =
+      isPointRooted(df.select(col(struct).getField("id").as(GC.Id)), GC.Id)
+    val p = G(sg).V("Person", 19L)
+    val captured = p.as("a").both("KNOWS")
+    assert(idMarked(captured.toDF, "_as_a"))
+    assert(isPointRooted(captured.select("a").toDF, GC.Id))
+    val solutions = p.matchAll("a",
+      MatchPattern("a", "b", _.both("KNOWS")),
+      MatchPattern("b", "q", _.in("HAS_CREATOR", "Post")))
+    Seq("a", "b", "q").foreach(v => assert(idMarked(solutions, v), s"binding $v lost the mark"))
+    val scan = G(sg).V("Person").as("a").both("KNOWS")
+    assert(!idMarked(scan.toDF, "_as_a") && !isPointRooted(scan.select("a").toDF, GC.Id))
   }
 }
