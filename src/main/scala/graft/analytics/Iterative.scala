@@ -444,8 +444,7 @@ object Iterative {
 
   /** Fold ONE batch of undirected edges into a components state — the
     * incremental-maintenance primitive behind
-    * [[incrementalComponents]] and the streaming merge
-    * ([[graft.streaming.Streams.componentsSink]]). `state` is
+    * [[incrementalComponents]]' distributed fold and q49. `state` is
     * `(_v, _lbl)` with the invariant `_lbl(v)` = MIN member of v's
     * component over the edges folded so far (what [[minLabelLoop]]
     * produces, so the invariant is self-sustaining); `batch` is a
@@ -464,7 +463,7 @@ object Iterative {
     * graph — the state itself is touched once per batch by a
     * hash-partitioned equi-join on `_lbl`, and the collect is bounded
     * by the threshold, never corpus-sized. Min of mins is the global
-    * min, so merged components keep the invariant exactly; StreamsSpec
+    * min, so merged components keep the invariant exactly; IterativeSpec
     * pins both paths to the same fixpoint. */
   def mergeComponentsBatch(state: DataFrame, batch: DataFrame,
       maxIter: Int = 30,
@@ -478,9 +477,9 @@ object Iterative {
         coalesce(col("_dl"), col("_d")).as("_d"))
     // SIZE-ADAPTIVE merge of the contracted graph. Per-batch work is
     // batch-sized BY CONSTRUCTION (contracted nodes <= 2|batch|), so a
-    // bounded batch — every streaming micro-batch, most incremental
-    // folds — resolves its representatives with the min-rep union-find
-    // (exactly the minLabelLoop fixpoint) instead of ~5 serial
+    // bounded batch — most incremental folds — resolves its
+    // representatives with the min-rep union-find (exactly the
+    // minLabelLoop fixpoint) instead of ~5 serial
     // distributed rounds at the per-action job floor. Above the bound
     // the distributed fixpoint runs over the contracted batch's
     // checkpoint.
@@ -510,13 +509,12 @@ object Iterative {
       .join(state.select("_v"), Seq("_v"), "left_anti")
     val grown = state.unionByName(
       newVerts.select(col("_v"), col("_v").as("_lbl")))
-    // loop-carried across batches (and across an UNBOUNDED stream in
-    // ComponentsMaintainer): stats must be cut or they compound per fold.
-    // `mapped` (the contracted batch, when checkpointed) and `reps`
-    // (the loop's final state) have no consumer once this cut lands —
-    // released here, or an unbounded stream strands two block sets per
-    // micro-batch. The caller's `state` is NOT touched (ownership
-    // stays with the fold).
+    // loop-carried across batches: stats must be cut or they compound
+    // per fold. `mapped` (the contracted batch, when checkpointed) and
+    // `reps` (the loop's final state) have no consumer once this cut
+    // lands — released here, or every fold strands two block sets per
+    // batch. The caller's `state` is NOT touched (ownership stays with
+    // the fold).
     graft.plans.Supersteps.cut(
       grown.join(reps.select(col("_v").as("_old"), col("_lbl").as("_new")),
           grown("_lbl") === col("_old"), "left")
@@ -525,11 +523,10 @@ object Iterative {
   }
 
   /** Connected components by FOLDING edge batches through
-    * [[mergeComponentsBatch]] — the batch twin of the streaming merge,
-    * and the proof obligation that order of arrival doesn't matter
-    * (each fold preserves the min-representative invariant, so any
-    * split of the same edge multiset converges to the same fixpoint as
-    * one [[connectedComponents]] pass). `vertices` seeds the state so
+    * [[mergeComponentsBatch]] — the proof obligation that order of
+    * arrival doesn't matter (each fold preserves the min-representative
+    * invariant, so any split of the same edge multiset converges to the
+    * same fixpoint as one [[connectedComponents]] pass). `vertices` seeds the state so
     * isolated vertices appear as singleton components, exactly like
     * the whole-graph pass. Frames are raw bigint `(src, dst)` /
     * `(id)`; multi-label callers pack first. */
@@ -542,8 +539,8 @@ object Iterative {
     // representatives by the min-rep rule, grow by brand-new vertices,
     // relabel — runs on driver maps, batch by batch in arrival order,
     // preserving the min-representative invariant exactly as
-    // [[mergeComponentsBatch]] does (StreamsSpec pins the streaming twin
-    // to the same fixpoint). Above the cap the distributed fold runs.
+    // [[mergeComponentsBatch]] does (IterativeSpec pins both paths to
+    // the same fixpoint). Above the cap the distributed fold runs.
     val inputs =
       vertices.select(col(vertices.columns.head).cast("bigint").as("_v")) +:
       batches.map { b =>

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * scale (the averaged model is a lazy union of the checkpointed
   * per-round frames, folded in one final aggregation — no extra action
   * per round). Scoring a corpus under a frozen model is the same
-  * broadcast join + sum — embarrassingly parallel, streaming-safe.
+  * broadcast join + sum — embarrassingly parallel.
   */
 object Classify {
 
@@ -106,14 +106,6 @@ object Classify {
     feats.join(broadcast(weights), Seq("_b"), "left")
       .groupBy("_id")
       .agg(sum(coalesce(col("_w"), lit(0L))).as("_margin"))
-
-  /** The trained model as a literal map for frozen-model deployment
-    * (the streaming filter's input — `Streams.classifierQualityFilter`).
-    * The model is at most buckets+1 rows, so the collect is the
-    * `trainCentroids` portability discipline: kilobytes to the driver,
-    * never data. */
-  def weightsMap(weights: DataFrame): Map[Long, Long] =
-    weights.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Threshold-sweep evaluation of a trained model — the
     * precision/recall table a pipeline reads before picking the keep

@@ -60,34 +60,6 @@ object Dedup {
   def shingles(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     ngrams(docs, 3, idCol, textCol)
 
-  /** Drop shingles whose DOCUMENT frequency exceeds `maxDf` — the
-    * structural fix for boilerplate n-grams (site footers, licence
-    * headers) that carry zero dedup signal but dominate minhash
-    * signatures and route whole cohorts into shared LSH buckets
-    * ([[graft.operators.Skew.capBuckets]] then has to drop those
-    * buckets wholesale, losing the cohort's REAL near-dups too; the DF
-    * filter removes only the boilerplate gram, keeping the rest of
-    * each signature informative). One distinct + count shuffle on the
-    * gram, then an anti-join. Input/output: (id, s) shingle rows. */
-  def dropStopShingles(sh: DataFrame, maxDf: Long): DataFrame = {
-    require(maxDf > 0, s"maxDf must be positive, got $maxDf")
-    val hot = sh.select(col("id"), col("s")).distinct()
-      .groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxDf)
-      .select(col("s"))
-    sh.join(hot, Seq("s"), "left_anti")
-  }
-
-  /** [[minhashCandidatePairs]] with boilerplate shingles removed by
-    * document-frequency cap before signature building. Signatures are
-    * NOT comparable with the unfiltered form (different shingle sets);
-    * use one form consistently per corpus. */
-  def minhashCandidatePairsFiltered(docs: DataFrame, maxShingleDf: Long,
-      maxBucket: Long = Skew.DefaultBucketCap): DataFrame =
-    candidatePairsFromSignatures(
-      signaturesFromShingles(dropStopShingles(shingles(docs), maxShingleDf)),
-      maxBucket, "minhash_band_dffiltered")
-
   /** Universal-hash permutation constants (Carter–Wegman multiply-add,
     * splitmix64-derived, A odd for bijectivity mod 2^64). Public so the
     * SQL oracle inlines the identical literals. */
@@ -113,8 +85,8 @@ object Dedup {
   def minhashSignatures(docs: DataFrame): DataFrame =
     signaturesFromShingles(shingles(docs))
 
-  /** Signature build over an explicit (id, s) shingle frame — shared by
-    * the plain and DF-filtered pipelines. */
+  /** Signature build over an explicit (id, s) shingle frame — shared
+    * with [[dedupScoreboard]], which already holds the shingles. */
   private def signaturesFromShingles(sh: DataFrame): DataFrame = {
     val base = conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long")
     val aggs = (0 until NumHashes).map(j =>
@@ -126,11 +98,9 @@ object Dedup {
 
   /** Row-LOCAL minhash signature columns: identical values to
     * [[minhashSignatures]] but computed entirely within the document row
-    * via higher-order array functions — no explode, no shuffle. This is
-    * the form streaming pipelines need (no stateful aggregation before
-    * the dedup operator) and single-pass batch pipelines can use to
-    * skip the signature shuffle. Documents with fewer than 3 tokens get
-    * NULL components (they have no shingles). */
+    * via higher-order array functions — no explode, no shuffle, so a
+    * single-pass pipeline can skip the signature shuffle. Documents with
+    * fewer than 3 tokens get NULL components (they have no shingles). */
   def minhashSignatureCols(textCol: Column): Seq[Column] = {
     val w = split(textCol, " ")
     val shingleArr = when(size(w) >= 3,
@@ -143,43 +113,6 @@ object Dedup {
       array_min(transform(hashes, h =>
         graft.functions.mulAddWrap(h, MinhashA(j), MinhashB(j)))).as(s"h$j"))
   }
-
-  /** Bind `c` to a lambda variable so `f`'s body references an
-    * already-evaluated value instead of re-evaluating the expression at
-    * every use site — higher-order functions are interpreted with no
-    * common-subexpression elimination, so this is the only way to share
-    * work inside a single Column. (`transform` over a 1-element array
-    * is the binding; `getItem(0)` unwraps.) */
-  private def boundTo(c: Column)(f: Column => Column): Column =
-    transform(array(c), f).getItem(0)
-
-  /** Row-local band hashes (the [[minhashCandidatePairs]] banding over
-    * [[minhashSignatureCols]]): array of [[NumBands]] md5 band keys.
-    * Every stage (token split, shingles, base hashes, signature) is
-    * lambda-bound via [[boundTo]] so it evaluates ONCE per row — the
-    * naive composition re-ran the whole md5-per-shingle pipeline for
-    * each of the 2x[[NumBands]] signature component references, ~8x the
-    * work on the streaming hot path. */
-  def minhashBandCols(textCol: Column): Column =
-    boundTo(split(textCol, " ")) { w =>
-      boundTo(when(size(w) >= 3,
-          transform(sequence(lit(0), size(w) - 3),
-            i => concat_ws(" ",
-              element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3))))
-        .otherwise(array())) { sh =>
-        boundTo(transform(sh, s =>
-            conv(substring(md5(s), 1, 15), 16, 10).cast("long"))) { hs =>
-          boundTo(array((0 until NumHashes).map(j =>
-              array_min(transform(hs, h =>
-                graft.functions.mulAddWrap(h, MinhashA(j), MinhashB(j))))): _*)) { sig =>
-            array((0 until NumBands).map { b =>
-              md5(concat(sig.getItem(2 * b).cast("string"),
-                sig.getItem(2 * b + 1).cast("string")))
-            }: _*)
-          }
-        }
-      }
-    }
 
   /** LSH candidate pairs: signatures are cut into [[NumBands]] bands of 2
     * components; documents sharing any band hash become a candidate pair.
@@ -263,10 +196,8 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Batch index-reuse dedup — the production crawl-ingest shape whose
-    * streaming twin is
-    * [[graft.streaming.Streams]]' near-dup face: dedup a NEW shard
-    * against an EXISTING corpus through its persisted MinHash
+  /** Batch index-reuse dedup — the production crawl-ingest shape: dedup
+    * a NEW shard against an EXISTING corpus through its persisted MinHash
     * signature index (`index` = the [[minhashSignatures]] output,
     * written once at ingest time) without recomputing a single corpus
     * signature. Banding over the index is signature-arithmetic only

@@ -73,16 +73,6 @@ object Multimodal {
     }
   }
 
-  /** Frame-sampling stub for video payloads: emits `n` evenly-spaced
-    * synthetic frame offsets per row (one output row per frame), the
-    * explode shape a real frame sampler produces. */
-  def sampleFrames(media: Dataset[MediaRow], n: Int): DataFrame = {
-    media.toDF().where(col("kind") === "video")
-      .select(col("media_id"),
-        explode(sequence(lit(0), lit(n - 1))).as("frame_idx"),
-        (length(col("bytes")) * col("frame_idx") / n).cast("int").as("byte_offset"))
-  }
-
   /** Resize stub: per-partition payload rewrite to target dimensions.
     * The STUB truncates/pads the payload deterministically in proportion
     * to the pixel-count change; a real binding calls the codec's scaler

@@ -78,10 +78,8 @@ object Pca {
     transform(embedding, x => floor(x.cast("double") * lit(QScale.toDouble)))
 
   /** The exact integer PC1 projection of an embedding column under a
-    * frozen direction — shared by [[pc1Scores]] and the streaming face
-    * ([[graft.streaming.Streams.pcaScoreFilter]]), so batch and ingest
-    * scores are bit-identical BY CONSTRUCTION, not by parallel
-    * maintenance. Row-local: the direction rides as a literal array. */
+    * frozen direction — [[pc1Scores]]' row-local core: the direction
+    * rides as a literal array. */
   def pc1Col(embedding: Column, direction: Array[Long]): Column = {
     val vLit = array(direction.map(x => lit(x)): _*)
     aggregate(zip_with(quantizeCol(embedding), vLit, (a, b) => a * b),
@@ -233,17 +231,6 @@ object Pca {
       t += 1
     }
     out.result()
-  }
-
-  /** Second principal direction — [[pcaDirections]] at k = 2 for
-    * callers that already hold PC1 (asserted identical: the chain is
-    * deterministic, so the passed v1 must BE the k=1 head). */
-  def pc2Direction(n: Long, s: Array[BigInt], g: Array[Array[BigInt]],
-      v1: Array[Long]): Array[Long] = {
-    val dirs = pcaDirections(n, s, g, 2)
-    require(java.util.Arrays.equals(dirs.head, v1),
-      "v1 is not this Gram pass's PC1")
-    dirs(1)
   }
 
   /** The shared canonical-sign power iteration over an integer matrix

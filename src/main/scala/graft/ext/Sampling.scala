@@ -112,14 +112,9 @@ object Sampling {
   }
 
   /** The [[weightedMixFp]] keep thresholds as their own group-
-    * cardinality frame `(source, thr)` — split out so a mix PROFILE
-    * can be frozen once (offline, on a corpus census) and applied many
-    * times: by the batch mixer above, or at INGEST by the stateless
-    * streaming face ([[graft.streaming.Streams.mixFilter]], which
-    * takes [[mixThresholdMap]]'s literal form — the frozen-offline-
-    * model discipline of the classifier/surprisal filters). A key is
-    * kept iff its 60-bit hash < thr(group); the binding group's
-    * threshold is exactly 2^60 (keep all). */
+    * cardinality frame `(source, thr)`. A key is kept iff its 60-bit
+    * hash < thr(group); the binding group's threshold is exactly 2^60
+    * (keep all). */
   def mixThresholdsFp(df: DataFrame, group: Column,
       weights: DataFrame): DataFrame = {
     val cnt = df.groupBy(group.as("_g")).agg(count(lit(1)).as("_n"))
@@ -133,15 +128,6 @@ object Sampling {
         s"CAST((CAST(_q AS DECIMAL(38, 0)) * ${1L << HashBits}L) div _qm AS BIGINT)")
         .as("thr"))
   }
-
-  /** [[mixThresholdsFp]] collected to a literal map — the driver
-    * footprint is GROUP CARDINALITY (the [[weightedMix]] precedent),
-    * which is what a streaming query needs: the profile rides the plan
-    * as a literal, so the ingest filter is stateless and row-local. */
-  def mixThresholdMap(df: DataFrame, group: Column,
-      weights: DataFrame): Map[String, Long] =
-    mixThresholdsFp(df, group, weights).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Temperature-scaled mixture weights — the multilingual/multi-source
     * sampling trick (mBERT; Conneau et al. 2020 "Unsupervised

@@ -241,11 +241,11 @@ object Similarity {
   }
 
   /** The centroid frame collected into a driver-side (cids, matrix)
-    * grid, sorted by cid — the streaming faces' "inlined constants"
-    * discipline ([[graft.streaming.Streams.streamingSemanticDedup]])
-    * applied to the batch assign/train paths. Float elements upcast to
-    * double EXACTLY (the same per-element upcast the joined dot-product
-    * fold performed), so downstream arithmetic is bit-identical. */
+    * grid, sorted by cid, so the batch assign/train paths score against
+    * driver-side constants instead of a joined centroid frame. Float
+    * elements upcast to double EXACTLY (the same per-element upcast the
+    * joined dot-product fold performed), so downstream arithmetic is
+    * bit-identical. */
   private def collectCentroidGrid(cen: DataFrame)
       : (Array[Long], Array[Array[Double]]) = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}

@@ -43,12 +43,8 @@ object Snapshot {
       .groupBy("status").agg(count(lit(1)).as("n_docs"))
 
   /** The frozen older-snapshot hash index `(id, _h_old, _in_old)` —
-    * the 16-byte-per-row artifact BOTH diff faces consume: [[diff]]'s
-    * full-outer join here, and the per-micro-batch ingest classifier
-    * ([[graft.streaming.Streams.snapshotDiffFilter]]) as its static
-    * side — shared COLUMN, not parallel arithmetic, so batch and
-    * stream hashes are bit-identical by construction (the pc1Col
-    * discipline). Presence is a LITERAL flag, not hash nullness: a
+    * the 16-byte-per-row artifact [[diff]]'s full-outer join consumes.
+    * Presence is a LITERAL flag, not hash nullness: a
     * row whose content is NULL hashes to NULL, and classifying on the
     * hash would read it as added/removed even though its id exists in
     * both snapshots (advisor, round 13). */
@@ -401,8 +397,7 @@ object Snapshot {
   /** The dashboard face of a [[healthSums]] mass frame: drop
     * zero-mass groups (a recompute would never show them) and derive
     * the mean — the ONE division, deferred to read time so the mass
-    * stays mergeable. Shared by [[refreshHealth]] and the streaming
-    * maintainer ([[graft.streaming.Streams.HealthMaintainer]]). */
+    * stays mergeable. */
   def finishHealth(sums: DataFrame): DataFrame =
     sums.where(col("n_docs") > 0)
       .select(col("source"), col("lang"), col("n_docs"), col("sum_tokens"),

@@ -318,29 +318,6 @@ object Text {
       .agg(min(graft.functions.rollingHash64(col("s"))).as("winnow_fp"))
       .withColumnRenamed("id", "doc_id")
 
-  /** Full winnowing (Schleimer/Wilkerson/Aiken, "Winnowing: Local
-    * Algorithms for Document Fingerprinting", SIGMOD 2003): slide a
-    * window of `window` consecutive shingle hashes over each document
-    * and keep the minimum of every window — guaranteeing any shared run
-    * of `window + shingle - 1` tokens produces at least one shared
-    * fingerprint, which the single global min ([[winnowFingerprints]],
-    * the e16 oracle query) cannot. Per document: an ordered window
-    * frame min over the codegen'd rolling hash, then distinct.
-    * Output: (doc_id, fp) — the fingerprint set. */
-  def winnowingFingerprintSet(docs: DataFrame, window: Int = 4): DataFrame = {
-    val sh = docs.select(col("doc_id"), posexplode(shingleArray).as(Seq("pos", "s")))
-      .withColumn("h", graft.functions.rollingHash64(col("s")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(0, window - 1)
-    sh.withColumn("fp", min(col("h")).over(w))
-      // a window needs `window` hashes: drop the ragged tail frames
-      .withColumn("n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-      .where(col("pos") <= col("n") - window)
-      .select(col("doc_id"), col("fp")).distinct()
-  }
-
   /** Corpus-LM surprisal quality scores — the language-model perplexity
     * filter of CCNet/Gopher-era pipelines (score documents under a
     * model of the corpus; extremes are noise or boilerplate), with the
@@ -425,8 +402,7 @@ object Text {
     * `cl(w1)` and the corpus total N — re-derive from these frames at
     * serving time (one vocab-grain aggregate each), so the artifact
     * stays minimal and every derived number is automatically
-    * consistent with the merged counts. [[bigramModel]]'s broadcast
-    * literal maps are the STREAMING projection of the same counts. */
+    * consistent with the merged counts. */
   final case class BigramCounts(big: DataFrame, uni: DataFrame)
 
   /** One pass over a training split → the [[BigramCounts]] frames. */
@@ -435,7 +411,8 @@ object Text {
     BigramCounts(
       bigramEvents(trainDocs, idCol, textCol)
         .groupBy("w1", "w2").agg(count(lit(1)).as("c2")),
-      unigramCounts(trainDocs, textCol))
+      trainDocs.select(explode(split(col(textCol), " ")).as("w2"))
+        .groupBy("w2").agg(count(lit(1)).as("c1")))
 
   /** [[bigramSurprisal]] over a PREBUILT (possibly delta-maintained)
     * count artifact — the serving path of a perplexity filter whose
@@ -585,24 +562,6 @@ object Text {
     .select(col("doc_id"), col("_t.w1").as("w1"),
       col("_t.w2").as("w2"), col("_t.w3").as("w3"))
 
-  /** Driver-side frozen unigram model for [[surprisalScores]]-style
-    * scoring at INGEST time ([[graft.streaming.Streams
-    * .surprisalQualityFilter]]): (token -> corpus count, total tokens).
-    * Training collects the vocabulary to the driver — bounded by
-    * construction when capped to the `maxVocab` most frequent tokens
-    * (ties to the lexicographically smaller token, so the model is
-    * deterministic); tokens outside the model score as count 1
-    * (maximum surprisal), the standard unknown-token floor. */
-  def unigramModel(docs: DataFrame, maxVocab: Int = 100000,
-      textCol: String = "text"): (Map[String, Long], Long) = {
-    val toks = docs.select(explode(split(col(textCol), " ")).as("tok"))
-    val cnt = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val total = cnt.agg(sum(col("cnt"))).head().getLong(0)
-    val top = cnt.orderBy(desc("cnt"), asc("tok")).limit(maxVocab)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (top, total)
-  }
-
   /** Character-distribution Shannon entropy per document, in exact
     * eighth-bit integers — the char-level gibberish detector
     * (keyboard-mash, base64 blobs and single-char runs sit at the two
@@ -621,8 +580,7 @@ object Text {
     * is built inside the row by the native
     * [[graft.functions.CharEntropy8Expr]] kernel (an ASCII array + a
     * tiny code-point spill map, one O(n) pass), so NOTHING shuffles:
-    * the op scales with the scan like e08/e81, and the same projection
-    * is its own stateless streaming face. (Two rejected cuts, for the
+    * the op scales with the scan like e08/e81. (Two rejected cuts, for the
     * record: an explode/groupBy shuffle — needless for per-row work —
     * and an array-HOF projection whose duplicated lambda subtrees
     * evaluated interpreted, 80 s at sf0.1 vs ~1 s for this kernel.)
@@ -646,9 +604,9 @@ object Text {
     * (an index transform over the token array — no self-join, no
     * window; `sequence(1, 0)` DESCENDS in Spark, so docs with < 2
     * tokens are guarded to an empty array and emit nothing). ONE
-    * definition shared by [[bigramSurprisal]] and [[bigramModel]] —
-    * the frozen-model stream==batch bit-parity law depends on both
-    * sides extracting events identically. */
+    * definition shared by training ([[buildBigramCounts]]) and scoring
+    * ([[bigramSurprisalFrom]]), so both sides extract events
+    * identically. */
   private def bigramEvents(frame: DataFrame, idCol: String,
       textCol: String): DataFrame = frame
     .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("_a"))
@@ -657,13 +615,6 @@ object Text {
         "i -> struct(_a[i-1] AS w1, _a[i] AS w2))"))
       .otherwise(expr("array()"))).as("_p"))
     .select(col("doc_id"), col("_p.w1").as("w1"), col("_p.w2").as("w2"))
-
-  /** Train-split unigram counts `(w2, c1)` — shared by
-    * [[bigramSurprisal]] and [[bigramModel]] for the same parity
-    * reason as [[bigramEvents]]. */
-  private def unigramCounts(frame: DataFrame, textCol: String): DataFrame =
-    frame.select(explode(split(col(textCol), " ")).as("w2"))
-      .groupBy("w2").agg(count(lit(1)).as("c1"))
 
   /** CCNet's head/middle/tail split: every document bucketed by its
     * [[bigramSurprisal]] perplexity WITHIN its language — the actual
@@ -746,49 +697,6 @@ object Text {
       .groupBy(col("g").as(groupCol))
       .agg(max(col("n_g")).as("n_tokens"), max(col("n_types")).as("n_types"),
         sum(col("_term")).as("kl_s8"))
-  }
-
-  /** Driver-side frozen BIGRAM model for streaming
-    * [[graft.streaming.Streams.bigramSurprisalFilter]] — the
-    * [[bigramSurprisal]] arithmetic PRE-DIVIDED into two literal maps
-    * so the stream-side expression is pure lookups + shifts (no
-    * arbitrary-divisor division ever evaluates in the row path):
-    *
-    *  - `pb`: `"w1 w2" -> 3·((c2·S) div cl)` — the λ-weighted bigram
-    *    term, exact Long arithmetic on the driver;
-    *  - `pu`: `w2 -> (c1·S) div N` — the unigram backoff term.
-    *
-    * Both maps are CAPPED to the most frequent entries (ties to the
-    * lexicographically smaller key) — bounded by construction like
-    * [[unigramModel]]; `cl` and `N` come from the FULL uncapped
-    * aggregation, so capping only drops rare entries to the unknown
-    * floor, never skews surviving probabilities. When the caps don't
-    * bind, streaming scores equal [[bigramSurprisal]] bit for bit
-    * (the StreamsSpec law). */
-  def bigramModel(docs: DataFrame, trainFilter: Column,
-      maxBigrams: Int = 200000, maxVocab: Int = 100000,
-      idCol: String = "doc_id",
-      textCol: String = "text"): (Map[String, Long], Map[String, Long]) = {
-    val S = Retrieval.Scale
-    val train = docs.where(trainFilter)
-    val big = bigramEvents(train, idCol, textCol)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    val left = big.groupBy("w1").agg(sum(col("c2")).as("cl"))
-    val pb = big.join(left, "w1")
-      .select(concat_ws(" ", col("w1"), col("w2")).as("k"),
-        expr(s"3 * ((c2 * ${S}L) div cl)").as("v"), col("c2"))
-      .orderBy(desc("c2"), asc("k")).limit(maxBigrams)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val uni = unigramCounts(train, textCol)
-    val totRow = uni.agg(sum(col("c1"))).head()
-    require(!totRow.isNullAt(0), "bigramModel needs a non-empty training split")
-    val nTotal = totRow.getLong(0)
-    val pu = uni
-      .select(col("w2"), expr(s"(c1 * ${S}L) div ${nTotal}L").as("v"),
-        col("c1"))
-      .orderBy(desc("c1"), asc("w2")).limit(maxVocab)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (pb, pu)
   }
 
   /** Fixed-point unit for [[phraseScores]] and [[cooccurrence]]. */
@@ -1011,15 +919,5 @@ object Text {
     }
     (pos +: negs).reduce(_.unionByName(_))
       .select(col("center"), col("other"), col("label"), col("cnt"))
-  }
-
-  /** Word 3-gram shingles of `text` as an ordered array column. */
-  private def shingleArray: Column = {
-    val w = tokens
-    when(size(w) >= 3,
-      transform(sequence(lit(0), size(w) - 3),
-        i => concat_ws(" ",
-          element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3))))
-      .otherwise(array())
   }
 }

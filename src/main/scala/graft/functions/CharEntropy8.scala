@@ -23,10 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * computation), the second an array-HOF projection whose duplicated
   * lambda subtrees evaluated interpreted (measured 80 s at sf0.1).
   * This kernel is one O(n) loop over a stack histogram — it inlines
-  * into whole-stage codegen, never shuffles, and doubles as the
-  * stateless streaming face. ASCII (the overwhelming case) takes a
-  * 128-slot array; anything higher falls into a small open-address map
-  * keyed by code point, so multilingual text stays one pass too.
+  * into whole-stage codegen and never shuffles. ASCII (the overwhelming
+  * case) takes a 128-slot array; anything higher falls into a small
+  * open-address map keyed by code point, so multilingual text stays one
+  * pass too.
   */
 final case class CharEntropy8Expr(child: Expression)
     extends UnaryExpression {

@@ -55,17 +55,4 @@ object Layout {
       .sortWithinPartitions(z)
       .drop(z)
   }
-
-  /** Per-output-file (min, max) spans of two columns — the direct
-    * measure of a layout's skipping power: the average normalized box
-    * area `span_x * span_y / (range_x * range_y)` is the expected
-    * fraction of files a uniform point predicate must read. Computed
-    * over the CURRENT partitioning (call right before `.write`, or on
-    * a re-read frame with one file per partition). */
-  def fileSpans(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    df.withColumn("_f", spark_partition_id())
-      .groupBy("_f")
-      .agg(min(col(xCol)).as("x_min"), max(col(xCol)).as("x_max"),
-        min(col(yCol)).as("y_min"), max(col(yCol)).as("y_max"),
-        count(lit(1)).as("rows"))
 }

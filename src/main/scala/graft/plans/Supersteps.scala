@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * crosses from nanoseconds to MINUTES within ~10 rounds at r >= 3
   * (observed: the q49 incremental-components fold, 3 batches x ~4
   * pointer-jump rounds at r = 4, wedged the bench driver for >15 min
-  * inside `SizeInBytesOnlyStatsPlanVisitor` Toom-Cook multiplies). An
-  * unbounded streaming fold (`Streams.ComponentsMaintainer`) makes the
-  * cut mandatory rather than cosmetic: digits would otherwise grow
-  * with stream length.
+  * inside `SizeInBytesOnlyStatsPlanVisitor` Toom-Cook multiplies). That
+  * fold makes the cut mandatory rather than cosmetic: its state is
+  * carried across batches, so without the cut the digits would grow
+  * with the number of batches.
   *
   * [[cut]] checkpoints and then re-wraps the persisted RDD through the
   * public `createDataFrame(RDD[Row], schema)` entry, which builds a

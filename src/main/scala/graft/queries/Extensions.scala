@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Glove, Pca, Preference, Sampling, Similarity, Sketches, Text}
 import graft.operators.{AsOfJoin, RangeJoin}
 import graft.plans.SessionMemo
-import graft.streaming.Streams
 
 /** Extension queries (SURVEY.md §2.3 E1–E4): the LLM-training-pipeline
   * operators layered over the `documents`/`embeddings`/`events` fixture
@@ -46,7 +45,7 @@ object Extensions {
     * store TIMESTAMP(MICROS) without a zone, which Spark infers as
     * TIMESTAMP_NTZ — cast to TIMESTAMP (session tz is UTC everywhere, so
     * the cast is value-preserving and keeps `.as[java.sql.Timestamp]`
-    * encoders and watermark arithmetic working unchanged). */
+    * encoders and event-time windows working unchanged). */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = graft.sources.Tables.read(s, s"$dir/events.parquet")
@@ -105,16 +104,37 @@ object Extensions {
   def e11_fingerprint(s: SparkSession, dir: String): DataFrame =
     Text.fingerprints(docs(s, dir)).orderBy("doc_id")
 
-  // ---- E4: event-stream windows (batch twins of the streaming ops) ----
+  // ---- E4: event-time windows over the events table ----
 
   def e12_window_tumbling(s: SparkSession, dir: String): DataFrame =
-    Streams.tumblingCounts(events(s, dir)).orderBy("window_start", "event_type")
+    events(s, dir).groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        min(col("value")).as("min_value"),
+        max(col("value")).as("max_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("cnt"), col("min_value"), col("max_value"))
+      .orderBy("window_start", "event_type")
 
+  /** e13: one-hour windows sliding every 15 minutes, counted per event
+    * type. Windows align to the epoch, matching the oracle's
+    * `time_bucket`. */
   def e13_window_sliding(s: SparkSession, dir: String): DataFrame =
-    Streams.slidingCounts(events(s, dir)).orderBy("window_start", "event_type")
+    events(s, dir)
+      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("w.start").as("window_start"), col("event_type"), col("cnt"))
+      .orderBy("window_start", "event_type")
 
+  /** e14: session windows per user — events within 30 minutes of each
+    * other merge into one session, which ends 30 minutes after its last
+    * event. */
   def e14_sessionize(s: SparkSession, dir: String): DataFrame =
-    Streams.sessionize(events(s, dir)).orderBy("user_id", "session_start")
+    events(s, dir)
+      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("session_start"),
+        col("w.end").as("session_end"), col("n_events"))
+      .orderBy("user_id", "session_start")
 
   def e15_bpe_tokens(s: SparkSession, dir: String): DataFrame =
     Text.bpeTokenCounts(docs(s, dir)).orderBy("doc_id")
@@ -739,8 +759,7 @@ object Extensions {
     * ONCE (a session-lifetime memo standing in for the persisted index
     * table) and a new shard dedups against it by band-probe join +
     * exact verify of only the candidate corpus docs; no corpus
-    * signature or shingle is ever recomputed. The streaming twin is
-    * `Streams.streamingNearDupCandidates`; the restriction law vs
+    * signature or shingle is ever recomputed. The restriction law vs
     * [[graft.ext.Dedup.fuzzyJoin]] is pinned in DedupSpec. */
   def e97_index_dedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
@@ -1279,9 +1298,8 @@ object Extensions {
   /** e120: delta-driven bigram-LM maintenance
     * ([[graft.ext.Snapshot.refreshBigramCounts]]) — the incremental
     * seam reaching the perplexity-filter model: the frozen train-split
-    * count frames (the artifact e75's scorer and the streaming
-    * [[graft.ext.Text.bigramModel]] maps derive from) absorb the
-    * bounded delta restricted to the train split, and e75's scoring
+    * count frames (the artifact e75's scorer derives from) absorb
+    * the bounded delta restricted to the train split, and e75's scoring
     * runs over the NEWER corpus under the maintained model. Oracle =
     * e75's full retrain+rescore replay over the newer snapshot, so
     * the hash match proves model maintenance exact through scoring.
@@ -1731,15 +1749,15 @@ object Extensions {
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** e33: stream-static enrichment, batch twin — events enriched with
-    * the customer dimension (broadcast left join; the streaming form is
-    * the IDENTICAL function over a readStream frame, proved in
-    * StreamsSpec) and aggregated per (segment, event_type). Decimal
-    * accumulation + final double cast on both sides (the q15 rule). */
+  /** e33: fact-dimension enrichment — events left-joined to the
+    * broadcast customer dimension (events with no customer row pass
+    * through with a null segment) and aggregated per (segment,
+    * event_type). Decimal accumulation + final double cast on both
+    * sides (the q15 rule). */
   def e33_stream_enrich(s: SparkSession, dir: String): DataFrame = {
     val dim = graft.sources.Tables.read(s, s"$dir/customer.parquet")
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    Streams.enrichWithDim(events(s, dir), dim, Seq("user_id"))
+    events(s, dir).join(broadcast(dim), Seq("user_id"), "left")
       .groupBy("segment", "event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))

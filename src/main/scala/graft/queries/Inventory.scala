@@ -841,9 +841,7 @@ object Inventory {
     * state with one join — per-batch work sized by the batch, never
     * the accumulated graph). Sharing q42's oracle is the point: the
     * incremental fold must land on the whole-graph fixpoint
-    * regardless of arrival order. The streaming form is the identical
-    * merge under `foreachBatch` ([[graft.streaming.Streams]]), proved
-    * equal in StreamsSpec. */
+    * regardless of arrival order. */
   def q49_snb_components_inc(s: SparkSession, dir: String): DataFrame = {
     val Gp = GraphLoader.snb(s, dir)
     val knows = Gp.edgeFrames.collect {

@@ -444,52 +444,6 @@ object GraphLoader {
     }
   }
 
-  /** Persist with bucketing for co-located hop joins: each edge frame is
-    * written `bucketBy(n, _src)` (sorted within buckets) and each vertex
-    * frame `bucketBy(n, _vid)` as catalog tables. Two frames bucketed on
-    * the join key with the same bucket count join WITHOUT a shuffle —
-    * the structural answer to "repeated hop joins re-shuffle the edge
-    * table every query" at 100 TB (SURVEY §4's bucketing note). Table
-    * names: `<prefix>_v_<label>` / `<prefix>_e_<label>_<src>_<dst>`.
-    */
-  def persistBucketed(g: PropertyGraph, path: String, prefix: String,
-      buckets: Int = 32): Unit = {
-    g.vertexFrames.foreach { case (label, df) =>
-      df.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, GC.Id).sortBy(GC.Id)
-        .option("path", s"$path/v_$label")
-        .saveAsTable(s"${prefix}_v_$label")
-    }
-    g.edgeFrames.foreach { case (spec, df) =>
-      df.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, GC.Src).sortBy(GC.Src)
-        .option("path", s"$path/e_${spec.label}_${spec.srcLabel}_${spec.dstLabel}")
-        .saveAsTable(s"${prefix}_e_${spec.label}_${spec.srcLabel}_${spec.dstLabel}")
-    }
-    // Graph variables ride the catalog (no directory to sidecar into).
-    import g.spark.implicits._
-    g.variables.toMap.toSeq.toDF("key", "value")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$path/variables")
-      .saveAsTable(s"${prefix}_variables")
-  }
-
-  /** Re-open a bucketed graph from the catalog. */
-  def openBucketed(spark: SparkSession, g: PropertyGraph, prefix: String): PropertyGraph = {
-    val vertices = g.vertexFrames.keys.map { label =>
-      label -> spark.table(s"${prefix}_v_$label")
-    }.toMap
-    val edges = g.edgeFrames.keys.map { spec =>
-      spec -> spark.table(s"${prefix}_e_${spec.label}_${spec.srcLabel}_${spec.dstLabel}")
-    }.toMap
-    val out = new PropertyGraph(spark, vertices, edges)
-    if (spark.catalog.tableExists(s"${prefix}_variables"))
-      spark.table(s"${prefix}_variables").collect().foreach { r =>
-        out.variables.set(r.getString(0), r.getString(1))
-      }
-    out
-  }
-
   /** Persist as CSV (the reference bulk-loads from LDBC CSVs,
     * README.md:83-117) with a DDL schema sidecar per frame — CSV carries
     * no types, so the sidecar makes the round trip lossless. */

@@ -685,4 +685,40 @@ class IterativeSpec extends SparkSpec {
     assert(canon(capped) ==
       canon(Iterative.incrementalComponents(verts, batches)))
   }
+
+  test("incrementalComponents: any split == one-shot, on both merge paths") {
+    // two triangles bridged by (4,5), vertex 9 isolated: components
+    // {1,2,3,4,5,6,7} (rep 1) and {9}
+    val edges = Seq((2L, 3L), (1L, 2L), (1L, 3L), (5L, 6L), (5L, 7L),
+      (6L, 7L), (4L, 5L), (1L, 4L))
+    val verts = (1L to 7L).toDF("id").unionByName(Seq(9L).toDF("id"))
+    def assignment(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.as[(Long, Long)].collect().toMap
+    // one-shot reference: everything in a single batch
+    val oneShot = assignment(
+      Iterative.incrementalComponents(verts, Seq(edges.toDF("src", "dst"))))
+    assert(oneShot == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      5L -> 1L, 6L -> 1L, 7L -> 1L, 9L -> 9L))
+    // an adversarial split whose middle batch arrives as disconnected
+    // fragments that only the LAST batch bridges
+    val splits = Seq(edges.take(3), edges.slice(3, 6), edges.drop(6))
+      .map(_.toDF("src", "dst"))
+    assert(assignment(Iterative.incrementalComponents(verts, splits)) == oneShot)
+    // smallGraphRows = 0 folds through mergeComponentsBatch
+    assert(assignment(Iterative.incrementalComponents(verts, splits,
+      smallGraphRows = 0L)) == oneShot)
+    // the two per-batch merge paths must agree: the driver union-find
+    // (every batch here is under the size bound) vs the distributed
+    // min-label fixpoint, forced via smallBatchEdges = 0 — the
+    // 100-TB path must not rot just because fixtures never reach it
+    val distFolded = assignment(splits.foldLeft(
+      verts.select(col("id").cast("bigint").as("_v"))
+        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()) {
+      (st, b) => Iterative.mergeComponentsBatch(st,
+        b.select(col("src").cast("bigint").as("_s"),
+          col("dst").cast("bigint").as("_d")),
+        smallBatchEdges = 0L)
+    }.select(col("_v").as("id"), col("_lbl").as("component")))
+    assert(distFolded == oneShot)
+  }
 }

@@ -240,34 +240,6 @@ class DedupSpec extends SparkSpec {
     assert(all == Set(3L, 4L, 5L))
   }
 
-  test("stop-shingle DF filter removes boilerplate candidates, keeps real near-dups") {
-    // every doc carries the same LONG footer (it dominates the shingle
-    // set, as site boilerplate does); docs 1/2 are also REAL near-dups
-    val footer = "this content is provided as is without warranty of any kind see terms"
-    val boiler = Seq(
-      (1L, s"alpha beta gamma delta epsilon zeta $footer"),
-      (2L, s"alpha beta gamma delta epsilon eta $footer"),
-      (3L, s"totally different words $footer"),
-      (4L, s"nothing shared here $footer"))
-      .toDF("doc_id", "text")
-    val unfiltered = Dedup.minhashCandidatePairs(boiler)
-      .as[(Long, Long)].collect().toSet
-    // the footer makes unrelated docs collide
-    assume(unfiltered.exists(p => p._1 >= 3L || p._2 >= 3L))
-    val filtered = Dedup.minhashCandidatePairsFiltered(boiler, maxShingleDf = 3)
-      .as[(Long, Long)].collect().toSet
-    assert(filtered.contains((1L, 2L))) // the real near-dup survives
-    assert(!filtered.exists(p => p._1 >= 3L || p._2 >= 3L)) // boilerplate pairs gone
-    // dropStopShingles removes exactly the grams with df > maxDf
-    val sh = Dedup.shingles(boiler)
-    val kept = Dedup.dropStopShingles(sh, maxDf = 3)
-    val df = sh.distinct().groupBy("s").count()
-      .as[(String, Long)].collect().toMap
-    val removed = sh.select("s").except(kept.select("s")).as[String].collect().toSet
-    assert(removed.nonEmpty)
-    assert(removed == df.filter(_._2 > 3).keySet)
-  }
-
   test("dedupClustersGraphX equals the label-propagation loop") {
     val viaLoop = Dedup.dedupClusters(docs).as[(Long, Long)].collect().toMap
     val viaGx = Dedup.dedupClustersGraphX(docs).as[(Long, Long)].collect().toMap

@@ -25,16 +25,6 @@ class MultimodalSpec extends SparkSpec {
     assert(f1.forall(f => f.width >= 64 && f.height >= 64 && f.byte_len > 0))
   }
 
-  test("sampleFrames emits n rows per video with monotone offsets") {
-    val frames = Multimodal.sampleFrames(media, 4)
-    val byId = frames.collect().groupBy(_.getLong(0))
-    assert(byId.values.forall(_.length == 4))
-    byId.values.foreach { fs =>
-      val offs = fs.sortBy(_.getInt(1)).map(_.getInt(2))
-      assert(offs.zip(offs.tail).forall { case (a, b) => a <= b })
-    }
-  }
-
   test("resize rewrites payloads proportionally to the pixel-count change") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(20)
     val media = Multimodal.mediaFromDocuments(docs)

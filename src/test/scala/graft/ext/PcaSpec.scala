@@ -158,36 +158,6 @@ class PcaSpec extends SparkSpec {
     }
   }
 
-  test("pc2Direction: deflation finds the planted second axis, near-orthogonal to PC1") {
-    val rows = planted2(400, 16, seed = 41)
-    val (n, s, g) = Pca.gramPass(df(rows), dims = 16)
-    val v1 = Pca.pc1Direction(n, s, g)
-    val v2 = Pca.pc2Direction(n, s, g, v1)
-    // near-orthogonality (v1 is fixed-point approximate, so not exact)
-    val c12 = cosine(v1.map(_.toDouble), v2.map(_.toDouble))
-    assert(math.abs(c12) < 0.02, s"pc2 not orthogonal to pc1: $c12")
-    // double reference: power-iterate the deflated double covariance
-    val q = rows.map(_._2.map(x => math.floor(x.toDouble * Pca.QScale)))
-    val nn = q.length.toDouble
-    val sD = Array.tabulate(16)(d => q.map(_(d)).sum)
-    val c = Array.tabulate(16, 16) { (i, j) =>
-      nn * q.map(v => v(i) * v(j)).sum - sD(i) * sD(j)
-    }
-    val r1 = referencePc1(rows, 16)
-    val vv = r1.map(x => x * x).sum
-    val lam = (for (i <- 0 until 16; j <- 0 until 16)
-      yield r1(i) * c(i)(j) * r1(j)).sum / vv
-    val d2 = Array.tabulate(16, 16)((i, j) => c(i)(j) - lam * r1(i) * r1(j) / vv)
-    var w = Array.fill(16)(1.0)
-    (0 until 300).foreach { _ =>
-      val u = Array.tabulate(16)(i => (0 until 16).map(j => d2(i)(j) * w(j)).sum)
-      val m = u.map(math.abs).max.max(1e-300)
-      w = u.map(_ / m)
-    }
-    assert(math.abs(cosine(v2.map(_.toDouble), w)) >= 0.995,
-      s"pc2 diverges from the double reference")
-  }
-
   test("pcaMap: k exact coordinates per vector, deterministic") {
     val rows = planted2(150, 16, seed = 43)
     val a = Pca.pcaMap(df(rows), dims = 16).orderBy("vec_id").collect().toSeq

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, explode, lit, size, split}
 
 import graft.SparkSpec
@@ -97,23 +98,6 @@ class TextSpec extends SparkSpec {
     // doc 3 text < 64 chars: prefix fp == full fp
     val r3 = f.find(_.getLong(0) == 3L).get
     assert(r3.getString(1) == r3.getString(2))
-  }
-
-  test("winnowing guarantees a shared fingerprint for long shared runs") {
-    val shared = (1 to 12).map(i => s"tok$i").mkString(" ")
-    val wdocs = Seq(
-      (1L, s"alpha beta $shared gamma"),
-      (2L, s"$shared delta epsilon zeta"),
-      (3L, "completely different words with no overlap at all here")
-    ).toDF("doc_id", "text")
-    def run() = Text.winnowingFingerprintSet(wdocs, window = 4)
-      .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val fps = run()
-    // 12 shared tokens = 10 shared shingles, longer than window+2: the
-    // winnowing guarantee forces a common fingerprint for docs 1 and 2
-    assert((fps(1L) & fps(2L)).nonEmpty)
-    assert((fps(1L) & fps(3L)).isEmpty)
-    assert(run() == fps) // deterministic
   }
 
   test("chunkTokens: stride==size reconstructs, overlap covers every window") {
@@ -435,5 +419,57 @@ class TextSpec extends SparkSpec {
       val n = t.codePoints().count()
       assert(got(i.toLong) == ((n, ref(t))), s"case $i: '${t.take(30)}...'")
     }
+  }
+
+  test("gopher rule gate runs stateless at ingest: stream == batch, full stats") {
+    // The rule gate needs NO frozen model — it is row-local projection
+    // arithmetic, so the batch operator runs unchanged over a stream
+    // (no watermark, no state store, no shuffle). This law pins that
+    // property: the same Text.gopherRules call over a MemoryStream
+    // emits bit-identical stats and the identical keep set under any
+    // trigger split.
+    implicit val sqlCtx = spark.sqlContext
+    val train = spark.read.parquet(s"$sf0001/documents.parquet")
+    val batch = Text.gopherRules(train)
+      .select("doc_id", "mean_word_len", "stop_hits", "keep")
+      .as[(Long, Double, Int, Int)].collect().toSet
+    val keptBatch = batch.filter(_._4 == 1)
+    assert(keptBatch.nonEmpty && keptBatch.size < batch.size) // real split
+    val mem = MemoryStream[(Long, String)]
+    val q = Text.gopherRules(mem.toDF().toDF("doc_id", "text"))
+      .select("doc_id", "mean_word_len", "stop_hits", "keep")
+      .writeStream.format("memory").queryName("gopher_gate").outputMode("append")
+      .start()
+    try {
+      val rows = train.select("doc_id", "text").as[(Long, String)].collect()
+      rows.grouped(rows.length / 3 + 1).foreach { b =>
+        mem.addData(b.toSeq: _*); q.processAllAvailable()
+      }
+      val got = spark.table("gopher_gate")
+        .as[(Long, Double, Int, Int)].collect().toSet
+      assert(got == batch)
+    } finally q.stop()
+  }
+
+  test("char-entropy scorer runs stateless at ingest: stream == batch") {
+    // charEntropy is ONE row-local projection (the gopher class): the
+    // batch operator runs unchanged over a stream — no state, no shuffle.
+    implicit val sqlCtx = spark.sqlContext
+    val train = spark.read.parquet(s"$sf0001/documents.parquet")
+    val batch = Text.charEntropy(train)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(batch.nonEmpty)
+    val mem = MemoryStream[(Long, String)]
+    val q = Text.charEntropy(mem.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("char_entropy").outputMode("append")
+      .start()
+    try {
+      val rows = train.select("doc_id", "text").as[(Long, String)].collect()
+      rows.grouped(rows.length / 3 + 1).foreach { b =>
+        mem.addData(b.toSeq: _*); q.processAllAvailable()
+      }
+      assert(spark.table("char_entropy")
+        .as[(Long, Long, Long)].collect().toSet == batch)
+    } finally q.stop()
   }
 }

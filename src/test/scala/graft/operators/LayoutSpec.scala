@@ -8,6 +8,15 @@ import graft.functions.InterleaveBitsExpr
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Per-partition (min, max) spans of two columns — one partition is
+    * one output file, so the spans measure a layout's skipping power. */
+  private def fileSpans(df: org.apache.spark.sql.DataFrame, xCol: String,
+      yCol: String): org.apache.spark.sql.DataFrame =
+    df.withColumn("_f", spark_partition_id())
+      .groupBy("_f")
+      .agg(min(col(xCol)).as("x_min"), max(col(xCol)).as("x_max"),
+        min(col(yCol)).as("y_min"), max(col(yCol)).as("y_max"))
+
   test("interleave kernel matches a bit-by-bit reference on edge and random values") {
     def reference(x: Int, y: Int): Long = {
       val ux = (x ^ Int.MinValue).toLong & 0xffffffffL
@@ -54,7 +63,7 @@ class LayoutSpec extends SparkSpec {
     // box AREA is ~1/files for any balanced layout — the z-order win is
     // that NEITHER dimension's span stays at 1.0.
     def meanSpans(df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val spans = Layout.fileSpans(df, "x", "y")
+      val spans = fileSpans(df, "x", "y")
         .select(col("x_max") - col("x_min"), col("y_max") - col("y_min"))
         .as[(Int, Int)].collect()
       val (rx, ry) = (
